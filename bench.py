@@ -881,6 +881,7 @@ def _streaming_section(spark, registry, sf_dir: str) -> dict:
             spark,
             source_size(os.path.join(sf_dir, "events.parquet")),
             "benchtopk",
+            floor=8,
         ) as ckpt:
             q = (
                 topk_per_key(src, k=3)
@@ -1011,19 +1012,18 @@ def _graph_section(spark, registry, sf_dir: str) -> dict:
 
 
 def _wire_codecs_section(sf_dir: str) -> dict:
-    """Throughput of every LIVE wire codec (r10: all six reference SDK
-    enums carry traffic) over a real payload — 1 MB of documents JSON.
-    Records MB/s and ratio per codec, plus which zstd backend the
-    probe selected (libzstd via pyarrow here; the pure RFC 8878 codec
-    where no binding exists — its number is reported separately as
-    the portable floor)."""
+    """Throughput of the deflate, LZ4, ZSTD and Brotli wire codecs
+    through the native protocol's envelope (wrap_payload/unwrap_payload)
+    over a real payload — 1 MB of documents JSON. Records MB/s and ratio
+    per codec, plus the codec compress=auto negotiates."""
     import duckdb
 
-    from ranger_spark.sources import zstd_frame
-    from ranger_spark.sources.lz4_block import compress_block, decompress_block
     from ranger_spark.sources.native_server import (
+        COMPRESSION_BROTLI,
+        COMPRESSION_DEFLATE,
+        COMPRESSION_LZ4,
         COMPRESSION_ZSTD,
-        _zstd_binding,
+        NativeClient,
         unwrap_payload,
         wrap_payload,
     )
@@ -1039,45 +1039,28 @@ def _wire_codecs_section(sf_dir: str) -> dict:
     def timed(fn, reps=3):
         best = float("inf")
         for _ in range(reps):
-            t0 = time.time()
+            t0 = time.perf_counter()
             fn()
-            best = min(best, time.time() - t0)
+            best = min(best, time.perf_counter() - t0)
         return best
 
-    import zlib
-
-    codecs = {
-        "deflate": (lambda: zlib.compress(payload, 6),
-                    lambda z: zlib.decompress(z)),
-        "lz4": (lambda: compress_block(payload),
-                lambda z: decompress_block(z, max_out=len(payload))),
-        "zstd_wire": (lambda: _zstd_binding()[0](payload),
-                      lambda z: _zstd_binding()[1](z, len(payload))),
-        "zstd_pure": (lambda: zstd_frame.compress(payload),
-                      lambda z: zstd_frame.decompress(z, len(payload))),
-    }
-    for name, (comp, dec) in codecs.items():
-        z = comp()
+    codecs = {"deflate": COMPRESSION_DEFLATE, "lz4": COMPRESSION_LZ4,
+              "zstd": COMPRESSION_ZSTD, "brotli": COMPRESSION_BROTLI}
+    ok = True
+    for name, codec in codecs.items():
+        env = wrap_payload(codec, payload)
+        ok = ok and unwrap_payload(env) == payload
+        t_wrap = timed(lambda: wrap_payload(codec, payload))
+        t_unwrap = timed(lambda: unwrap_payload(env))
         out[name] = {
-            "ratio": round(len(z) / len(payload), 3),
-            "compress_mb_s": round(len(payload) / 1e6 / timed(comp), 1),
-            "decompress_mb_s": round(len(payload) / 1e6 / timed(lambda: dec(z)), 1),
+            "ratio": round(len(env) / len(payload), 3),
+            "compress_mb_s": round(len(payload) / 1e6 / t_wrap, 1),
+            "decompress_mb_s": round(len(payload) / 1e6 / t_unwrap, 1),
         }
-    env = wrap_payload(COMPRESSION_ZSTD, payload)
-    out["envelope_round_trip_ok"] = unwrap_payload(env) == payload
-    # compress=auto negotiation record (VERDICT r10 item 8): which codec
-    # the SDK picks by default on this box, and why
-    from ranger_spark.sources.native_server import (
-        preferred_codec,
-        zstd_binding_kind,
-    )
-
-    codec_names = {3: "zstd", 5: "deflate"}
+    out["envelope_round_trip_ok"] = ok
+    auto = NativeClient._CODEC_NAMES["auto"]
     out["negotiated_default"] = {
-        "codec": codec_names.get(preferred_codec(), preferred_codec()),
-        "zstd_backend": zstd_binding_kind(),
-        "policy": "auto=zstd when a C binding exists, else C-speed "
-                  "deflate; pure-Python encoders are never the default",
+        "codec": next(n for n, c in codecs.items() if c == auto),
     }
     return out
 

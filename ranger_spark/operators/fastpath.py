@@ -6,15 +6,15 @@ milliseconds — a scan+agg over a few MB runs 5-15× slower than a
 single-node engine purely on fixed overhead (r6 verdict: date_extract
 13.1×, agg_minmax_countd 6.4× vs DuckDB, both pure scan+agg). The fix
 mirrors the ANN kernel's auto-selection (operators/similarity.py): when
-the *pruned* input is small by Catalyst's own estimate, pull it to the
-driver in ONE Arrow job (``df.toArrow()`` — no Python-row
-serialization), aggregate with pandas, and re-emit the handful of
-result rows as a SQL VALUES LocalRelation (~10 ms, no job at collect).
+the local parquet input is small, read its pruned columns on the driver
+with pyarrow (no Spark job), aggregate there, and re-emit the handful
+of result rows as a SQL VALUES LocalRelation (~10 ms, no job at
+collect).
 
-At scale the guard disengages: the estimate is proportional to file
-bytes × column fraction, so a 100 TB table blows past the threshold and
-the query keeps its distributed hash-aggregate plan — the fast path is
-a small-input regime switch, never a semantics change. Callers MUST
+At scale the guard disengages: the gate is file bytes (or the footer's
+bytes of the read columns), so a 100 TB table blows past the threshold
+and the query keeps its distributed hash-aggregate plan — the fast path
+is a small-input regime switch, never a semantics change. Callers MUST
 apply any result rounding in Spark SQL on the emitted relation (not in
 pandas) so both regimes round with the identical function.
 """
@@ -144,11 +144,11 @@ def local_parquet_agg(
     max_bytes: int | None = None,
     gate: str = "file",
 ) -> DataFrame | None:
-    """Zero-job variant of :func:`arrow_local_agg` for single-table
-    scans: read the pruned columns straight off the local parquet file
-    with pyarrow (~10 ms for a few MB — no Spark job at all, which is
-    the whole cost of a tiny scan+agg), aggregate on the driver, emit a
-    VALUES relation. By default the WHOLE-FILE size gates engagement;
+    """Zero-job fast path for single-table scans: read the pruned
+    columns straight off the local parquet file with pyarrow (~10 ms
+    for a few MB — no Spark job at all, which is the whole cost of a
+    tiny scan+agg), aggregate on the driver, emit a VALUES relation.
+    By default the WHOLE-FILE size gates engagement;
     ``gate="pruned"`` gates on the footer-exact bytes of just the read
     columns instead — for queries whose driver compute is KNOWN cheap
     (few narrow columns, low-cardinality groups), so a wide table whose
@@ -212,23 +212,3 @@ def _cached_pruned_scan(path: str, columns: list[str]):
         _SCAN_CACHE[key] = tbl
     return tbl
 
-
-def arrow_local_agg(
-    src: DataFrame,
-    compute: Callable[["object"], list[tuple]],
-    select_exprs: list[str],
-    max_bytes: int | None = None,
-) -> DataFrame | None:
-    """If ``src``'s pruned Catalyst estimate is under ``max_bytes``,
-    pull it via one Arrow job, run ``compute(pyarrow.Table) -> rows``
-    on the driver, and emit the rows as a VALUES relation shaped by
-    ``select_exprs``. Returns None when the input is too big — caller
-    falls back to its distributed plan."""
-    if max_bytes is None:
-        max_bytes = ARROW_LOCAL_MAX_BYTES
-    if plan_size_bytes(src) > max_bytes:
-        return None
-    rows = compute(src.toArrow())
-    if not rows:
-        return None  # empty VALUES is a syntax error; distributed handles it
-    return values_relation(src.sparkSession, rows, select_exprs)

@@ -60,11 +60,15 @@ here to one INSERT statement per frame.
 
 from __future__ import annotations
 
+import functools
 import re
 import socket
 import struct
 import threading
 import time
+import zlib
+
+import pyarrow as pa
 
 from ranger_spark.engine import RESULT_CAP, Engine
 
@@ -92,16 +96,10 @@ INSERT_CHUNK_ROWS = 10_000
 # wire compression codecs — numbering matches the reference SDK enum
 # exactly (pkg/sdk/client.go:51-58: None=0, LZ4=1, LZ4HC=2, ZSTD=3,
 # GZIP=4, Deflate=5, Brotli=6) so a reference client's requested codec
-# byte maps to the same meaning here. Deflate (zlib) rides the stdlib;
-# LZ4/LZ4HC are live via the pure-Python public-spec block codec
-# (sources/lz4_block.py — where the reference links the lz4 C library),
-# and ZSTD (r10) via the pure-Python RFC 8878 frame codec
-# (sources/zstd_frame.py) — a real binding, when present, is preferred
-# by the probe; the pure codec is the always-available fallback, so
-# enum 3 carries real traffic either way. Brotli remains
-# capability-gated exactly like the engine's brotli storage codec: a
-# client requesting it gets the typed capability rejection rather than
-# a silently misdecoded stream.
+# byte maps to the same meaning here. GZIP and Deflate ride stdlib zlib;
+# LZ4, LZ4HC, ZSTD and Brotli ride pyarrow's bundled C codecs (the
+# reference links the lz4 and zstd C libraries). All seven are always
+# available; a hello asking for any other byte gets the typed rejection.
 COMPRESSION_NONE = 0
 COMPRESSION_LZ4 = 1
 COMPRESSION_LZ4HC = 2
@@ -111,164 +109,85 @@ COMPRESSION_DEFLATE = 5
 COMPRESSION_BROTLI = 6
 # Back-compat alias: earlier rounds exposed the zlib codec under this name.
 COMPRESSION_ZLIB = COMPRESSION_DEFLATE
-_BUILTIN_CODECS = frozenset({
-    COMPRESSION_NONE,
-    COMPRESSION_LZ4,
-    COMPRESSION_LZ4HC,
-    COMPRESSION_GZIP,
-    COMPRESSION_DEFLATE,
-})
 _COMPRESS_MIN_BYTES = 64  # tiny frames aren't worth a deflate round trip
 
 
-def zstd_binding_kind() -> str:
-    """Which zstd implementation ``_zstd_binding`` returns: ``stdlib``
-    (compression.zstd, 3.14+) → ``zstandard`` → ``pyarrow`` (bundled
-    libzstd) → ``pure`` (the RFC 8878 Python codec). Derived from the
-    SAME probe (``_zstd_binding_tagged``), so the kind can never drift
-    from the codec actually used on the wire. Everything but ``pure``
-    is C speed."""
-    return _zstd_binding_tagged()[0]
+def _zlib_codec(wbits: int):
+    """(compress, decompress) over one zlib container: wbits 31 is gzip
+    (no gzip-module timestamp nondeterminism), MAX_WBITS is deflate."""
+
+    def compress(payload: bytes) -> bytes:
+        co = zlib.compressobj(6, zlib.DEFLATED, wbits)
+        return co.compress(payload) + co.flush()
+
+    def decompress(body: bytes, raw_len: int) -> bytes:
+        dobj = zlib.decompressobj(wbits)
+        # max_length=0 means UNLIMITED to zlib, so a declared raw_len of 0
+        # must not be passed through — inflate at most 1 byte and require
+        # the stream to produce nothing.
+        out = dobj.decompress(body, raw_len if raw_len > 0 else 1)
+        if raw_len == 0 and out:
+            raise ValueError("decompressed length exceeds declared 0")
+        if dobj.unconsumed_tail and dobj.decompress(dobj.unconsumed_tail, 1):
+            raise ValueError(f"decompressed length exceeds declared {raw_len}")
+        return out
+
+    return compress, decompress
 
 
-def preferred_codec() -> int:
-    """The codec the SDK negotiates under ``compress=auto`` (VERDICT r10
-    item 8): zstd whenever a C-speed binding exists (334 MB/s via
-    libzstd on this box), else stdlib deflate (zlib's C hot loop,
-    ~100 MB/s) — never the pure-Python lz4/zstd encoders (~3 MB/s),
-    which are correctness/interop paths, not wire defaults. Explicit
-    ``compress=<codec>`` always wins; this only decides ``auto``."""
-    if zstd_binding_kind() != "pure":
-        return COMPRESSION_ZSTD
-    return COMPRESSION_DEFLATE
+def _arrow_stream_decompress(name: str):
+    """Decoder through pyarrow's streaming reader. Reading raw_len + 1
+    bytes caps the output during inflation and shows an under-declared
+    length. The one-shot ``Codec.decompress`` is not used: for brotli it
+    pads a stream shorter than the declared length up to that length."""
+
+    def decompress(body: bytes, raw_len: int) -> bytes:
+        stream = pa.CompressedInputStream(pa.BufferReader(body), name)
+        return stream.read(raw_len + 1)
+
+    return decompress
 
 
-def _zstd_binding():
-    """(compress, decompress_with_cap) of the selected zstd
-    implementation — the codec half of ``_zstd_binding_tagged``."""
-    return _zstd_binding_tagged()[1:]
+_LZ4 = pa.Codec("lz4_raw")
 
 
-def _zstd_binding_tagged():
-    """THE zstd probe (single source of truth — ``_zstd_binding`` and
-    ``zstd_binding_kind``/``preferred_codec`` all derive from it, so
-    negotiation can never advertise a speed the wire path won't use):
-    stdlib ``compression.zstd`` (Python 3.14+) → ``zstandard`` →
-    pyarrow's bundled libzstd → the pure-Python RFC 8878 codec. Returns
-    (kind, compress, decompress_with_cap)
-    (pkg/sdk/client.go:51-58 parity, VERDICT r7 item 8 / r10 item 8)."""
-    try:
-        from compression import zstd as _z  # Python 3.14+
-
-        def _d_std(b: bytes, cap: int) -> bytes:
-            # enforce the declared-length cap DURING inflation (the
-            # unwrap_payload bomb contract): stream through the
-            # incremental decompressor with max_length
-            d = _z.ZstdDecompressor()
-            out = d.decompress(b, max_length=max(cap, 1))
-            if not d.eof and d.decompress(b"", max_length=1):
-                raise ValueError("decompressed length exceeds declared cap")
-            return out
-
-        return ("stdlib", lambda b: _z.compress(b, 3), _d_std)
-    except ImportError:
-        pass
-    try:
-        import zstandard as _z
-
-        return (
-            "zstandard",
-            lambda b: _z.ZstdCompressor(level=3).compress(b),
-            # max_output_size enforces the bomb cap DURING decode
-            lambda b, cap: _z.ZstdDecompressor().decompress(
-                b, max_output_size=max(cap, 1)
-            ),
-        )
-    except ImportError:
-        pass
-    try:
-        # pyarrow ships libzstd (for parquet) — real C zstd, one-shot
-        # API; the declared length IS the allocation bound, so the
-        # bomb contract holds (raw_len is pre-capped by MAX_FRAME)
-        import pyarrow as _pa
-
-        codec = _pa.Codec("zstd")
-
-        def _d_pa(b: bytes, cap: int) -> bytes:
-            try:
-                return bytes(codec.decompress(b, decompressed_size=max(cap, 1)))
-            except Exception as e:
-                raise ValueError(f"zstd decode failed: {e}") from e
-
-        return ("pyarrow", lambda b: bytes(codec.compress(b)), _d_pa)
-    except Exception:
-        pass
-    # always-available fallback: the pure-Python RFC 8878 codec
-    # (sources/zstd_frame.py, libzstd-interop-verified) — cap enforced
-    # DURING decode there too
-    from ranger_spark.sources import zstd_frame as _zf
-
-    return (
-        "pure", _zf.compress, lambda b, cap: _zf.decompress(b, max(cap, 1))
-    )
-
-
-def _brotli_binding():
-    """Runtime probe for a brotli binding: brotli / brotlicffi first,
-    then pyarrow's bundled brotli (shipped for parquet) — RFC 7932
-    streams either way, so enum 6 is live wherever ANY of them exists
-    and typed-gated elsewhere."""
-    for mod in ("brotli", "brotlicffi"):
+def _lz4_decompress(body: bytes, raw_len: int) -> bytes:
+    """pyarrow has no streaming lz4_raw decoder. Its one-shot decoder
+    fails on a block longer than the buffer, so the cap holds during
+    decode, but pads a shorter one: a block that also decodes into
+    raw_len - 1 bytes was over-declared."""
+    out = _LZ4.decompress(body, decompressed_size=raw_len, asbytes=True)
+    if raw_len:
         try:
-            _b = __import__(mod)
-
-            def _d(b: bytes, cap: int, _lib=_b) -> bytes:
-                # streaming decompressor with an output cap when the
-                # binding supports it (brotli >= 1.0.9); otherwise a
-                # post-inflate length check still rejects the bomb, it
-                # just cannot stop mid-inflate (documented residual)
-                try:
-                    d = _lib.Decompressor()
-                    out = d.process(b, max_output_length=max(cap, 1))
-                    if not d.is_finished():
-                        raise ValueError(
-                            "decompressed length exceeds declared cap"
-                        )
-                    return out
-                except TypeError:
-                    return _lib.decompress(b)
-
-            return (_b.compress, _d)
-        except ImportError:
-            continue
-    try:
-        # pyarrow bundles brotli; the declared length is the allocation
-        # bound (raw_len pre-capped by MAX_FRAME), same as the zstd path
-        import pyarrow as _pa
-
-        codec = _pa.Codec("brotli")
-
-        def _d_pa(b: bytes, cap: int) -> bytes:
-            try:
-                return bytes(codec.decompress(b, decompressed_size=max(cap, 1)))
-            except Exception as e:
-                raise ValueError(f"brotli decode failed: {e}") from e
-
-        return (lambda b: bytes(codec.compress(b)), _d_pa)
-    except Exception:
-        return None
+            _LZ4.decompress(body, decompressed_size=raw_len - 1)
+        except OSError:  # pyarrow's corrupt-data error
+            return out
+        raise ValueError(f"decompressed length < declared {raw_len}")
+    return out
 
 
-def available_codecs() -> frozenset:
-    """Wire codecs this runtime can negotiate: the builtin five plus any
-    probe hit. Re-probed per call (cheap: import-cache lookups) so a lib
-    installed mid-process lights up without a restart."""
-    extra = set()
-    if _zstd_binding() is not None:
-        extra.add(COMPRESSION_ZSTD)
-    if _brotli_binding() is not None:
-        extra.add(COMPRESSION_BROTLI)
-    return _BUILTIN_CODECS | extra
+def _arrow_compress(name: str, **kw):
+    return functools.partial(pa.Codec(name, **kw).compress, asbytes=True)
+
+
+# enum → (compress, decompress(body, raw_len)), for every compressed enum
+_CODECS = {
+    COMPRESSION_LZ4: (_arrow_compress("lz4_raw"), _lz4_decompress),
+    # LZ4HC is the same block format from lz4's high-compression encoder
+    # (pyarrow switches to it from level 3; 9 is lz4's HC default)
+    COMPRESSION_LZ4HC: (
+        _arrow_compress("lz4_raw", compression_level=9), _lz4_decompress,
+    ),
+    COMPRESSION_ZSTD: (
+        _arrow_compress("zstd"), _arrow_stream_decompress("zstd"),
+    ),
+    COMPRESSION_GZIP: _zlib_codec(31),
+    COMPRESSION_DEFLATE: _zlib_codec(zlib.MAX_WBITS),
+    COMPRESSION_BROTLI: (
+        _arrow_compress("brotli"), _arrow_stream_decompress("brotli"),
+    ),
+}
+AVAILABLE_CODECS = frozenset({COMPRESSION_NONE, *_CODECS})
 
 
 def wrap_payload(codec: int, payload: bytes) -> bytes:
@@ -276,30 +195,9 @@ def wrap_payload(codec: int, payload: bytes) -> bytes:
     Small or incompressible payloads ship with codec 0 inside the
     envelope — the receiver trusts the per-frame byte, not the session
     codec, so mixed frames are fine."""
-    import zlib
-
-    if len(payload) >= _COMPRESS_MIN_BYTES:
-        comp = None
-        if codec == COMPRESSION_DEFLATE:
-            comp = zlib.compress(payload, 6)
-        elif codec == COMPRESSION_GZIP:
-            # gzip container via zlib wbits=31 (stdlib, no gzip-module
-            # timestamp nondeterminism)
-            co = zlib.compressobj(6, zlib.DEFLATED, 31)
-            comp = co.compress(payload) + co.flush()
-        elif codec in (COMPRESSION_LZ4, COMPRESSION_LZ4HC):
-            from ranger_spark.sources.lz4_block import compress_block
-
-            comp = compress_block(payload, hc=codec == COMPRESSION_LZ4HC)
-        elif codec == COMPRESSION_ZSTD:
-            z = _zstd_binding()
-            if z is not None:
-                comp = z[0](payload)
-        elif codec == COMPRESSION_BROTLI:
-            b = _brotli_binding()
-            if b is not None:
-                comp = b[0](payload)
-        if comp is not None and len(comp) < len(payload):
+    if len(payload) >= _COMPRESS_MIN_BYTES and codec in _CODECS:
+        comp = _CODECS[codec][0](payload)
+        if len(comp) < len(payload):
             return bytes([codec]) + write_uvarint(len(payload)) + comp
     return bytes([COMPRESSION_NONE]) + write_uvarint(len(payload)) + payload
 
@@ -308,11 +206,10 @@ def unwrap_payload(data: bytes) -> bytes:
     """Inverse of wrap_payload; validates the declared raw length.
 
     The declared raw length is bounded by MAX_FRAME *before* inflating
-    and enforced *during* inflation (decompressobj max_length), so a
-    small deflate bomb cannot expand past the frame cap server-side.
+    and enforced *during* inflation by every decoder, so a small bomb
+    cannot expand past the frame cap server-side. A corrupt body, or one
+    that decodes to any other length than declared, is a ValueError.
     """
-    import zlib
-
     if not data:
         raise ValueError("empty compressed envelope")
     codec = data[0]
@@ -324,32 +221,11 @@ def unwrap_payload(data: bytes) -> bytes:
     body = data[pos:]
     if codec == COMPRESSION_NONE:
         out = body
-    elif codec in (COMPRESSION_DEFLATE, COMPRESSION_GZIP):
-        dobj = zlib.decompressobj(
-            31 if codec == COMPRESSION_GZIP else zlib.MAX_WBITS
-        )
-        # max_length=0 means UNLIMITED to zlib, so a declared raw_len of 0
-        # must not be passed through — inflate at most 1 byte and require
-        # the stream to produce nothing.
-        out = dobj.decompress(body, raw_len if raw_len > 0 else 1)
-        if raw_len == 0 and out:
-            raise ValueError("decompressed length exceeds declared 0")
-        if dobj.unconsumed_tail and dobj.decompress(
-            dobj.unconsumed_tail, 1
-        ):
-            raise ValueError(
-                f"decompressed length exceeds declared {raw_len}"
-            )
-    elif codec in (COMPRESSION_LZ4, COMPRESSION_LZ4HC):
-        from ranger_spark.sources.lz4_block import decompress_block
-
-        # same bomb-guard contract as deflate: the cap is enforced
-        # DURING decode, not after
-        out = decompress_block(body, max_out=raw_len)
-    elif codec == COMPRESSION_ZSTD and (z := _zstd_binding()) is not None:
-        out = z[1](body, raw_len)
-    elif codec == COMPRESSION_BROTLI and (b := _brotli_binding()) is not None:
-        out = b[1](body, raw_len)
+    elif codec in _CODECS:
+        try:
+            out = _CODECS[codec][1](body, raw_len)
+        except (OSError, zlib.error) as e:
+            raise ValueError(f"corrupt codec {codec} body: {e}") from e
     else:
         raise ValueError(f"unsupported wire compression codec {codec}")
     if len(out) != raw_len:
@@ -1062,20 +938,17 @@ class NativeServer:
                     elif idle_timeout:
                         conn.settimeout(min(idle_timeout / 2, 5.0))
                     codec = int(hello.get("compression") or 0)
-                    if codec not in available_codecs():
-                        # capability-gated, like the engine's brotli codec:
-                        # zstd/brotli light up when a binding is present
-                        # (runtime probe above) and reject typed otherwise
-                        # (enum per pkg/sdk/client.go:51-58)
+                    if codec not in AVAILABLE_CODECS:
+                        # a byte outside the SDK enum
+                        # (pkg/sdk/client.go:51-58) gets the typed rejection
                         self._send(
                             conn,
                             SERVER_EXCEPTION,
                             pack_server_exception(
                                 "common.unsupported",
                                 f"wire compression codec {codec} not "
-                                "available (zstd/brotli require codec "
-                                "libraries; lz4=1, lz4hc=2, gzip=4 and "
-                                "deflate=5 are built in)",
+                                "available (none=0, lz4=1, lz4hc=2, "
+                                "zstd=3, gzip=4, deflate=5, brotli=6)",
                             ),
                         )
                         return
@@ -1369,8 +1242,7 @@ class NativeClient:
         # SDK's compress DSN parameter, same numbering
         # (pkg/sdk/client.go:51-58); "zlib" accepted as a deflate alias
         o = parse_dsn(dsn)
-        # name resolution (incl. compress=auto → preferred_codec, the
-        # VERDICT r10 item 8 throughput-ranked negotiation) lives in
+        # name resolution (incl. compress=auto → zstd) lives in
         # __init__ so the constructor and the DSN accept the same set
         return cls(
             o["host"], o["port"], database=o["database"], user=o["user"],
@@ -1383,6 +1255,7 @@ class NativeClient:
         "lz4hc": COMPRESSION_LZ4HC, "zstd": COMPRESSION_ZSTD,
         "gzip": COMPRESSION_GZIP, "deflate": COMPRESSION_DEFLATE,
         "zlib": COMPRESSION_DEFLATE, "br": COMPRESSION_BROTLI,
+        "auto": COMPRESSION_ZSTD,
     }
 
     def __init__(self, host: str, port: int, database: str = "",
@@ -1393,9 +1266,7 @@ class NativeClient:
         # with a leaked connection
         if isinstance(compression, str):
             name = compression.lower()
-            if name == "auto":
-                compression = preferred_codec()
-            elif name in self._CODEC_NAMES:
+            if name in self._CODEC_NAMES:
                 compression = self._CODEC_NAMES[name]
             else:
                 raise ValueError(f"unknown compress codec {compression!r}")

@@ -511,11 +511,8 @@ def test_compressed_session_query_and_insert(server, engine):
 
 def test_all_reference_sdk_codecs_live(server, engine):
     # enum numbering matches the reference SDK (pkg/sdk/client.go:51-58).
-    # ALL SIX compressed enums are live (r10): LZ4/LZ4HC via the
-    # pure-Python block codec, ZSTD via RFC 8878 (pure or libzstd),
-    # GZIP/DEFLATE via stdlib zlib, BROTLI via pyarrow's bundled
-    # brotli. Typed rejection still covers binding-less environments
-    # (test below).
+    # ALL SIX compressed enums are live: LZ4/LZ4HC/ZSTD/BROTLI via
+    # pyarrow's bundled C codecs, GZIP/DEFLATE via stdlib zlib.
     for live in (ns.COMPRESSION_LZ4, ns.COMPRESSION_LZ4HC,
                  ns.COMPRESSION_ZSTD, ns.COMPRESSION_GZIP,
                  ns.COMPRESSION_DEFLATE, ns.COMPRESSION_BROTLI):
@@ -531,78 +528,102 @@ def test_all_reference_sdk_codecs_live(server, engine):
     assert ns.COMPRESSION_ZSTD == 3 and ns.COMPRESSION_DEFLATE == 5
 
 
-def test_brotli_typed_rejection_without_any_binding(monkeypatch):
-    """In an environment with no brotli/brotlicffi AND no pyarrow, a
-    reference client asking for BROTLI gets the typed capability
-    rejection, never a misdecoded stream."""
-    import builtins
-
-    real_import = builtins.__import__
-
-    def no_brotli(name, *a, **k):
-        if name in ("brotli", "brotlicffi", "pyarrow"):
-            raise ImportError(name)
-        return real_import(name, *a, **k)
-
-    monkeypatch.setattr(builtins, "__import__", no_brotli)
-    assert ns.COMPRESSION_BROTLI not in ns.available_codecs()
-    with pytest.raises(ValueError):
-        ns.unwrap_payload(
-            bytes([ns.COMPRESSION_BROTLI]) + ns.write_uvarint(10) + b"x" * 10
-        )
+COMPRESSED_CODECS = (
+    ns.COMPRESSION_LZ4, ns.COMPRESSION_LZ4HC, ns.COMPRESSION_ZSTD,
+    ns.COMPRESSION_GZIP, ns.COMPRESSION_DEFLATE, ns.COMPRESSION_BROTLI,
+)
 
 
-def test_zstd_wire_envelope_is_rfc8878(server, engine):
-    """Enum 3 always produces REAL zstd frames (magic 28 B5 2F FD):
-    via pyarrow's libzstd here, via sources/zstd_frame.py where no
-    binding exists (the two are interop-verified against each other in
-    test_zstd_frame.py). Compresses, round-trips, and the bomb cap is
-    enforced during decode."""
-    big = (b'{"k": "value value value", "n": 12345} ' * 200)
-    w = ns.wrap_payload(ns.COMPRESSION_ZSTD, big)
-    assert w[0] == ns.COMPRESSION_ZSTD and len(w) < len(big)
-    _, pos = ns.read_uvarint(w, 1)
-    assert w[pos : pos + 4] == bytes.fromhex("28B52FFD")  # LE 0xFD2FB528
+@pytest.mark.parametrize(
+    "codec", COMPRESSED_CODECS,
+    ids=["lz4", "lz4hc", "zstd", "gzip", "deflate", "brotli"],
+)
+def test_codec_envelope(codec):
+    """Every compressed enum round-trips, and rejects with ValueError a
+    declared length below or above the true one, a garbage body, and a
+    declared length past MAX_FRAME."""
+    big = b'{"k": "value value value", "n": 12345} ' * 200
+    w = ns.wrap_payload(codec, big)
+    assert w[0] == codec and len(w) < len(big)
     assert ns.unwrap_payload(w) == big
-    # forged declared length below the true content -> rejected mid-decode
-    forged = bytes([ns.COMPRESSION_ZSTD]) + ns.write_uvarint(64) + w[pos:]
-    with pytest.raises(ValueError):
-        ns.unwrap_payload(forged)
+    _, pos = ns.read_uvarint(w, 1)
+    body = w[pos:]
+    if codec == ns.COMPRESSION_ZSTD:
+        assert body[:4] == bytes.fromhex("28B52FFD")  # RFC 8878 magic
 
+    def envelope(raw_len, b=body):
+        return bytes([codec]) + ns.write_uvarint(raw_len) + b
 
-def test_lz4_block_codec_roundtrip_and_bounds():
-    import os
-    import random
-
-    from ranger_spark.sources.lz4_block import (
-        compress_block,
-        decompress_block,
-    )
-
-    random.seed(7)
-    cases = [
-        b"",
-        b"a",
-        b"abc" * 4,
-        b"the quick brown fox " * 400,
-        os.urandom(65536),               # incompressible
-        b"\x00" * 300000,                # long overlapping match
-        bytes(random.choices(b"abcdef", k=40000)),
-    ]
-    for hc in (False, True):
-        for payload in cases:
-            z = compress_block(payload, hc=hc)
-            assert decompress_block(z, max_out=len(payload)) == payload
-    # repetitive data actually compresses
-    rep = b"block" * 10000
-    assert len(compress_block(rep)) < len(rep) // 10
-    # bomb guard fires DURING decode, not after
-    with pytest.raises(ValueError):
-        decompress_block(compress_block(b"z" * 100000), max_out=64)
-    # malformed streams raise instead of over-reading
-    for bad in (b"", b"\xff", b"\x10", b"\x04abcd\xff\xff"):
+    for lying in (0, 64, len(big) - 1, len(big) + 1, 2 * len(big)):
         with pytest.raises(ValueError):
-            decompress_block(bad, max_out=1 << 20)
+            ns.unwrap_payload(envelope(lying))
+    garbage = bytes((i * 151 + 7) % 256 for i in range(300))
+    with pytest.raises(ValueError):
+        ns.unwrap_payload(envelope(len(big), garbage))
+    with pytest.raises(ValueError, match="exceeds frame cap"):
+        ns.unwrap_payload(envelope(ns.MAX_FRAME + 1))
+
+
+# Envelopes written by the earlier pure-Python LZ4 (plain and HC) and
+# zstd encoders: frames from peers that still run them must decode.
+GOLDEN_PAYLOAD = b"".join(
+    b"row %03d,alpha,%d,beta-gamma;" % (i, i * 7 % 13) for i in range(12)
+)
+GOLDEN_FRAMES = {
+    ns.COMPRESSION_LZ4: (
+        "01c702f20c726f77203030302c616c7068612c302c626574612d67616d6d613b"
+        "1b0013311b001e371b0013321b001e311b0013331b001e381b0013341b001e32"
+        "1b0013351b001e391b0013361b001e331b0013371b001f31be000013381c001e"
+        "34370013391b001e31bf00143110011d353700143110011431c00050616d6d61"
+        "3b"
+    ),
+    ns.COMPRESSION_LZ4HC: (
+        "02c702f20c726f77203030302c616c7068612c302c626574612d67616d6d613b"
+        "1b0013311b001e371b0013321b001e311b0013331b001e381b0013341b001e32"
+        "1b0013351b001e391b0013361b001e331b00143787000fbe000013381c001e34"
+        "3700143937000ebf00143110011d353700143110011431c00050616d6d613b"
+    ),
+    ns.COMPRESSION_ZSTD: (
+        "03c70228b52ffd8438470100005d0300e402726f77203030302c616c7068612c"
+        "302c626574612d67616d6d613b31373231333834323539363337383439313531"
+        "1700433b32b108f0f13741040b9f37ad08e6d3cb4f76c14fa130c4f9f4cc6726"
+        "3efdf9cc984f2f3eb3f3e999cf4c7cfaf399319f5e7ce6bb0f730c7bf8733f"
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "codec", sorted(GOLDEN_FRAMES), ids=["lz4", "lz4hc", "zstd"]
+)
+def test_frames_from_the_pure_python_encoders_decode(codec):
+    env = bytes.fromhex(GOLDEN_FRAMES[codec])
+    assert env[0] == codec
+    assert ns.unwrap_payload(env) == GOLDEN_PAYLOAD
+
+
+def test_shared_codecs_are_thread_safe():
+    """Every connection thread shares the module's codec objects: many
+    threads wrapping and unwrapping distinct payloads at once must each
+    get their own bytes back."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    def worker(t):
+        for i in range(20):
+            payload = (b"thread %d frame %d; " % (t, i)) * (50 + t)
+            for codec in COMPRESSED_CODECS:
+                if ns.unwrap_payload(ns.wrap_payload(codec, payload)) != payload:
+                    return False
+        return True
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(16) as ex:
+            futures = [ex.submit(worker, t) for t in range(16)]
+            assert all(f.result(timeout=120) for f in futures)
+    finally:
+        sys.setswitchinterval(old)
 
 
 def test_lz4_wire_envelope():
@@ -792,84 +813,8 @@ def test_pipeline_statement_over_native_protocol(server):
         c.close()
 
 
-def test_zstd_codec_lights_up_with_binding(server, engine, monkeypatch):
-    """VERDICT r7 item 8: the ZSTD enum is a runtime capability — absent
-    binding → typed rejection (covered above), present binding → the
-    codec negotiates and frames round-trip. No zstd lib ships in this
-    container, so the PROBE/NEGOTIATION/ENVELOPE plumbing is exercised
-    with a stand-in `zstandard` module whose (de)compressor is
-    zlib-backed; against a real zstandard install the same paths carry
-    actual zstd frames."""
-    import sys
-    import types
-    import zlib
-
-    fake = types.ModuleType("zstandard")
-
-    class _C:
-        def __init__(self, level=3):
-            self.level = level
-
-        def compress(self, b):
-            return zlib.compress(b, 6)
-
-    class _D:
-        def decompress(self, b, max_output_size=0):
-            out = zlib.decompress(b)
-            if max_output_size and len(out) > max_output_size:
-                raise ValueError("decompressed size exceeds cap")
-            return out
-
-    fake.ZstdCompressor = _C
-    fake.ZstdDecompressor = _D
-    monkeypatch.setitem(sys.modules, "zstandard", fake)
-
-    assert ns.COMPRESSION_ZSTD in ns.available_codecs()
-    big = b"zstd plumbing " * 300
-    w = ns.wrap_payload(ns.COMPRESSION_ZSTD, big)
-    assert w[0] == ns.COMPRESSION_ZSTD and len(w) < len(big)
-    assert ns.unwrap_payload(w) == big
-
-    # live negotiation: a client asking for ZSTD now completes a query
-    c = ns.NativeClient(
-        "127.0.0.1", server.port, database="nat",
-        compression=ns.COMPRESSION_ZSTD,
-    )
-    try:
-        assert c.query("SELECT 1 AS one;")["rows"] == [("1",)]
-    finally:
-        c.close()
-
-    # probe is per-call AND binding-preferring: removing the binding
-    # drops to the pure RFC 8878 codec (r10) — the enum STAYS live and
-    # frames switch from the fake zlib container to real zstd magic
-    monkeypatch.delitem(sys.modules, "zstandard")
-    import builtins
-
-    real_import = builtins.__import__
-
-    def no_zstd(name, *a, **k):
-        if name in ("zstandard", "compression.zstd"):
-            raise ImportError(name)
-        if name == "compression":
-            raise ImportError(name)
-        return real_import(name, *a, **k)
-
-    monkeypatch.setattr(builtins, "__import__", no_zstd)
-    assert ns.COMPRESSION_ZSTD in ns.available_codecs()
-    w2 = ns.wrap_payload(ns.COMPRESSION_ZSTD, big)
-    _, p2 = ns.read_uvarint(w2, 1)
-    assert w2[p2 : p2 + 4] == bytes.fromhex("28B52FFD")
-    assert ns.unwrap_payload(w2) == big
-
-
 def test_auto_codec_negotiation_prefers_c_speed(server):
-    """compress=auto (VERDICT r10 item 8): the SDK default picks zstd
-    when a C-speed binding exists (pyarrow ships libzstd here) and
-    NEVER a pure-Python encoder; explicit codecs stay honored."""
-    # this box: pyarrow's libzstd → zstd is the negotiated default
-    assert ns.zstd_binding_kind() in ("stdlib", "zstandard", "pyarrow")
-    assert ns.preferred_codec() == ns.COMPRESSION_ZSTD
+    """compress=auto negotiates zstd, from the DSN and the constructor."""
     c = ns.NativeClient.from_dsn(
         f"ranger://127.0.0.1:{server.port}/nat?compress=auto"
     )
@@ -889,24 +834,6 @@ def test_auto_codec_negotiation_prefers_c_speed(server):
         c2.close()
 
 
-def test_auto_codec_falls_back_to_deflate_without_c_zstd(monkeypatch):
-    """Without any C zstd binding, auto negotiates DEFLATE (zlib's C hot
-    loop) — the pure-Python zstd/lz4 encoders are interop paths, not
-    wire defaults."""
-    import builtins
-
-    real_import = builtins.__import__
-
-    def no_zstd(name, *a, **k):
-        if name in ("compression", "zstandard", "pyarrow"):
-            raise ImportError(name)
-        return real_import(name, *a, **k)
-
-    monkeypatch.setattr(builtins, "__import__", no_zstd)
-    assert ns.zstd_binding_kind() == "pure"
-    assert ns.preferred_codec() == ns.COMPRESSION_DEFLATE
-
-
 def test_constructor_accepts_codec_names_and_rejects_unknown(server):
     """String codecs resolve before the socket opens (r11 review
     finding: an unmapped string used to crash in the hello packer with
@@ -922,3 +849,9 @@ def test_constructor_accepts_codec_names_and_rejects_unknown(server):
     with pytest.raises(ValueError, match="unknown compress codec"):
         # port 1: resolution must fail BEFORE any connection attempt
         ns.NativeClient("127.0.0.1", 1, compression="bogus")
+    # a codec byte outside the SDK enum gets the server's typed rejection
+    for byte in (7, 255):
+        with pytest.raises(RuntimeError, match="common.unsupported"):
+            ns.NativeClient(
+                "127.0.0.1", server.port, database="nat", compression=byte
+            )
