@@ -20,6 +20,7 @@ import re
 import threading
 import time
 import uuid as uuid_mod
+from collections import deque
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -36,6 +37,7 @@ from ranger_spark.errors import (
     VALIDATION_FAILED,
     RangerError,
 )
+from ranger_spark.frames import local_frame
 from ranger_spark.router import Routed, StmtKind, route
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
 
@@ -46,6 +48,9 @@ RESULT_CAP = 100_000  # reference duckdb/engine.go:395-400
 # output without flagging everything)
 SMALL_FILE_BYTES = 32 << 20
 SCHEMA_PROP_VIEW_PREFIX = "ranger_schema_"  # per-table Iceberg schema registry
+# finished statements ExecutionManager keeps (system.queries, /status);
+# running ones are always kept, so cancel() can reach them
+QUERY_HISTORY = 1000
 
 
 @dataclass
@@ -69,17 +74,21 @@ class QueryInfo:
 
 class ExecutionManager:
     """Query registration / tracking / cancellation
-    (≈ reference server/query/execution_manager.go:54-145)."""
+    (≈ reference server/query/execution_manager.go:54-145). Keeps every
+    running query and the newest ``QUERY_HISTORY`` finished ones."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._queries: dict[str, QueryInfo] = {}
+        self._running: dict[str, QueryInfo] = {}
+        self._finished: deque[QueryInfo] = deque(maxlen=QUERY_HISTORY)
+        self.started = 0  # statements ever started
         self._lock = threading.Lock()
 
     def start(self, sql: str) -> QueryInfo:
         qi = QueryInfo(query_id=str(uuid_mod.uuid4()), sql=sql)
         with self._lock:
-            self._queries[qi.query_id] = qi
+            self._running[qi.query_id] = qi
+            self.started += 1
         self.spark.sparkContext.setJobGroup(qi.query_id, sql[:100], True)
         return qi
 
@@ -91,11 +100,13 @@ class ExecutionManager:
             if qi.status != "cancelled":
                 qi.status = status
             qi.finished_at = time.time()
+            if self._running.pop(qi.query_id, None) is not None:
+                self._finished.append(qi)
         self.spark.sparkContext.setJobGroup("", "")
 
     def cancel(self, query_id: str) -> bool:
         with self._lock:
-            qi = self._queries.get(query_id)
+            qi = self._running.get(query_id)
             if qi is None or qi.status != "running":
                 return False
             qi.status = "cancelled"
@@ -103,8 +114,9 @@ class ExecutionManager:
         return True
 
     def list_queries(self) -> list[QueryInfo]:
+        """Finished queries oldest first, then the running ones."""
         with self._lock:
-            return list(self._queries.values())
+            return [*self._finished, *self._running.values()]
 
 
 class Engine:
@@ -2512,7 +2524,7 @@ class Engine:
             )
             for r in rows
         ]
-        df = self.spark.createDataFrame(evaluated, insert_schema)
+        df = local_frame(self.spark, evaluated, insert_schema)
         # fill unspecified columns with NULL, order to table schema
         for f in schema.fields:
             if f.name not in cols:
@@ -2795,7 +2807,7 @@ class Engine:
             n_hit = df.count()
             self._rewrite_table(
                 name,
-                self.spark.createDataFrame([], df.schema),
+                local_frame(self.spark, [], df.schema),
                 operation="delete",
             )
             return QueryResult(
@@ -3621,7 +3633,7 @@ class Engine:
         if files:
             pinned = self.spark.read.schema(schema).parquet(*files)
         else:
-            pinned = self.spark.createDataFrame([], schema)
+            pinned = local_frame(self.spark, [], schema)
         tmp = f"__mv_pin_{uuid_mod.uuid4().hex[:8]}"
         pinned.createOrReplaceTempView(tmp)
         # the view must outlive the lazy plan; the consuming write calls
@@ -4175,16 +4187,19 @@ class Engine:
             for i, (c, ty, nu) in enumerate(self._column_info(f"{db}.{t}"))
         ]
         s = self.spark
-        s.createDataFrame(
+        local_frame(
+            s,
             db_rows,
             "database_name string, is_system boolean, table_count long",
         ).createOrReplaceTempView("system_databases")
-        s.createDataFrame(
+        local_frame(
+            s,
             tbl_rows,
             "database_name string, table_name string, table_type string, "
             "is_temporary boolean",
         ).createOrReplaceTempView("system_tables")
-        s.createDataFrame(
+        local_frame(
+            s,
             col_rows,
             "database_name string, table_name string, column_name string, "
             "data_type string, is_nullable boolean, ordinal_position int",
@@ -4204,7 +4219,8 @@ class Engine:
             )
             for q in self.exec_mgr.list_queries()
         ]
-        s.createDataFrame(
+        local_frame(
+            s,
             q_rows,
             "query_id string, sql string, status string, "
             "started_at double, duration_s double",
@@ -4219,7 +4235,8 @@ class Engine:
             )
             for n, m in sorted(self._manifest.get("mviews", {}).items())
         ]
-        s.createDataFrame(
+        local_frame(
+            s,
             mv_rows,
             "name string, source_table string, src_version long, "
             "incremental boolean",
@@ -4250,12 +4267,14 @@ class Engine:
                 tag_rows.append(
                     Row(table_name=tname, tag=tg, version=int(v))
                 )
-        s.createDataFrame(
+        local_frame(
+            s,
             snap_rows,
             "table_name string, version long, committed_at double, "
             "operation string, num_files long, num_added long",
         ).createOrReplaceTempView("system_snapshots")
-        s.createDataFrame(
+        local_frame(
+            s,
             tag_rows, "table_name string, tag string, version long"
         ).createOrReplaceTempView("system_tags")
         # system.files — current-snapshot data files per versioned table
@@ -4285,7 +4304,8 @@ class Engine:
                         is_small=bool(0 <= nbytes < SMALL_FILE_BYTES),
                     )
                 )
-        s.createDataFrame(
+        local_frame(
+            s,
             file_rows,
             "table_name string, file_path string, bytes long, "
             "is_small boolean",
@@ -4355,10 +4375,10 @@ def split_statements_with_offsets(script: str) -> list[tuple[str, int]]:
 
 
 def _coerce(v, dtype: st.DataType):
-    """Convert validated literals to the Python types createDataFrame
-    expects (ISO strings → date/datetime, integral floats → int, ...)."""
+    """Convert validated literals to the Python types of the column's
+    Spark type (ISO strings → date/datetime, integral floats → int,
+    numbers → Decimal at the column's scale, rounded half up, ...)."""
     import datetime as dt
-    import decimal
 
     if v is None:
         return None
@@ -4367,7 +4387,7 @@ def _coerce(v, dtype: st.DataType):
     if isinstance(dtype, (st.FloatType, st.DoubleType)) and isinstance(v, int):
         return float(v)
     if isinstance(dtype, st.DecimalType) and isinstance(v, (int, float)):
-        return decimal.Decimal(str(v))
+        return _to_decimal(v, dtype)
     if isinstance(dtype, st.DateType):
         if isinstance(v, dt.datetime):
             return v.date()
@@ -4380,11 +4400,30 @@ def _coerce(v, dtype: st.DataType):
     return v
 
 
+def _to_decimal(v, dtype: st.DecimalType):
+    """``v`` at the column's scale, rounded half up. Raises
+    ``decimal.InvalidOperation`` for a non-finite ``v`` and for one whose
+    rounded coefficient needs more than ``precision + 1`` digits (the
+    default context's 28 digits would refuse valid ``decimal(38, s)``
+    values)."""
+    import decimal
+
+    d = decimal.Decimal(str(v))
+    if not d.is_finite():
+        raise decimal.InvalidOperation(f"not finite: {v!r}")
+    return d.quantize(
+        decimal.Decimal(1).scaleb(-dtype.scale),
+        rounding=decimal.ROUND_HALF_UP,
+        context=decimal.Context(prec=dtype.precision + 1),
+    )
+
+
 def _cell_type_error(v, dtype: st.DataType) -> str | None:
     """Typed compat checks ≈ reference parquet/schema.go:463-694 (int32
     accepts int; float64 accepts int/float-if-integral-ok; strict
     otherwise)."""
     import datetime as dt
+    import decimal
 
     if isinstance(dtype, (st.IntegerType, st.LongType)):
         if isinstance(v, bool) or not isinstance(v, int):
@@ -4423,11 +4462,15 @@ def _cell_type_error(v, dtype: st.DataType) -> str | None:
                 return f"invalid timestamp literal {v!r}"
         return f"expected timestamp, got {v!r}"
     if isinstance(dtype, st.DecimalType):
-        return (
-            None
-            if isinstance(v, (int, float)) and not isinstance(v, bool)
-            else f"expected decimal, got {v!r}"
-        )
+        if isinstance(v, bool) or not isinstance(v, (int, float)):
+            return f"expected decimal, got {v!r}"
+        try:
+            d = _to_decimal(v, dtype)
+        except decimal.InvalidOperation:
+            d = None
+        if d is None or d.adjusted() >= dtype.precision - dtype.scale:
+            return f"{dtype.simpleString()} out of range: {v!r}"
+        return None
     if isinstance(dtype, st.BinaryType):
         return None if isinstance(v, (bytes, str)) else f"expected binary, got {v!r}"
     return None

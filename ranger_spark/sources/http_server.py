@@ -62,7 +62,7 @@ class _Handler(BaseHTTPRequestHandler):
                     # reference shape (server.go:154) + richer counters
                     "status": "running",
                     "server": "http",
-                    "queries_total": len(qs),
+                    "queries_total": self.engine.exec_mgr.started,
                     "queries_running": sum(1 for q in qs if q.status == "running"),
                 },
             )

@@ -71,6 +71,7 @@ import zlib
 import pyarrow as pa
 
 from ranger_spark.engine import RESULT_CAP, Engine
+from ranger_spark.frames import local_frame
 
 # protocol/constants.go (ClickHouse-compatible numbering)
 CLIENT_HELLO = 0
@@ -755,8 +756,8 @@ def _insert_rows_dataframe(
         )
         for row in rows
     ]
-    src = engine.spark.createDataFrame(
-        cleaned, schema=", ".join(f"`{c}` string" for c in columns)
+    src = local_frame(
+        engine.spark, cleaned, ", ".join(f"`{c}` string" for c in columns)
     )
     # pre-commit validation: a value the declared type cannot represent
     # must reject the load with a typed error, not an ANSI cast blowup
@@ -864,6 +865,8 @@ class NativeServer:
                 conn, _ = self.sock.accept()
             except OSError:
                 return
+            # responses are single writes: no reason to wait for an ACK
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             threading.Thread(
                 target=self._handle, args=(conn,), daemon=True
             ).start()
@@ -1273,6 +1276,7 @@ class NativeClient:
         self.database = database
         self._codec = COMPRESSION_NONE  # negotiation completes after hello
         self.sock = socket.create_connection((host, port), timeout=60)
+        self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._send(
             CLIENT_HELLO,
             pack_client_hello(

@@ -365,6 +365,8 @@ class PgWireServer:
                 conn, _ = self.sock.accept()
             except OSError:
                 return
+            # responses are single writes: no reason to wait for an ACK
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             threading.Thread(
                 target=self._handle, args=(conn,), daemon=True
             ).start()
@@ -646,9 +648,9 @@ class PgWireServer:
             conn.sendall(_error(str(e)[:400]))
             return
         ncols = len(r.columns)
-        conn.sendall(
+        out = [
             _msg(b"H", b"\x00" + struct.pack("!H", ncols) + b"\x00\x00" * ncols)
-        )
+        ]
         if fmt == "csv":
             # PG COPY TO csv distinguishes NULL (bare empty) from the
             # empty string (quoted "") — csv.writer's QUOTE_MINIMAL
@@ -664,7 +666,7 @@ class PgWireServer:
 
             for row in r.rows:
                 line = ",".join(_csv_field(v) for v in row) + "\n"
-                conn.sendall(_msg(b"d", line.encode()))
+                out.append(_msg(b"d", line.encode()))
         else:
             for row in r.rows:
                 line = (
@@ -674,9 +676,10 @@ class PgWireServer:
                     )
                     + "\n"
                 )
-                conn.sendall(_msg(b"d", line.encode()))
-        conn.sendall(_msg(b"c", b""))  # CopyDone
-        conn.sendall(_msg(b"C", _cstr(f"COPY {r.row_count}")))
+                out.append(_msg(b"d", line.encode()))
+        out.append(_msg(b"c", b""))  # CopyDone
+        out.append(_msg(b"C", _cstr(f"COPY {r.row_count}")))
+        conn.sendall(b"".join(out))
 
     def _describe(self, sql: str | None) -> bytes:
         """RowDescription via Catalyst ANALYSIS only (no job); NoData when
@@ -714,15 +717,15 @@ class PgWireServer:
             return False
         rows = p["result"]
         send = rows if max_rows <= 0 else rows[:max_rows]
-        for row in send:
-            conn.sendall(_data_row(row))
+        out = [_data_row(row) for row in send]
         p["result"] = rows[len(send) :]
         if max_rows > 0 and p["result"]:
-            conn.sendall(_msg(b"s", b""))  # PortalSuspended
+            out.append(_msg(b"s", b""))  # PortalSuspended
         elif p["columns"]:
-            conn.sendall(_msg(b"C", _cstr(f"SELECT {p['count']}")))
+            out.append(_msg(b"C", _cstr(f"SELECT {p['count']}")))
         else:
-            conn.sendall(_msg(b"C", _cstr(p["message"] or "OK")))
+            out.append(_msg(b"C", _cstr(p["message"] or "OK")))
+        conn.sendall(b"".join(out))
         return True
 
     def _run_query(self, conn: socket.socket, sql: str, database: str = "") -> None:
@@ -734,10 +737,10 @@ class PgWireServer:
             conn.sendall(_error(str(e)[:400]))
             return
         if r.columns:
-            conn.sendall(_row_description(r.columns))
-            for row in r.rows:
-                conn.sendall(_data_row(row))
-            conn.sendall(_msg(b"C", _cstr(f"SELECT {r.row_count}")))
+            out = [_row_description(r.columns)]
+            out += [_data_row(row) for row in r.rows]
+            out.append(_msg(b"C", _cstr(f"SELECT {r.row_count}")))
+            conn.sendall(b"".join(out))
         else:
             conn.sendall(_msg(b"C", _cstr(r.message or "OK")))
 

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from ranger_spark.frames import local_frame
+
 
 def stream_ingest(
     spark: SparkSession,
@@ -77,7 +79,8 @@ def stream_ingest(
         else:
             batch_df.write.mode("append").insertInto(table)
         if cdc_table is not None:
-            batch_df.sparkSession.createDataFrame(
+            local_frame(
+                batch_df.sparkSession,
                 [(batch_id, "INSERT", table, batch_df.count())],
                 "batch_id long, op string, table_name string, row_count long",
             ).withColumn("committed_at", F.current_timestamp()).write.mode(

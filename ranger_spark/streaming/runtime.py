@@ -111,7 +111,15 @@ def drain_scope(
 ):
     """Scope a bounded drain: state-sized shuffle partitions + a fresh
     tmpfs checkpoint dir, both undone afterwards. Yields the checkpoint
-    dir to pass as the query's ``checkpointLocation``."""
+    dir to pass as the query's ``checkpointLocation``.
+
+    The partition count is set on the session-wide
+    ``spark.sql.shuffle.partitions`` for the whole drain, so every job
+    the session plans meanwhile runs at the small state-sized count —
+    ``foreachBatch`` work such as a MERGE included, on purpose. The
+    scope must not run alongside other work on the same session: other
+    threads would plan with the drain's count, and two overlapping
+    scopes would restore each other's value."""
     ckpt = checkpoint_dir(f"ranger_{name}_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(

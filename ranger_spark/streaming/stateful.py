@@ -232,7 +232,11 @@ def value_histogram_per_key(events: DataFrame, bucket_width: float = 5.0) -> Dat
     interop gate for the vendored protobuf runtime
     (ranger_spark/protoshim.py) after ``topk_per_key``'s ListState.
 
-    Expects columns ``user_id`` (long) and ``value`` (double).
+    Expects columns ``user_id`` (long) and ``value`` (double). Each
+    batch is summed as one pandas vector, which equals a row-by-row sum
+    bit for bit only for integer-valued doubles; fractional values may
+    differ in the last place. NaN and null values are skipped, as SQL
+    aggregates skip NULL: they add to no count, sum or bucket.
     """
     if not _tws_available():  # pragma: no cover - gated by runtime
         raise NotImplementedError(
@@ -282,7 +286,7 @@ def value_histogram_per_key(events: DataFrame, bucket_width: float = 5.0) -> Dat
             for pdf in rows:
                 if not len(pdf):
                     continue
-                v = pdf["value"].astype("float64")
+                v = pdf["value"].astype("float64").dropna()
                 cnt += len(v)
                 total += float(v.sum())
                 for b, c in (v // bucket_width).astype("int64").value_counts().items():
@@ -428,7 +432,9 @@ def eventtime_session_flush_per_key(
     Expects a STREAMING DataFrame with columns ``user_id`` (long),
     ``ts`` (timestamp, watermarked by the caller) and ``value``
     (double). Output: one row per closed session
-    (user_id, session_start_ms, session_end_ms, cnt, mean_value).
+    (user_id, session_start_ms, session_end_ms, cnt, mean_value). Each
+    batch's values are summed as one pandas vector, which equals a
+    row-by-row sum bit for bit only for integer-valued doubles.
     """
     if not _tws_available():  # pragma: no cover - gated by runtime
         raise NotImplementedError(

@@ -235,6 +235,26 @@ def test_query_tracking_and_cancel(engine):
     assert engine.cancel("nonexistent-id") is False
 
 
+def test_execution_manager_keeps_running_and_newest_finished(spark):
+    from ranger_spark.engine import QUERY_HISTORY, ExecutionManager
+
+    em = ExecutionManager(spark)
+    long_running = em.start("SELECT long_running")
+    for i in range(2 * QUERY_HISTORY):
+        em.finish(em.start(f"SELECT {i}"))
+    finished = [q for q in em.list_queries() if q.status != "running"]
+    assert len(finished) == QUERY_HISTORY
+    assert finished[-1].sql == f"SELECT {2 * QUERY_HISTORY - 1}"
+    assert em.started == 2 * QUERY_HISTORY + 1
+    # a running query is never evicted, so cancel() still reaches it
+    assert em.cancel(long_running.query_id) is True
+    assert long_running.status == "cancelled"
+    em.finish(long_running, "error")
+    assert em.list_queries()[-1] is long_running
+    assert long_running.status == "cancelled"
+    assert len(em.list_queries()) == QUERY_HISTORY
+
+
 def test_memory_storage_engine(engine):
     engine.execute("DROP TABLE IF EXISTS mem_t;")
     engine.execute("CREATE TABLE mem_t (id int32, v string) STORAGE memory;")

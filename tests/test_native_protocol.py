@@ -855,3 +855,25 @@ def test_constructor_accepts_codec_names_and_rejects_unknown(server):
             ns.NativeClient(
                 "127.0.0.1", server.port, database="nat", compression=byte
             )
+
+
+def test_native_sockets_disable_nagle(server, client, monkeypatch):
+    import socket
+
+    seen = []
+    orig = socket.socket.sendall
+
+    def sendall(sock, data, *a):
+        try:
+            if sock.getsockname()[1] == server.port:
+                seen.append(sock)
+        except OSError:
+            pass
+        return orig(sock, data, *a)
+
+    monkeypatch.setattr(socket.socket, "sendall", sendall)
+    client.ping()
+    assert seen
+    nodelay = (socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    assert seen[0].getsockopt(*nodelay) == 1
+    assert client.sock.getsockopt(*nodelay) == 1

@@ -572,3 +572,34 @@ def test_pgwire_startup_database_scopes_queries(pg, engine):
     assert any(t == b"E" and b"does not exist" in b for t, b in msgs2)
     s2.close()
     engine.spark.sql("DROP DATABASE pgdb1 CASCADE")
+
+
+def _record_server_sends(monkeypatch, port):
+    """Every sendall the server makes on ``port``: (socket, bytes)."""
+    sent = []
+    orig = socket.socket.sendall
+
+    def sendall(sock, data, *a):
+        try:
+            if sock.getsockname()[1] == port:
+                sent.append((sock, bytes(data)))
+        except OSError:
+            pass
+        return orig(sock, data, *a)
+
+    monkeypatch.setattr(socket.socket, "sendall", sendall)
+    return sent
+
+
+def test_pgwire_one_row_select_is_one_write_without_nagle(pg, monkeypatch):
+    s = _connect(pg.port)
+    sent = _record_server_sends(monkeypatch, pg.port)
+    s.sendall(_query_packet("SELECT 1 AS one"))
+    msgs = _read_messages(s)
+    assert [t for t, _ in msgs] == [b"T", b"D", b"C", b"Z"]
+    # the response, then ReadyForQuery
+    assert len(sent) <= 2
+    conn = sent[0][0]
+    assert conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY) == 1
+    s.sendall(b"X" + struct.pack("!I", 4))
+    s.close()

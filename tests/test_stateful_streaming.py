@@ -162,6 +162,33 @@ def test_value_histogram_per_key_tws(spark):
     assert latest[(2, 0)].total_sum == 27.0
 
 
+def test_value_histogram_per_key_skips_nan_and_null(spark):
+    from ranger_spark.streaming.stateful import value_histogram_per_key
+
+    tmp = Path(tempfile.mkdtemp(prefix="tws_hist_nan_"))
+    with open(tmp / "b0.json", "w") as f:
+        for u, v, t in [(1, 2.0, 1), (1, float("nan"), 2), (1, 7.0, 3),
+                        (1, None, 4)]:
+            # json.dumps writes NaN, which Spark's reader accepts
+            f.write(json.dumps({"user_id": u, "value": v, "ts_ns": t}) + "\n")
+    stream = spark.readStream.schema(SCHEMA).json(str(tmp))
+    out = value_histogram_per_key(stream, bucket_width=5.0)
+    q = (
+        out.writeStream.format("memory")
+        .queryName("tws_hist_nan")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = {
+        r.bucket: (r.bucket_count, r.total_count, r.total_sum)
+        for r in spark.table("tws_hist_nan").collect()
+    }
+    assert rows == {0: (1, 2, 9.0), 1: (1, 2, 9.0)}
+
+
 def test_inactivity_flush_per_key_tws(spark):
     import time
 

@@ -49,6 +49,9 @@ def profile(
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
             "spark.sql.legacy.parquet.nanosAsLong": "true",
+            # 64x profiles with the event log need more than the
+            # session default of 8g
+            "spark.driver.memory": "16g",
         },
     )
 
