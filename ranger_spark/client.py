@@ -18,6 +18,8 @@ import threading
 import urllib.request
 from dataclasses import dataclass, field
 
+from ranger_spark import sqltext
+
 
 @dataclass
 class ClientResult:
@@ -145,8 +147,7 @@ def _lit(v) -> str:
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):
         return repr(v)
-    s = str(v).replace("'", "''")
-    return f"'{s}'"
+    return sqltext.quote(str(v))
 
 
 class LakehouseClient:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
+from ranger_spark import sqltext
 from ranger_spark import types as itypes
 from ranger_spark.errors import (
     ALREADY_EXISTS,
@@ -39,6 +40,7 @@ from ranger_spark.errors import (
 )
 from ranger_spark.frames import local_frame
 from ranger_spark.router import Routed, StmtKind, route
+from ranger_spark.sqltext import split_statements
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
 
 RESULT_CAP = 100_000  # reference duckdb/engine.go:395-400
@@ -718,7 +720,7 @@ class Engine:
     def execute_script(self, script: str) -> list[QueryResult]:
         """Execute a multi-statement script in order (≈ the reference SDK's
         batch execution, pkg/sdk/client.go Query/Exec surface). Statements
-        are split on semicolons outside string literals; execution stops at
+        are split on semicolons in code (sqltext); execution stops at
         the first error (the reference has no transactions to roll back —
         BEGIN/COMMIT are no-ops there and here)."""
         return [self.execute(stmt + ";") for stmt in split_statements(script)]
@@ -1083,10 +1085,10 @@ class Engine:
         # literals (the engine's strict INSERT validation types cells, so
         # pgwire's quote-everything text format would reject '9' for an
         # int32); quoted strings keep their quoting. Same single-pass
-        # tokenizer spans as pgwire — a value containing '$1' stays data.
+        # binding as pgwire — a value containing '$1' stays data.
         frags: list[str] = []
         if m.group(2) is not None and m.group(2).strip():
-            for raw in itypes.split_top_level(m.group(2)):
+            for raw in sqltext.split(m.group(2)):
                 raw = raw.strip()
                 if (
                     raw.upper() in ("NULL", "TRUE", "FALSE")
@@ -1095,17 +1097,8 @@ class Engine:
                 ):
                     frags.append(raw)
                 else:
-                    frags.append("'" + raw.replace("'", "''") + "'")
-        from ranger_spark.sources.pgwire_server import _scan_placeholders
-
-        out: list[str] = []
-        last = 0
-        for start, end, i in _scan_placeholders(body):
-            out.append(body[last:start])
-            out.append(frags[i - 1] if 1 <= i <= len(frags) else body[start:end])
-            last = end
-        out.append(body[last:])
-        return self.execute("".join(out) + ";")
+                    frags.append(sqltext.quote(raw))
+        return self.execute(sqltext.bind(body, frags) + ";")
 
     def _deallocate_stmt(self, sql: str) -> QueryResult:
         m = re.match(
@@ -1260,24 +1253,24 @@ class Engine:
                 self._result_cache.popitem(last=False)
         return qr
 
+    _SYSTEM_REF = re.compile(r"\bsystem(?=\.)", re.I)
+
     def _rewrite_system(self, sql: str) -> str:
         """Route `system.X` references to registered system views
         (≈ reference substring check, registry/system/manager.go:302-309).
-        Only identifier positions are rewritten: the text is split on
-        single-quoted literals first, so a string like 'system.users'
-        in a WHERE clause passes through untouched (the reference never
+        Only code is rewritten, so a string like 'system.users' in a
+        WHERE clause passes through untouched (the reference never
         mutates literal content — it only substring-detects to route)."""
-        # odd indices of the split are quoted literals ('' = escaped quote)
-        parts = re.split(r"('(?:[^']|'')*')", sql)
-        if any(
-            re.search(r"\bsystem\.", p, re.I) for p in parts[::2]
-        ):
-            self.refresh_system_views()
-            sql = "".join(
-                p if i % 2 else re.sub(r"\bsystem\.", "system_", p, flags=re.I)
-                for i, p in enumerate(parts)
-            )
-        return sql
+        if not self._SYSTEM_REF.search(sql):
+            return sql
+        dots = [m.end() for m in self._SYSTEM_REF.finditer(sqltext.blank(sql))]
+        if not dots:
+            return sql
+        self.refresh_system_views()
+        chars = list(sql)
+        for i in dots:
+            chars[i] = "_"  # system.X -> system_X, same length
+        return "".join(chars)
 
     # ------------------------------------------------------------ DDL path
     # ------------------------------------------------ time travel (exceeds)
@@ -1292,14 +1285,14 @@ class Engine:
         up = sql.upper()
         if "AS OF" not in up and "CHANGES SINCE" not in up:
             return sql
-        parts = re.split(r"('(?:[^']|'')*')", sql)
+        parts = [(s.kind, sql[s.start : s.end]) for s in sqltext.spans(sql)]
         out: list[str] = []
         i = 0
         while i < len(parts):
-            seg = parts[i]
-            if i % 2 == 1:  # quoted literal
+            kind, seg = parts[i]
+            i += 1
+            if kind != sqltext.CODE:
                 out.append(seg)
-                i += 1
                 continue
             seg = re.sub(
                 r"\b([A-Za-z_][\w.]*)\s+VERSION\s+AS\s+OF\s+(\d+)",
@@ -1318,30 +1311,21 @@ class Engine:
                 seg,
                 flags=re.I,
             )
+            # TIMESTAMP AS OF 'ts', or VERSION AS OF 'tag' (a named
+            # Iceberg ref): the value is the next, quoted, span
             m = re.search(
-                r"\b([A-Za-z_][\w.]*)\s+TIMESTAMP\s+AS\s+OF\s*$", seg, re.I
+                r"\b([A-Za-z_][\w.]*)\s+(TIMESTAMP|VERSION)\s+AS\s+OF\s*$",
+                seg,
+                re.I,
             )
-            if m and i + 1 < len(parts):
-                # the timestamp is the next (quoted) segment
-                view = self._time_travel_view(
-                    m.group(1), ts=parts[i + 1][1:-1]
+            if m and i < len(parts) and parts[i][0] == sqltext.STRING:
+                value = sqltext.unquote(parts[i][1])
+                by = "ts" if m.group(2).upper() == "TIMESTAMP" else "tag"
+                seg = seg[: m.start()] + self._time_travel_view(
+                    m.group(1), **{by: value}
                 )
-                out.append(seg[: m.start()] + view)
-                i += 2
-                continue
-            m = re.search(
-                r"\b([A-Za-z_][\w.]*)\s+VERSION\s+AS\s+OF\s*$", seg, re.I
-            )
-            if m and i + 1 < len(parts):
-                # quoted version = a named tag (Iceberg ref)
-                view = self._time_travel_view(
-                    m.group(1), tag=parts[i + 1][1:-1]
-                )
-                out.append(seg[: m.start()] + view)
-                i += 2
-                continue
+                i += 1
             out.append(seg)
-            i += 1
         return "".join(out)
 
     def _time_travel_view(
@@ -1828,18 +1812,9 @@ class Engine:
             raise RangerError(UNSUPPORTED_STATEMENT, f"cannot parse: {sql!r}")
         if_not_exists = bool(head.group(1))
         name = self._qualify(head.group(2))
-        # column list = balanced parens starting at head.end()-1
-        depth, i = 0, head.end() - 1
-        start = i
-        while i < len(sql):
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+        start = head.end() - 1
+        i = sqltext.matching_paren(sql, start)
+        if i < 0:
             raise RangerError(UNSUPPORTED_STATEMENT, "unbalanced parens in DDL")
         col_block, tail = sql[start + 1 : i], sql[i + 1 :]
 
@@ -2241,8 +2216,7 @@ class Engine:
                         "be combined with clustered_by (bucketed files "
                         "need Spark's bucket-id naming)",
                     )
-        prop_str = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
-        ddl += f" TBLPROPERTIES ({prop_str})"
+        ddl += _tblproperties(props)
         # explicit LOCATION so the table survives catalog loss and
         # recover() can re-register it (reference registry durability);
         # the root follows the STORAGE clause (s3 → configured bucket root)
@@ -2367,7 +2341,8 @@ class Engine:
 
     def _parse_table_options(self, tail: str) -> dict:
         opts = {"storage": "filesystem", "partition_by": [], "order_by": [], "settings": {}}
-        m = re.search(r"\bSTORAGE\s+(\w+)", tail, re.I)
+        code = sqltext.blank(tail)  # clauses are found in code only
+        m = re.search(r"\bSTORAGE\s+(\w+)", code, re.I)
         if m:
             engine = m.group(1).lower()
             if engine not in ("filesystem", "memory", "s3"):
@@ -2375,22 +2350,23 @@ class Engine:
                     UNSUPPORTED_STATEMENT, f"unknown storage engine '{engine}'"
                 )
             opts["storage"] = engine
-        m = re.search(r"\bPARTITION\s+BY\s*\(([^)]*)\)", tail, re.I)
+        m = re.search(r"\bPARTITION\s+BY\s*\(([^)]*)\)", code, re.I)
         if m:
             opts["partition_by"] = [c.strip() for c in m.group(1).split(",")]
-        m = re.search(r"\bORDER\s+BY\s*\(([^)]*)\)", tail, re.I)
+        m = re.search(r"\bORDER\s+BY\s*\(([^)]*)\)", code, re.I)
         if m:
             opts["order_by"] = [c.strip() for c in m.group(1).split(",")]
-        m = re.search(r"\bSETTINGS\s+(.+)$", tail, re.I | re.S)
+        m = re.search(r"\bSETTINGS\s+(.+)$", code, re.I | re.S)
         if m:
             # key = value pairs; quoted values may contain commas
             # (column_compression = 'a:zstd, b:gzip')
-            for kv in re.finditer(
-                r"(\w+)\s*=\s*('(?:[^']|'')*'|\"[^\"]*\"|[^,]+)", m.group(1)
-            ):
-                opts["settings"][kv.group(1).strip()] = (
-                    kv.group(2).strip().strip("'\"")
-                )
+            for item in sqltext.split(tail[m.start(1) :]):
+                kv = re.match(r"\s*(\w+)\s*=\s*(.*?)\s*$", item, re.S)
+                if kv and kv.group(2):
+                    v = kv.group(2)
+                    opts["settings"][kv.group(1)] = (
+                        sqltext.unquote(v) if v[0] in "'\"" else v
+                    )
         return opts
 
     def _drop_table(self, sql: str) -> QueryResult:
@@ -2437,8 +2413,8 @@ class Engine:
 
     # --------------------------------------------------------- insert path
     _VALUE_TOKEN = re.compile(
-        r"""\s*(?:
-            '(?P<str>(?:[^']|'')*)'            |
+        rf"""\s*(?:
+            (?P<str>{sqltext.STRING_LITERAL})  |
             (?P<num>[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?) |
             (?P<kw>NULL|TRUE|FALSE|SYS_DATE|SYS_TIME|SYS_TIMESTAMP|GENERATE_UUID)
         )\s*""",
@@ -2618,39 +2594,23 @@ class Engine:
         )
 
     def _parse_value_rows(self, text: str) -> list[list]:
-        rows, i, n = [], 0, len(text)
-        while i < n:
-            while i < n and text[i] in " \t\r\n,":
-                i += 1
-            if i >= n:
-                break
-            if text[i] != "(":
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT, f"expected '(' in VALUES at: {text[i:i+20]!r}"
-                )
-            depth, j = 0, i
-            while j < n:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                elif text[j] == "'":  # skip string literal
-                    j += 1
-                    while j < n and not (
-                        text[j] == "'" and (j + 1 >= n or text[j + 1] != "'")
-                    ):
-                        j += 2 if text[j] == "'" else 1
-                j += 1
-            row_text = text[i + 1 : j]
-            rows.append(self._parse_row_values(row_text))
-            i = j + 1
-        return rows
-
-    def _parse_row_values(self, row_text: str) -> list:
+        try:
+            rows = sqltext.split_rows(text)
+        except ValueError as e:  # unbalanced parentheses
+            raise RangerError(UNSUPPORTED_STATEMENT, str(e)) from None
         values = []
-        for tok in itypes.split_top_level(row_text):
+        for off, cells in rows:
+            if cells is None:
+                raise RangerError(
+                    UNSUPPORTED_STATEMENT,
+                    f"expected '(' in VALUES at: {text[off:off + 20]!r}",
+                )
+            values.append(self._parse_row_values(cells))
+        return values
+
+    def _parse_row_values(self, cells: list[str]) -> list:
+        values = []
+        for tok in cells:
             tok = tok.strip()
             m = self._VALUE_TOKEN.fullmatch(tok)
             if not m:
@@ -2660,7 +2620,7 @@ class Engine:
                     "accepts literals, NULL, SYS_*, GENERATE_UUID only)",
                 )
             if m.group("str") is not None:
-                values.append(m.group("str").replace("''", "'"))
+                values.append(sqltext.unquote(m.group("str")))
             elif m.group("num") is not None:
                 t = m.group("num")
                 values.append(float(t) if ("." in t or "e" in t.lower()) else int(t))
@@ -2771,7 +2731,7 @@ class Engine:
             obs, F.sum(F.when(cond_col, 1).otherwise(0)).alias("n_hit")
         )
         dtypes = dict(df.dtypes)
-        for part in itypes.split_top_level(sets):
+        for part in sqltext.split(sets):
             col, val = part.split("=", 1)
             col = col.strip()
             if col not in dtypes:
@@ -2860,20 +2820,12 @@ class Engine:
         t_alias = head.group(2) or head.group(3) or name.split(".")[-1]
 
         rest = sql[head.end():].lstrip()
-        if rest.startswith("("):  # subquery source — balanced-paren scan
-            depth, i, in_str = 0, 0, False
-            for i, ch in enumerate(rest):
-                if in_str:
-                    in_str = ch != "'"
-                    continue
-                if ch == "'":
-                    in_str = True
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
+        if rest.startswith("("):  # subquery source
+            i = sqltext.matching_paren(rest, 0)
+            if i < 0:
+                raise RangerError(
+                    UNSUPPORTED_STATEMENT, f"cannot parse: {sql!r}"
+                )
             src_df = self.spark.sql(self._rewrite_system(rest[1:i]))
             rest, s_default = rest[i + 1 :].lstrip(), "src"
         else:
@@ -2915,7 +2867,7 @@ class Engine:
                 sets = None
                 if mm.group(2) is not None:
                     sets = {}
-                    for part in itypes.split_top_level(mm.group(2)):
+                    for part in sqltext.split(mm.group(2)):
                         col, val = part.split("=", 1)
                         col = col.strip()
                         if col.lower().startswith(t_alias.lower() + "."):
@@ -2933,7 +2885,7 @@ class Engine:
                 cols = vals = None
                 if nm.group(2) is not None:
                     cols = [c.strip() for c in nm.group(2).split(",")]
-                    vals = itypes.split_top_level(nm.group(3))
+                    vals = sqltext.split(nm.group(3))
                     if len(cols) != len(vals):
                         raise RangerError(
                             VALIDATION_FAILED,
@@ -3283,8 +3235,7 @@ class Engine:
         if part_by:
             ddl += " PARTITIONED BY (" + ", ".join(part_by) + ")"
         if props:
-            prop_str = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
-            ddl += f" TBLPROPERTIES ({prop_str})"
+            ddl += _tblproperties(props)
         ddl += f" LOCATION '{location}'"
         self.spark.sql(f"DROP TABLE {name}")
         self.spark.sql(ddl)
@@ -3523,9 +3474,9 @@ class Engine:
         if re.search(r"\(\s*DISTINCT\b", body, re.I):
             return None  # COUNT(DISTINCT ...) is not sum-mergeable
         norm = lambda s: re.sub(r"\s+", " ", s.strip()).lower()  # noqa: E731
-        group_exprs = [norm(g) for g in itypes.split_top_level(group)]
+        group_exprs = [norm(g) for g in sqltext.split(group)]
         aggs: dict[str, str] = {}
-        for item in itypes.split_top_level(items):
+        for item in sqltext.split(items):
             item = item.strip()
             am = self._MV_AGG_RE.match(item)
             if am:
@@ -4055,8 +4006,7 @@ class Engine:
         if part_by:
             ddl += " PARTITIONED BY (" + ", ".join(part_by) + ")"
         if props:
-            prop_str = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
-            ddl += f" TBLPROPERTIES ({prop_str})"
+            ddl += _tblproperties(props)
         ddl += f" LOCATION '{location}'"
         self.spark.sql(ddl)
         # partitioned tables re-order columns (partition cols last) — insert
@@ -4324,54 +4274,9 @@ class Engine:
         return self.spark.catalog.tableExists(name)
 
 
-def split_statements(script: str) -> list[str]:
-    """Split a SQL script on semicolons, respecting single-quoted strings
-    (with '' escapes)."""
-    return [s for s, _ in split_statements_with_offsets(script)]
-
-
-def split_statements_with_offsets(script: str) -> list[tuple[str, int]]:
-    """Like :func:`split_statements`, but each statement carries the
-    0-based character offset of its first non-whitespace character in the
-    original script — the anchor for (line, column) error reporting
-    (≈ reference parser position tracking, parser/position.go)."""
-    out: list[tuple[str, int]] = []
-    buf: list[str] = []
-    start = -1  # offset of the first non-space char of the current stmt
-    i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if ch == "'":
-            if start < 0:
-                start = i
-            buf.append(ch)
-            i += 1
-            while i < n:
-                buf.append(script[i])
-                if script[i] == "'":
-                    if i + 1 < n and script[i + 1] == "'":
-                        buf.append("'")
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-            continue
-        if ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                out.append((stmt, start))
-            buf = []
-            start = -1
-        else:
-            if start < 0 and not ch.isspace():
-                start = i
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append((tail, start))
-    return out
+def _tblproperties(props: dict) -> str:
+    pairs = (f"{sqltext.quote(k)}={sqltext.quote(str(v))}" for k, v in props.items())
+    return f" TBLPROPERTIES ({', '.join(pairs)})"
 
 
 def _coerce(v, dtype: st.DataType):

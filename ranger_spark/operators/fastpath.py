@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ranger_spark import sqltext
+
 # Pruned-input bytes above which the distributed plan is kept. The
 # bound is set by DRIVER COMPUTE, not pull cost: measured on the 16×
 # bench replica, a 173 MB six-column aggregate ran 3.5× slower on the
@@ -60,7 +62,7 @@ def _sql_literal(v) -> str:
     if isinstance(v, int):
         return str(v)
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        return sqltext.quote(v)
     raise TypeError(f"unsupported VALUES literal type {type(v).__name__}")
 
 
@@ -165,50 +167,14 @@ def local_parquet_agg(
     )
     if size > max_bytes:
         return None
+    import pyarrow.parquet as pq
+
     try:
-        tbl = _cached_pruned_scan(path.removeprefix("file://"), columns)
+        tbl = pq.read_table(path.removeprefix("file://"), columns=columns)
     except Exception:  # unreadable locally → distributed path
         return None
     rows = compute(tbl)
     if not rows:
         return None
     return values_relation(spark, rows, select_exprs)
-
-
-# Pruned-scan cache: (realpath, mtime, columns) → pyarrow.Table. The
-# driver-side analogue of Spark's ``df.cache()`` on a scanned table —
-# repeated small-regime queries skip the parquet decode, and the mtime
-# key invalidates on rewrite. Bounded (entries + bytes): this caches
-# *pruned inputs* already under ARROW_LOCAL_MAX_BYTES, never results.
-# (There is deliberately NO result/plan cache here: a prior round's
-# result-plan memo made timed bench loops serve a cached VALUES relation
-# instead of computing — retired per VERDICT r14. Every call recomputes
-# the aggregate; only the pruned input bytes may be reused, and even
-# that is switched off under RANGER_FASTPATH_NO_CACHE=1, which bench.py
-# sets so every timed iteration reads the parquet afresh.)
-_SCAN_CACHE: dict = {}
-_SCAN_CACHE_MAX_ENTRIES = 8
-_SCAN_CACHE_MAX_BYTES = 1 << 30
-
-
-def _cached_pruned_scan(path: str, columns: list[str]):
-    import os
-
-    import pyarrow.parquet as pq
-
-    real = os.path.realpath(path)
-    if os.environ.get("RANGER_FASTPATH_NO_CACHE") == "1":
-        return pq.read_table(real, columns=columns)
-    key = (real, os.path.getmtime(real), tuple(columns))
-    tbl = _SCAN_CACHE.get(key)
-    if tbl is None:
-        tbl = pq.read_table(real, columns=columns)
-        while (
-            len(_SCAN_CACHE) >= _SCAN_CACHE_MAX_ENTRIES
-            or sum(t.nbytes for t in _SCAN_CACHE.values()) + tbl.nbytes
-            > _SCAN_CACHE_MAX_BYTES
-        ) and _SCAN_CACHE:
-            _SCAN_CACHE.pop(next(iter(_SCAN_CACHE)))
-        _SCAN_CACHE[key] = tbl
-    return tbl
 

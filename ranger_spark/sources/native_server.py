@@ -70,6 +70,7 @@ import zlib
 
 import pyarrow as pa
 
+from ranger_spark import sqltext
 from ranger_spark.engine import RESULT_CAP, Engine
 from ranger_spark.frames import local_frame
 
@@ -602,48 +603,20 @@ _DML_KEYWORDS = re.compile(
 )
 
 
-def _strip_sql_literals(sql: str) -> str:
-    """Blank out quoted string literals (both '' and \"\" forms, with ''
-    escape doubling) so keyword scans can't be confused by literal text."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            quote = ch
-            i += 1
-            while i < n:
-                if sql[i] == quote:
-                    if i + 1 < n and sql[i + 1] == quote:  # '' escape
-                        i += 2
-                        continue
-                    break
-                i += 1
-            out.append(" ")
-            i += 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
 def _is_read_only_sql(sql: str) -> bool:
-    """Read-only classification for permission checks.
+    """Read-only classification for permission checks, made on code
+    text: literals and comments are blanked first, exactly where Spark's
+    lexer finds them.
 
     A bare prefix test is bypassable: Spark SQL accepts CTE-DML
     (``WITH x AS (...) INSERT INTO t ...``), so a statement starting
-    with WITH can still write. For WITH statements, scan the remainder
-    (string literals blanked) for DML/DDL keywords — any hit means the
-    statement can mutate and is NOT read-only."""
-    head = sql.lstrip()
-    up = head.upper()
-    if not up.startswith(_READ_ONLY_PREFIXES):
+    with WITH can still write. For WITH statements, scan the code for
+    DML/DDL keywords — any hit means the statement can mutate and is
+    NOT read-only."""
+    code = sqltext.blank(sql).lstrip().upper()
+    if not code.startswith(_READ_ONLY_PREFIXES):
         return False
-    if up.startswith("WITH") and _DML_KEYWORDS.search(
-        _strip_sql_literals(head)
-    ):
-        return False
-    return True
+    return not (code.startswith("WITH") and _DML_KEYWORDS.search(code))
 
 
 
@@ -655,7 +628,7 @@ def insert_string_block(
     ClientData and pgwire COPY-in shape): render each value against the
     declared column type — verified bare numeric literals splice
     unquoted (the strict INSERT validator's requirement), everything
-    else goes through _sql_lit so a malicious value can never reshape
+    else goes through sqltext.quote so a malicious value can never reshape
     the VALUES list; None → NULL. Payloads above INSERT_CHUNK_ROWS skip
     SQL rendering entirely and land through ONE typed DataFrame append
     (values validated against the declared types BEFORE the commit) —
@@ -690,7 +663,7 @@ def insert_string_block(
             elif t.startswith(numeric) and _NUM_LIT.fullmatch(str(v)):
                 parts.append(str(v))
             else:
-                parts.append(_sql_lit(v))
+                parts.append(sqltext.quote(str(v)))
         lits.append("(" + ", ".join(parts) + ")")
     cols = ", ".join(columns)
     engine.execute(
@@ -1189,13 +1162,6 @@ class NativeServer:
 _NUM_LIT = re.compile(
     r"[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][+-]?\d+)?|true|false", re.I
 )
-
-
-def _sql_lit(v: str) -> str:
-    if v is None:
-        return "NULL"
-    s = str(v).replace("'", "''")
-    return f"'{s}'"
 
 
 # ---------------------------------------------------------------- client

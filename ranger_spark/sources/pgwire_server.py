@@ -33,6 +33,7 @@ import socket
 import struct
 import threading
 
+from ranger_spark import sqltext
 from ranger_spark.engine import Engine
 from ranger_spark.sources.native_server import insert_string_block
 
@@ -119,70 +120,22 @@ def _read_bind(payload: bytes) -> tuple[str, str, list[str | None]]:
     return portal, stmt, params
 
 
-def _scan_placeholders(sql: str) -> list[tuple[int, int, int]]:
-    """Single-pass tokenizer: find $n placeholders OUTSIDE quoted
-    regions. Skips '...' string literals (with '' doubling) and "..."
-    quoted identifiers — a $1 inside a literal is data, not a parameter
-    (Parse of ``SELECT '$1'`` must leave the literal untouched).
-    Returns (start, end, n) spans in order."""
-    spans: list[tuple[int, int, int]] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            quote = ch
-            i += 1
-            while i < n:
-                if sql[i] == quote:
-                    if i + 1 < n and sql[i + 1] == quote:
-                        i += 2
-                        continue
-                    break
-                i += 1
-            i += 1
-        elif ch == "$" and i + 1 < n and sql[i + 1].isdigit():
-            j = i + 1
-            while j < n and sql[j].isdigit():
-                j += 1
-            spans.append((i, j, int(sql[i + 1 : j])))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
 def _count_params(sql: str) -> int:
-    """Parameter count for ParameterDescription: max($n) outside
-    literals — gaps like $1,$3 still declare 3 parameters (Postgres
-    numbers by position, not by distinct occurrence)."""
-    spans = _scan_placeholders(sql)
-    return max((n for _, _, n in spans), default=0)
+    """Parameter count for ParameterDescription: max($n) in code — gaps
+    like $1,$3 still declare 3 parameters (Postgres numbers by position,
+    not by distinct occurrence)."""
+    return max((n for _, _, n in sqltext.placeholders(sql)), default=0)
 
 
 def _substitute_params(sql: str, params: list[str | None]) -> str:
     """Inline text-format $n parameters as quoted SQL literals (NULL for
-    absent values) in a SINGLE left-to-right pass over tokenizer spans —
-    replacements are never rescanned, so a parameter VALUE containing
-    '$1' stays data instead of triggering a second substitution (the
-    injection a sequential str.replace loop would allow; found by the
-    property test), and a $n inside a string literal of the prepared SQL
-    is never rewritten (tokenizer skips quoted regions). Spark's
-    implicit casts coerce '1' = 1 etc., matching text-format
-    semantics."""
-    out: list[str] = []
-    last = 0
-    for start, end, i in _scan_placeholders(sql):
-        out.append(sql[last:start])
-        if 1 <= i <= len(params):
-            v = params[i - 1]
-            out.append(
-                "NULL" if v is None else "'" + v.replace("'", "''") + "'"
-            )
-        else:  # out-of-range placeholder passes through
-            out.append(sql[start:end])
-        last = end
-    out.append(sql[last:])
-    return "".join(out)
+    absent values) in a single pass (``sqltext.bind``): a parameter
+    VALUE containing '$1' stays data, and a $n inside a literal or
+    comment of the prepared SQL is never rewritten. Spark's implicit
+    casts coerce '1' = 1 etc., matching text-format semantics."""
+    return sqltext.bind(
+        sql, ["NULL" if v is None else sqltext.quote(v) for v in params]
+    )
 
 
 _COPY_TEXT_ESCAPES = {

@@ -24,6 +24,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as st
 
+from ranger_spark import sqltext
 from ranger_spark.errors import (
     COMPLEX_TYPE_PARSE_ERROR,
     INVALID_ICEBERG_TYPE,
@@ -92,47 +93,13 @@ class IcebergType:
 
 
 def split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on separators not nested inside <...> or (...) — the behavior
-    of the reference's top-level-comma splitter. Content inside
-    single-quoted string literals (with '' escapes) is opaque: brackets
-    and separators there neither nest nor split (a VALUES row like
-    ``(1, 'a>b')`` must not trip bracket balancing)."""
-    parts, depth, buf = [], 0, []
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            buf.append(ch)
-            i += 1
-            while i < n:
-                buf.append(s[i])
-                if s[i] == "'":
-                    if i + 1 < n and s[i + 1] == "'":
-                        buf.append("'")
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-            continue
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-            if depth < 0:
-                raise RangerError(
-                    COMPLEX_TYPE_PARSE_ERROR, f"unbalanced brackets in {s!r}"
-                )
-        if ch == sep and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    if depth != 0:
-        raise RangerError(COMPLEX_TYPE_PARSE_ERROR, f"unbalanced brackets in {s!r}")
-    parts.append("".join(buf))
-    return parts
+    """Split a type string (or a CREATE TABLE column block) on separators
+    not nested inside <...> or (...) — the behavior of the reference's
+    top-level-comma splitter. Literals and comments are opaque."""
+    try:
+        return sqltext.split(s, sep, angle=True)
+    except ValueError as e:
+        raise RangerError(COMPLEX_TYPE_PARSE_ERROR, str(e)) from None
 
 
 def parse_type(text: str, column: str = "?") -> IcebergType:

@@ -1,9 +1,7 @@
 """Driver-side Arrow fast path (operators/fastpath.py): regime switch
-guards, VALUES-relation literal fidelity, and scan-cache invalidation.
+guards and VALUES-relation literal fidelity.
 The end-to-end value check is the oracle gate (date_extract /
 agg_minmax_countd run through this path at bench SFs)."""
-
-import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -64,26 +62,6 @@ def test_local_parquet_agg_and_threshold(spark, tmp_path):
         )
         is None
     )
-
-
-def test_scan_cache_mtime_invalidation(tmp_path):
-    f = str(tmp_path / "t.parquet")
-    pq.write_table(pa.table({"x": [1]}), f)
-    t1 = fastpath._cached_pruned_scan(f, ["x"])
-    assert fastpath._cached_pruned_scan(f, ["x"]) is t1  # cache hit
-    pq.write_table(pa.table({"x": [2]}), f)
-    os.utime(f, (1, 1))  # force distinct mtime even on coarse clocks
-    t2 = fastpath._cached_pruned_scan(f, ["x"])
-    assert t2["x"].to_pylist() == [2]
-
-
-def test_scan_cache_bounded(tmp_path):
-    fastpath._SCAN_CACHE.clear()
-    for i in range(fastpath._SCAN_CACHE_MAX_ENTRIES + 3):
-        f = str(tmp_path / f"t{i}.parquet")
-        pq.write_table(pa.table({"x": [i]}), f)
-        fastpath._cached_pruned_scan(f, ["x"])
-    assert len(fastpath._SCAN_CACHE) <= fastpath._SCAN_CACHE_MAX_ENTRIES
 
 
 def test_plan_size_bytes_estimates(spark):
@@ -152,9 +130,8 @@ def test_pruned_footer_bytes_and_gate(spark, tmp_path):
 
 def test_local_parquet_agg_never_memoizes_results(spark):
     """The result-plan memo was retired (VERDICT r14 #1): every call
-    must run ``compute`` again — a timed bench loop can never be served
-    a cached result plan. Only the pruned *input* bytes may be reused
-    (scan cache), and RANGER_FASTPATH_NO_CACHE=1 disables even that."""
+    must read the parquet and run ``compute`` again — a timed bench loop
+    can never be served a cached result plan or a cached input."""
     from ranger_spark.operators import fastpath
 
     calls = []
@@ -174,18 +151,3 @@ def test_local_parquet_agg_never_memoizes_results(spark):
     b = fastpath.local_parquet_agg(*args)
     assert a is not b and len(calls) == 2  # recomputed, not memoized
     assert a.collect()[0]["n"] == 5
-
-
-def test_scan_cache_env_bypass(tmp_path, monkeypatch):
-    """RANGER_FASTPATH_NO_CACHE=1 (set by bench.py) makes every pruned
-    scan re-read the parquet: no hit, no population."""
-    f = str(tmp_path / "t.parquet")
-    pq.write_table(pa.table({"x": [1, 2]}), f)
-    fastpath._SCAN_CACHE.clear()
-    monkeypatch.setenv("RANGER_FASTPATH_NO_CACHE", "1")
-    t1 = fastpath._cached_pruned_scan(f, ["x"])
-    t2 = fastpath._cached_pruned_scan(f, ["x"])
-    assert t1 is not t2 and len(fastpath._SCAN_CACHE) == 0
-    monkeypatch.delenv("RANGER_FASTPATH_NO_CACHE")
-    t3 = fastpath._cached_pruned_scan(f, ["x"])
-    assert fastpath._cached_pruned_scan(f, ["x"]) is t3  # cache back on

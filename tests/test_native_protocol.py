@@ -765,6 +765,13 @@ def test_auth_middleware_and_permissions(engine):
                 "WITH x AS (SELECT 1 AS id) "
                 "INSERT INTO default.auth_t SELECT id FROM x;"
             )
+        # ... also when an escaped quote or a comment hides the INSERT
+        # from a scanner that reads '' as the only escape
+        with pytest.raises(RuntimeError, match="insufficient_permissions"):
+            ro.query(
+                "WITH x AS (SELECT '\\'' AS a) "
+                "INSERT INTO default.auth_t SELECT 42 AS id --'"
+            )
         # plain CTE SELECT still works for readonly users
         r = ro.query("WITH x AS (SELECT 2 AS two) SELECT two FROM x;")
         assert r["rows"] == [("2",)]

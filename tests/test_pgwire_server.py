@@ -214,6 +214,32 @@ def test_pgwire_extended_protocol_prepared_statements(pg, engine):
     engine.spark.sql("DROP DATABASE pgx CASCADE")
 
 
+def test_pgwire_bound_parameters_stay_data(pg, engine):
+    """A backslash parameter must not escape its closing quote: with
+    ''-only quoting, '\\' ended the literal early and the second
+    parameter's text ran as SQL (OR 1=1), returning every owner's rows."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS p;")
+    engine.execute("DROP TABLE IF EXISTS p.secret;")
+    engine.execute("CREATE TABLE p.secret (owner string, v string);")
+    engine.execute(
+        "INSERT INTO p.secret (owner, v) VALUES ('alice', 'a1'), ('bob', 'b1');"
+    )
+    s = _connect(pg.port)
+    s.sendall(_parse_pkt(
+        "inj", "SELECT v FROM p.secret WHERE owner = $1 AND v <> $2"
+    ))
+    s.sendall(_bind_pkt("", "inj", ["\\", " OR 1=1 --"]))
+    s.sendall(_ext(b"E", b"\x00" + struct.pack("!i", 0)))
+    s.sendall(_ext(b"S", b""))
+    msgs = _read_messages(s)
+    assert not any(t == b"E" for t, _ in msgs), msgs
+    assert [t for t, _ in msgs if t == b"D"] == []
+    assert any(t == b"C" and b.startswith(b"SELECT 0") for t, b in msgs)
+    s.sendall(b"X")
+    s.close()
+    engine.spark.sql("DROP DATABASE p CASCADE")
+
+
 def _copy_data_msg(data: bytes) -> bytes:
     return b"d" + struct.pack("!I", len(data) + 4) + data
 

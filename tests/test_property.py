@@ -8,6 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ranger_spark.engine import split_statements
+from ranger_spark.sqltext import quote
 from ranger_spark.types import PRIMITIVES, parse_type
 
 primitive = st.sampled_from([p for p in PRIMITIVES])
@@ -42,13 +43,30 @@ def test_type_parse_roundtrip(t):
     assert again.text == parsed.text
 
 
+# statements made of complete lexemes: code without quote or comment
+# openers, quoted strings and identifiers, and closed comments — any of
+# which may hold a ';'
+_code_text = st.text(
+    alphabet=st.characters(
+        blacklist_characters=";'\"`-/rR", max_codepoint=0x7E
+    ),
+    min_size=1,
+    max_size=12,
+).filter(lambda s: s.strip())
+_lexeme = st.one_of(
+    _code_text,
+    st.text(max_size=10).map(quote),
+    st.text(alphabet="ab;'\"-/* ", max_size=8).map(lambda s: f"`{s}`"),
+    st.text(alphabet="ab;'\"`/* ", max_size=8).map(lambda s: f"--{s}\n"),
+    st.text(alphabet="ab;'\"`- ", max_size=8).map(lambda s: f"/*{s}*/"),
+)
+
+
 @given(
     st.lists(
-        st.text(
-            alphabet=st.characters(blacklist_characters=";'", max_codepoint=0x7E),
-            min_size=1,
-            max_size=30,
-        ).filter(lambda s: s.strip()),
+        st.tuples(_code_text, st.lists(_lexeme, max_size=4)).map(
+            lambda t: " ".join([t[0], *t[1]])
+        ),
         min_size=1,
         max_size=5,
     )
@@ -87,9 +105,7 @@ def test_insert_values_lexer_roundtrip(rows):
     quoted in, for arbitrary printable strings (including quotes/commas)."""
     from ranger_spark.engine import Engine
 
-    sql_rows = ", ".join(
-        f"({i}, '{s.replace(chr(39), chr(39) * 2)}')" for i, s in rows
-    )
+    sql_rows = ", ".join(f"({i}, {quote(s)})" for i, s in rows)
     eng = Engine.__new__(Engine)  # parsing methods don't touch Spark state
     parsed = eng._parse_value_rows(sql_rows)
     assert parsed == [[i, s] for i, s in rows]
@@ -224,8 +240,9 @@ def test_wire_compression_envelope_roundtrip(payload):
 @settings(max_examples=200, deadline=None)
 def test_pgwire_param_substitution_properties(params, base_sql):
     """$n substitution is a SINGLE pass: every placeholder OUTSIDE a
-    string literal is replaced exactly once, NULLs become NULL, quotes
-    are doubled, and '$k' text inside a parameter VALUE stays data
+    string literal is replaced exactly once, NULLs become NULL, values
+    are quoted as Spark reads them back (``quote``: backslashes and
+    quotes escaped), and '$k' text inside a parameter VALUE stays data
     (never re-substituted). (base_sql alphabet excludes quotes — quoted
     regions are covered by the dedicated literal tests below.)"""
     from ranger_spark.sources.pgwire_server import _substitute_params
@@ -233,7 +250,7 @@ def test_pgwire_param_substitution_properties(params, base_sql):
     sql = base_sql + "".join(f" ${i + 1}" for i in range(len(params)))
     out = _substitute_params(sql, params)
     expect = base_sql + "".join(
-        " " + ("NULL" if v is None else "'" + v.replace("'", "''") + "'")
+        " " + ("NULL" if v is None else quote(v))
         for v in params
     )
     assert out == expect

@@ -19,7 +19,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ranger_spark import sqltext  # noqa: E402
 from ranger_spark.client import LakehouseClient, RangerClient  # noqa: E402
+
+
+def _complete(buf: str) -> bool:
+    """A shell buffer is complete once its code ends with ';' — not a
+    ';' inside a string, an identifier or a comment."""
+    return sqltext.blank(buf).rstrip().endswith(";")
 
 
 def _print_result(r) -> None:
@@ -88,14 +95,14 @@ def main(argv: list[str] | None = None) -> int:
                     break
                 if buf.strip() in ("\\q", "exit", "quit"):
                     break
-                if buf.rstrip().endswith(";"):
+                if _complete(buf):
                     try:
                         _print_result(lc.execute_query(buf))
                     except Exception as e:
                         print(f"error: {e}")
                     buf = ""
                 else:
-                    buf += " "
+                    buf += "\n"  # line comments end at the line
         elif args.cmd == "import":
             lc.import_file(args.file, args.table, overwrite=args.overwrite)
             print(f"imported {args.file} into {args.table}")
@@ -161,14 +168,14 @@ def _connect_main(args) -> int:
                     break
                 if buf.strip() in ("\\q", "exit", "quit"):
                     break
-                if buf.rstrip().endswith(";"):
+                if _complete(buf):
                     try:
                         _print_arrow(client.sql(buf.rstrip().rstrip(";")))
                     except Exception as e:
                         print(f"error: {e}")
                     buf = ""
                 else:
-                    buf += " "
+                    buf += "\n"  # line comments end at the line
         else:
             print(
                 f"error: '{args.cmd}' needs the gateway HTTP surface — "
