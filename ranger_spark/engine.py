@@ -39,7 +39,7 @@ from ranger_spark.errors import (
     RangerError,
 )
 from ranger_spark.frames import local_frame
-from ranger_spark.router import Routed, StmtKind, route
+from ranger_spark.router import QUERY_KINDS, Routed, StmtKind, route
 from ranger_spark.sqltext import split_statements
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
 
@@ -70,8 +70,9 @@ class QueryInfo:
     query_id: str
     sql: str
     status: str = "running"  # running | done | error | cancelled
-    started_at: float = field(default_factory=time.time)
-    finished_at: float | None = None
+    started_at: float = field(default_factory=time.time)  # for display
+    started_pc: float = field(default_factory=time.perf_counter)
+    duration_s: float | None = None
 
 
 class ExecutionManager:
@@ -101,7 +102,7 @@ class ExecutionManager:
             # keep 'cancelled' so it stays distinguishable from failure.
             if qi.status != "cancelled":
                 qi.status = status
-            qi.finished_at = time.time()
+            qi.duration_s = time.perf_counter() - qi.started_pc
             if self._running.pop(qi.query_id, None) is not None:
                 self._finished.append(qi)
         self.spark.sparkContext.setJobGroup("", "")
@@ -728,8 +729,8 @@ class Engine:
     # ------------------------------------------------------------- dispatch
     def _dispatch(self, r: Routed) -> QueryResult:
         k = r.kind
-        if k in (StmtKind.SELECT, StmtKind.WITH_SELECT, StmtKind.EXPLAIN):
-            sql = self._rewrite_system(r.sql)
+        if k in QUERY_KINDS:
+            sql = r.sql
             if not self.strict_gate:
                 # VERSION AS OF / TIMESTAMP AS OF — exceeds the reference
                 sql = self._rewrite_time_travel(sql)
@@ -740,24 +741,11 @@ class Engine:
                     sql,
                 )
                 if mp:
-                    if self.strict_gate:
-                        # PIPELINE itself is non-strict; its EXPLAIN too
-                        raise RangerError(
-                            UNSUPPORTED_STATEMENT,
-                            "unsupported statement type: EXPLAIN PIPELINE",
-                        )
                     return self._explain_pipeline(
                         mp.group(2), mp.group(3), analyze=bool(mp.group(1))
                     )
                 m = re.match(r"(?is)^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql)
                 if m:
-                    if self.strict_gate:
-                        # exceeds the reference (its EXPLAIN is DuckDB's
-                        # static plan) — strict mode keeps parity
-                        raise RangerError(
-                            UNSUPPORTED_STATEMENT,
-                            "unsupported statement type: EXPLAIN ANALYZE",
-                        )
                     return self._explain_analyze(m.group(1))
                 return self._read(sql)
             finally:
@@ -817,34 +805,13 @@ class Engine:
             return QueryResult([], [], 0, message=f"{r.sql.upper()} is a no-op")
         if k == StmtKind.ALTER:
             # the reference parses ALTER but cannot execute it
-            # (engine.go:121-144 has no case); we exceed — SURVEY §2.2 —
-            # unless strict_gate replicates the reference exactly
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type (parsed but not executable): ALTER",
-                )
+            # (engine.go:121-144 has no case); we exceed — SURVEY §2.2
             return self._alter_table(r.sql)
         if k == StmtKind.SHOW_SNAPSHOTS:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: SHOW SNAPSHOTS",
-                )
             return self._show_snapshots(r.sql)
         if k == StmtKind.OPTIMIZE:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: OPTIMIZE",
-                )
             return self._optimize(r.sql)
         if k == StmtKind.EXPIRE_SNAPSHOTS:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: EXPIRE SNAPSHOTS",
-                )
             m = re.match(
                 r"EXPIRE\s+SNAPSHOTS\s+([\w.]+)(?:\s+KEEP\s+(\d+))?\s*$",
                 r.sql,
@@ -882,11 +849,6 @@ class Engine:
                 f"query '{qid}' is not running (unknown or finished)",
             )
         if k == StmtKind.VACUUM:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: VACUUM",
-                )
             # VACUUM t [RETAIN n SECONDS] — Iceberg remove_orphan_files:
             # delete data files no snapshot manifest references (leftovers
             # of failed writes that EXPIRE SNAPSHOTS can never reclaim),
@@ -928,11 +890,6 @@ class Engine:
                 message=f"removed {len(removed)} orphan file(s)",
             )
         if k == StmtKind.ANALYZE_TABLE:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: ANALYZE",
-                )
             # ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...] —
             # collect table/column statistics into the catalog so
             # Catalyst's cost-based optimizer (join reordering, broadcast
@@ -989,35 +946,13 @@ class Engine:
             )
         if k == StmtKind.MERGE:
             # not in the reference grammar at all (parser.go keyword table);
-            # executing it exceeds the reference — strict mode keeps parity
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: MERGE",
-                )
+            # executing it exceeds the reference
             return self._merge(r.sql)
         if k == StmtKind.PREPARE_STMT:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: PREPARE",
-                )
             return self._prepare_stmt(r.sql)
         if k == StmtKind.EXECUTE_STMT:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type: EXECUTE",
-                )
             return self._execute_stmt(r.sql)
         if k == StmtKind.DEALLOCATE_STMT:
-            if self.strict_gate:
-                # reference: cursor-family keyword, parse-only
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "unsupported statement type (parsed but not executable): "
-                    "DEALLOCATE",
-                )
             return self._deallocate_stmt(r.sql)
         if k == StmtKind.PARSE_ONLY:
             raise RangerError(
@@ -1157,10 +1092,10 @@ class Engine:
         executed, after any runtime re-planning / skew splitting) plus a
         one-line runtime summary. The query's rows are executed but not
         returned, matching EXPLAIN's result shape."""
-        return self._explain_analyze_df(self.spark.sql(inner_sql))
+        return self._explain_analyze_df(self.read_frame(inner_sql))
 
     def _explain_analyze_df(self, df) -> QueryResult:
-        t0 = time.time()
+        t0 = time.perf_counter()
         # Execute df's OWN queryExecution so the AdaptiveSparkPlan below
         # is the AQE-final plan Spark actually ran — df.count() would
         # execute a derived aggregate plan and leave df's executedPlan at
@@ -1175,7 +1110,7 @@ class Engine:
             )
         except Exception:  # py4j surface moved — correctness over speed
             n_rows = sum(1 for _ in df.toLocalIterator())
-        wall_ms = (time.time() - t0) * 1000.0
+        wall_ms = (time.perf_counter() - t0) * 1000.0
         plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
         lines = [(line,) for line in plan.rstrip("\n").split("\n")]
         lines.append((f"-- analyzed: {n_rows} rows, {wall_ms:.1f} ms wall",))
@@ -1202,8 +1137,23 @@ class Engine:
     _RESULT_CACHE_MAX = 32
     _RESULT_CACHE_MAX_ROWS = 10_000
 
+    def read_frame(self, body: str) -> DataFrame:
+        """The one way a client's query text reaches ``spark.sql``, which
+        runs commands eagerly: ``body`` must route as a query, so a write
+        hidden in it (CTE-DML, an INSERT as a MERGE source) is refused
+        before Spark sees it instead of landing around the snapshot
+        commit. ``system.X`` references are rewritten on the way."""
+        routed = route(body + ";")
+        if routed.kind not in QUERY_KINDS:
+            raise RangerError(
+                UNSUPPORTED_STATEMENT,
+                f"expected a query (SELECT, WITH ... SELECT or EXPLAIN), "
+                f"got {routed.kind.value.upper()}",
+            )
+        return self.spark.sql(self._rewrite_system(routed.sql))
+
     def _read(self, sql: str) -> QueryResult:
-        df = self.spark.sql(sql)
+        df = self.read_frame(sql)
         key = None
         refs_view = any(
             re.search(rf"\b{re.escape(v.split('.')[-1])}\b", sql, re.I)
@@ -2273,7 +2223,7 @@ class Engine:
             raise RangerError(UNSUPPORTED_STATEMENT, f"cannot parse: {sql!r}")
         if_not_exists = bool(m.group(1))
         name = self._qualify(m.group(2))
-        df = self.spark.sql(self._rewrite_system(m.group(3)))
+        df = self.read_frame(m.group(3))
         return self._materialize_df_as_table(name, df, if_not_exists)
 
     def _materialize_df_as_table(
@@ -2433,11 +2383,6 @@ class Engine:
         )
         overwrite = False
         if over:
-            if self.strict_gate:
-                raise RangerError(
-                    UNSUPPORTED_STATEMENT,
-                    "INSERT must be: INSERT INTO t (cols) VALUES (...), ...",
-                )
             overwrite = True
             sql = "INSERT INTO " + over.group(1)
         msel = re.match(
@@ -2541,7 +2486,7 @@ class Engine:
         name = self._qualify(m.group(1))
         if not self._table_exists(name):
             raise RangerError(TABLE_NOT_FOUND, f"table '{name}' not found")
-        src = self.spark.sql(self._rewrite_system(m.group(3)))
+        src = self.read_frame(m.group(3))
         schema = self.spark.table(name).schema
         field_by_name = {f.name: f for f in schema.fields}
         cols = (
@@ -2826,7 +2771,7 @@ class Engine:
                 raise RangerError(
                     UNSUPPORTED_STATEMENT, f"cannot parse: {sql!r}"
                 )
-            src_df = self.spark.sql(self._rewrite_system(rest[1:i]))
+            src_df = self.read_frame(rest[1:i])
             rest, s_default = rest[i + 1 :].lstrip(), "src"
         else:
             sm = re.match(r"([\w.]+)", rest)
@@ -3382,8 +3327,8 @@ class Engine:
     def _create_view(self, sql: str) -> QueryResult:
         """CREATE [OR REPLACE] VIEW name AS <select> — executable views
         (the reference only reserves the VIEW keyword, parser.go:49).
-        The body must route as a read statement (the CTE-DML gate
-        applies), so a view can never smuggle a write. Views live in the
+        The body must pass the statement gate (``read_frame``), so a
+        view can never smuggle a write. Views live in the
         session catalog — session-scoped like Spark temp state, queried
         through every protocol of this engine; durable tables remain the
         manifest's job."""
@@ -3398,14 +3343,6 @@ class Engine:
                 "CREATE VIEW syntax: CREATE [OR REPLACE] VIEW name AS SELECT ...",
             )
         replace, name, body = bool(m.group(1)), self._qualify(m.group(2)), m.group(3).strip()
-        from ranger_spark.router import StmtKind, route
-
-        body_kind = route(body + ";").kind
-        if body_kind not in (StmtKind.SELECT, StmtKind.WITH_SELECT):
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "view body must be a SELECT (or WITH ... SELECT) statement",
-            )
         if name in self._manifest["tables"]:
             raise RangerError(
                 ALREADY_EXISTS, f"table '{name}' exists; cannot shadow with a view"
@@ -3415,6 +3352,7 @@ class Engine:
         db = name.split(".", 1)[0]
         if not self._db_exists(db):
             raise RangerError(DATABASE_NOT_FOUND, f"database '{db}' not found")
+        self.read_frame(body)
         self.spark.sql(
             f"CREATE {'OR REPLACE ' if replace else ''}VIEW {name} AS {body}"
         )
@@ -3511,16 +3449,6 @@ class Engine:
                 "CREATE MATERIALIZED VIEW name AS SELECT ...",
             )
         name, body = self._qualify(m.group(1)), m.group(2).strip()
-        from ranger_spark.router import StmtKind, route
-
-        if route(body + ";").kind not in (
-            StmtKind.SELECT,
-            StmtKind.WITH_SELECT,
-        ):
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "materialized view body must be a SELECT statement",
-            )
         if self._table_exists(name) or name in self._manifest["tables"]:
             raise RangerError(ALREADY_EXISTS, f"table '{name}' exists")
         db = name.split(".", 1)[0]
@@ -3537,7 +3465,7 @@ class Engine:
             df = self._mv_eval_at(body, shape["src"], src, vt, src_version)
         else:
             shape = None  # no versioned source → no incremental path
-            df = self.spark.sql(self._rewrite_system(body))
+            df = self.read_frame(body)
 
         columns = [
             (f.name, itypes.from_spark_type(f.dataType, f.name), f.nullable)
@@ -3590,7 +3518,7 @@ class Engine:
         # the view must outlive the lazy plan; the consuming write calls
         # _mv_drop_pins() once the plan has materialized
         self._mv_pins.append(tmp)
-        return self.spark.sql(self._mv_rewrite_from(body, src_written, tmp))
+        return self.read_frame(self._mv_rewrite_from(body, src_written, tmp))
 
     def _refresh_mview(self, sql: str) -> QueryResult:
         m = re.match(
@@ -3645,7 +3573,7 @@ class Engine:
                 meta["body"], meta["src_written"], src, vt, cur
             )
         else:
-            df = self.spark.sql(self._rewrite_system(meta["body"]))
+            df = self.read_frame(meta["body"])
         target = self.spark.table(name).schema
         out = df.select(
             *[
@@ -3672,7 +3600,7 @@ class Engine:
         tmp = f"__mv_delta_{uuid_mod.uuid4().hex[:8]}"
         delta.createOrReplaceTempView(tmp)
         self._mv_pins.append(tmp)
-        delta_agg = self.spark.sql(
+        delta_agg = self.read_frame(
             self._mv_rewrite_from(meta["body"], meta["src_written"], tmp)
         )
         current = self.spark.table(name)
@@ -4163,8 +4091,10 @@ class Engine:
                 sql=q.sql[:200],
                 status=q.status,
                 started_at=float(q.started_at),
-                duration_s=float(
-                    (q.finished_at or time.time()) - q.started_at
+                duration_s=(
+                    q.duration_s
+                    if q.duration_s is not None
+                    else time.perf_counter() - q.started_pc
                 ),
             )
             for q in self.exec_mgr.list_queries()

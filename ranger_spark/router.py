@@ -529,6 +529,57 @@ def _show_describe_errors(
     return errors
 
 
+# The reference gate, for strict mode: statements this engine runs and
+# the reference cannot, by their leading words, with its rejection.
+_UNSUPPORTED = "unsupported statement type"
+_STRICT_REJECTS = (
+    ("WITH", f"{_UNSUPPORTED}: WITH (reference gate rejects CTEs)"),
+    ("KILL", f"{_UNSUPPORTED}: KILL"),
+    ("TRUNCATE ", f"{_UNSUPPORTED}: TRUNCATE"),
+    ("COPY ", f"{_UNSUPPORTED}: COPY"),
+    ("CREATE MATERIALIZED VIEW", f"{_UNSUPPORTED}: CREATE MATERIALIZED VIEW"),
+    ("REFRESH MATERIALIZED VIEW", f"{_UNSUPPORTED}: REFRESH MATERIALIZED VIEW"),
+    ("DROP MATERIALIZED VIEW", f"{_UNSUPPORTED}: DROP MATERIALIZED VIEW"),
+    ("SHOW MATERIALIZED VIEWS", f"{_UNSUPPORTED}: SHOW MATERIALIZED VIEWS"),
+    ("CREATE VIEW", f"{_UNSUPPORTED}: CREATE VIEW"),
+    ("CREATE OR REPLACE VIEW", f"{_UNSUPPORTED}: CREATE VIEW"),
+    ("DROP VIEW", f"{_UNSUPPORTED}: DROP VIEW"),
+    ("SHOW PIPELINES", f"{_UNSUPPORTED}: SHOW PIPELINES"),
+    ("PIPELINE ", f"{_UNSUPPORTED}: PIPELINE"),
+    ("EXPLAIN PIPELINE ", f"{_UNSUPPORTED}: EXPLAIN PIPELINE"),
+    ("EXPLAIN ANALYZE PIPELINE ", f"{_UNSUPPORTED}: EXPLAIN PIPELINE"),
+    ("EXPLAIN ANALYZE", f"{_UNSUPPORTED}: EXPLAIN ANALYZE"),
+    ("INSERT OVERWRITE", "INSERT must be: INSERT INTO t (cols) VALUES (...), ..."),
+    ("ALTER", f"{_UNSUPPORTED} (parsed but not executable): ALTER"),
+    ("SHOW SNAPSHOTS", f"{_UNSUPPORTED}: SHOW SNAPSHOTS"),
+    ("SHOW TAGS", f"{_UNSUPPORTED}: SHOW SNAPSHOTS"),
+    ("OPTIMIZE ", f"{_UNSUPPORTED}: OPTIMIZE"),
+    ("EXPIRE SNAPSHOTS", f"{_UNSUPPORTED}: EXPIRE SNAPSHOTS"),
+    ("VACUUM ", f"{_UNSUPPORTED}: VACUUM"),
+    ("ANALYZE TABLE ", f"{_UNSUPPORTED}: ANALYZE"),
+    ("MERGE INTO", f"{_UNSUPPORTED}: MERGE"),
+    ("PREPARE ", f"{_UNSUPPORTED}: PREPARE"),
+    ("EXECUTE ", f"{_UNSUPPORTED}: EXECUTE"),
+    ("DEALLOCATE", f"{_UNSUPPORTED} (parsed but not executable): DEALLOCATE"),
+)
+
+# the kinds whose text Spark evaluates as a query: what a client query
+# body may be (Engine.read_frame)
+QUERY_KINDS = frozenset({StmtKind.SELECT, StmtKind.WITH_SELECT, StmtKind.EXPLAIN})
+# the kinds that only read: what a read-only user may run
+READ_KINDS = QUERY_KINDS | {
+    StmtKind.SHOW_DATABASES,
+    StmtKind.SHOW_TABLES,
+    StmtKind.SHOW_COLUMNS,
+    StmtKind.SHOW_CREATE_TABLE,
+    StmtKind.SHOW_SNAPSHOTS,
+    StmtKind.SHOW_PIPELINES,
+    StmtKind.DESCRIBE,
+}
+
+_DML_WORD = re.compile(r"\b(?:INSERT|UPDATE|DELETE|MERGE)\b", re.I)
+
+
 def route(statement: str, strict: bool = False) -> Routed:
     """Classify one statement; raise RangerError for gate violations.
     Comments around the statement are not part of it: the kind is read
@@ -560,23 +611,19 @@ def route(statement: str, strict: bool = False) -> Routed:
     def m(prefix: str) -> bool:
         return up.startswith(prefix)
 
+    if strict:
+        for lead, message in _STRICT_REJECTS:
+            if m(lead):
+                raise RangerError(UNSUPPORTED_STATEMENT, message)
     if m("SELECT"):
         return Routed(StmtKind.SELECT, s)
     if m("WITH"):
-        if strict:
-            # the reference's gate has no WITH case → parse failure
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: WITH (reference gate rejects CTEs)",
-            )
-        # Spark SQL accepts CTE-DML (WITH x AS (...) INSERT INTO ...);
-        # executing that via the plain spark.sql() read path would write
-        # AROUND the snapshot-commit chain (and around permission
-        # checks that trust the WITH prefix). Reject it: writes must go
-        # through the INSERT/UPDATE/DELETE/MERGE statement paths.
-        if re.search(
-            r"\)\s*(INSERT|UPDATE|DELETE|MERGE)\b", sqltext.blank(s), re.I
-        ):
+        # Spark SQL accepts CTE-DML (WITH x AS (...) INSERT INTO ..., or
+        # WITH ... FROM x INSERT INTO ...) and runs it eagerly: a write
+        # AROUND the snapshot-commit chain. Reject any DML keyword in
+        # code: writes must go through the INSERT/UPDATE/DELETE/MERGE
+        # statement paths.
+        if _DML_WORD.search(sqltext.blank(s)):
             raise RangerError(
                 UNSUPPORTED_STATEMENT,
                 "CTE-DML is not supported: write statements cannot be "
@@ -593,21 +640,12 @@ def route(statement: str, strict: bool = False) -> Routed:
     if m("KILL"):
         # KILL [QUERY] '<id>' — exceeds (SQL face of the execution
         # manager's CancelQuery, the op the native protocol exposes as
-        # ClientCancel); strict mode keeps the reference's parse failure
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT, "unsupported statement type: KILL"
-            )
+        # ClientCancel)
         return Routed(StmtKind.KILL, s)
     if m("TRUNCATE TABLE") or m("TRUNCATE "):
         # not in the reference grammar; we exceed — rewritten onto the
         # snapshot-committed delete-all path (a 'delete' snapshot, so
         # TRUNCATE is time-travelable like every other write)
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: TRUNCATE",
-            )
         tm = re.match(r"TRUNCATE\s+(?:TABLE\s+)?([\w.]+)\s*$", s, re.I)
         if not tm:
             raise RangerError(
@@ -615,6 +653,15 @@ def route(statement: str, strict: bool = False) -> Routed:
             )
         return Routed(StmtKind.DELETE, f"DELETE FROM {tm.group(1)}")
     if m("EXPLAIN"):
+        # EXPLAIN ANALYZE runs its statement, so only a query can follow
+        if m("EXPLAIN ANALYZE ") and not m("EXPLAIN ANALYZE PIPELINE "):
+            inner = route(s.split(None, 2)[2] + ";")
+            if inner.kind not in QUERY_KINDS:
+                raise RangerError(
+                    UNSUPPORTED_STATEMENT,
+                    "EXPLAIN ANALYZE runs its statement: only a query "
+                    f"can be analyzed, not {inner.kind.value.upper()}",
+                )
         return Routed(StmtKind.EXPLAIN, s)
     if m("CREATE TABLE"):
         return Routed(StmtKind.CREATE_TABLE, s)
@@ -623,11 +670,6 @@ def route(statement: str, strict: bool = False) -> Routed:
         # (FORMAT PARQUET) for imports (client.go:166-171), but its
         # server both lacks the grammar and blocklists the keyword
         # (duckdb/engine.go:61) — the statement can never succeed there.
-        # Executable here; strict mode keeps the reference's rejection.
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT, "unsupported statement type: COPY"
-            )
         code = sqltext.blank(s)
         if re.search(r"\bFROM\b", code, re.I):
             return Routed(StmtKind.COPY_FROM, s)
@@ -638,42 +680,18 @@ def route(statement: str, strict: bool = False) -> Routed:
             "COPY syntax: COPY table FROM 'path' (FORMAT fmt) | "
             "COPY table TO 'path' (FORMAT fmt)",
         )
+    # exceeds: materialized views over the versioned store
     if m("CREATE MATERIALIZED VIEW"):
-        # exceeds: materialized views over the versioned store. Strict
-        # mode keeps the reference rejection (no such grammar there).
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: CREATE MATERIALIZED VIEW",
-            )
         return Routed(StmtKind.CREATE_MVIEW, s)
     if m("REFRESH MATERIALIZED VIEW"):
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: REFRESH MATERIALIZED VIEW",
-            )
         return Routed(StmtKind.REFRESH_MVIEW, s)
     if m("DROP MATERIALIZED VIEW"):
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: DROP MATERIALIZED VIEW",
-            )
         return Routed(StmtKind.DROP_MVIEW, s)
     if m("CREATE VIEW") or m("CREATE OR REPLACE VIEW"):
         # exceeds: the reference reserves VIEW (parser.go:49) but has no
         # CREATE VIEW statement; executable session-scoped views here
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT, "unsupported statement type: CREATE VIEW"
-            )
         return Routed(StmtKind.CREATE_VIEW, s)
     if m("DROP VIEW"):
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT, "unsupported statement type: DROP VIEW"
-            )
         return Routed(StmtKind.DROP_VIEW, s)
     if m("CREATE DATABASE") or m("CREATE NAMESPACE") or m("CREATE SCHEMA"):
         return Routed(StmtKind.CREATE_DATABASE, s)
@@ -687,11 +705,6 @@ def route(statement: str, strict: bool = False) -> Routed:
         return Routed(StmtKind.SHOW_DATABASES, s)
     if m("SHOW MATERIALIZED VIEWS"):
         # exceeds: surface over the MV registry (system.mviews)
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: SHOW MATERIALIZED VIEWS",
-            )
         return Routed(
             StmtKind.SELECT,
             "SELECT * FROM system.mviews ORDER BY name",
@@ -707,11 +720,6 @@ def route(statement: str, strict: bool = False) -> Routed:
         return Routed(StmtKind.SHOW_SNAPSHOTS, s)
     if m("SHOW PIPELINES"):
         # exceeds: the operator-registry catalog as a statement
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: SHOW PIPELINES",
-            )
         return Routed(StmtKind.SHOW_PIPELINES, s)
     if m("PIPELINE "):
         # exceeds: run a registered pipeline operator (dedup, ANN,
@@ -719,11 +727,6 @@ def route(statement: str, strict: bool = False) -> Routed:
         # whole SURVEY §2 operator library becomes reachable over the
         # HTTP/pgwire/native protocols and the CLI, not only the
         # Python API
-        if strict:
-            raise RangerError(
-                UNSUPPORTED_STATEMENT,
-                "unsupported statement type: PIPELINE",
-            )
         return Routed(StmtKind.PIPELINE, s)
     if m("OPTIMIZE "):
         return Routed(StmtKind.OPTIMIZE, s)
@@ -742,17 +745,17 @@ def route(statement: str, strict: bool = False) -> Routed:
         return Routed(StmtKind.ALTER, s)
     if m("PREPARE "):
         # engine-level prepared statements (exceeds — the reference parses
-        # no PREPARE; its SDK PrepareBatch is client-side); strict rejects
+        # no PREPARE; its SDK PrepareBatch is client-side)
         return Routed(StmtKind.PREPARE_STMT, s)
     if m("EXECUTE "):
         return Routed(StmtKind.EXECUTE_STMT, s)
     if m("DEALLOCATE"):
         # was parse-only (cursor family); executable here for prepared
-        # statements — strict mode keeps the reference's parse-only error
+        # statements
         return Routed(StmtKind.DEALLOCATE_STMT, s)
     if m("MERGE INTO"):
         # not even parsed by the reference (parser.go keyword table has no
-        # MERGE); we exceed like ALTER — strict mode rejects in the engine
+        # MERGE); we exceed like ALTER
         return Routed(StmtKind.MERGE, s)
     if _PARSE_ONLY.match(up):
         return Routed(StmtKind.PARSE_ONLY, s)

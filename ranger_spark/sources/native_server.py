@@ -72,7 +72,9 @@ import pyarrow as pa
 
 from ranger_spark import sqltext
 from ranger_spark.engine import RESULT_CAP, Engine
+from ranger_spark.errors import RangerError
 from ranger_spark.frames import local_frame
+from ranger_spark.router import READ_KINDS, route
 
 # protocol/constants.go (ClickHouse-compatible numbering)
 CLIENT_HELLO = 0
@@ -592,33 +594,34 @@ DEFAULT_USERS: dict[str, dict] = {
                  "permissions": ("read",)},
 }
 
-_READ_ONLY_PREFIXES = (
-    "SELECT", "WITH", "SHOW", "DESCRIBE", "DESC", "EXPLAIN",
-)
-
-_DML_KEYWORDS = re.compile(
-    r"\b(INSERT|UPDATE|DELETE|MERGE|CREATE|DROP|ALTER|TRUNCATE|OPTIMIZE|"
-    r"VACUUM|EXPIRE|GRANT|REVOKE)\b",
-    re.IGNORECASE,
-)
-
-
 def _is_read_only_sql(sql: str) -> bool:
-    """Read-only classification for permission checks, made on code
-    text: literals and comments are blanked first, exactly where Spark's
-    lexer finds them.
-
-    A bare prefix test is bypassable: Spark SQL accepts CTE-DML
-    (``WITH x AS (...) INSERT INTO t ...``), so a statement starting
-    with WITH can still write. For WITH statements, scan the code for
-    DML/DDL keywords — any hit means the statement can mutate and is
-    NOT read-only."""
-    code = sqltext.blank(sql).lstrip().upper()
-    if not code.startswith(_READ_ONLY_PREFIXES):
+    """Read-only classification for permission checks: the router's
+    kind, terminated the way ``_run_query`` terminates it. A statement
+    the router rejects is not read-only."""
+    try:
+        return route(sql.rstrip().removesuffix(";") + ";").kind in READ_KINDS
+    except RangerError:
         return False
-    return not (code.startswith("WITH") and _DML_KEYWORDS.search(code))
 
 
+# Spark's string → boolean spellings (StringUtils.isTrueString /
+# isFalseString), which the >INSERT_CHUNK_ROWS cast path accepts too
+_SPARK_BOOLEANS = dict.fromkeys(("t", "true", "y", "yes", "1"), "TRUE") | (
+    dict.fromkeys(("f", "false", "n", "no", "0"), "FALSE")
+)
+
+
+def copy_target(engine, table: str, database: str = "") -> str:
+    """The table a COPY / ClientData load writes: ``table`` as given
+    when qualified, else under the connection's database, else under the
+    session's current one (read under the statement lock, which a
+    database-scoped statement holds while it switches that)."""
+    if "." in table:
+        return table
+    if database:
+        return f"{database}.{table}"
+    with engine._stmt_lock:
+        return engine._qualify(table)
 
 
 def insert_string_block(
@@ -641,16 +644,10 @@ def insert_string_block(
         return 0
     if len(rows) > INSERT_CHUNK_ROWS:
         return _insert_rows_dataframe(engine, table, columns, rows, database)
-    qualified_in = table
-    if database and "." not in table:
-        qualified_in = f"{database}.{table}"
-    # type map resolves under the SAME name the INSERT below targets
-    # (session db first) — engine._qualify would read the current db's
-    # same-named table's types
-    qualified = qualified_in if "." in qualified_in else engine._qualify(table)
+    qualified = copy_target(engine, table, database)
     entry = engine._manifest["tables"].get(qualified)
     types = {c[0]: c[1].lower() for c in (entry or {}).get("columns", [])}
-    numeric = ("int", "float", "double", "decimal", "bool")
+    numeric = ("int", "float", "double", "decimal")
     lits = []
     for row in rows:
         parts = []
@@ -660,6 +657,8 @@ def insert_string_block(
                 parts.append("NULL")
             elif v == "" and not t.startswith("string"):
                 parts.append("NULL")
+            elif t.startswith("bool") and str(v).strip().lower() in _SPARK_BOOLEANS:
+                parts.append(_SPARK_BOOLEANS[str(v).strip().lower()])
             elif t.startswith(numeric) and _NUM_LIT.fullmatch(str(v)):
                 parts.append(str(v))
             else:
@@ -667,7 +666,7 @@ def insert_string_block(
         lits.append("(" + ", ".join(parts) + ")")
     cols = ", ".join(columns)
     engine.execute(
-        f"INSERT INTO {qualified_in} ({cols}) VALUES {', '.join(lits)};"
+        f"INSERT INTO {qualified} ({cols}) VALUES {', '.join(lits)};"
     )
     return len(rows)
 
@@ -686,15 +685,7 @@ def _insert_rows_dataframe(
 
     from ranger_spark import types as itypes
 
-    # Resolve exactly like the <=chunk SQL path (INSERT INTO {qualified_in}):
-    # the SESSION database wins over the engine's currentDatabase — the old
-    # engine._qualify(table) fallthrough committed a >chunk COPY into the
-    # current db's same-named table (silent cross-db write) while looking
-    # up the schema under the session db (ADVICE r8, high).
-    qualified_in = table
-    if database and "." not in table:
-        qualified_in = f"{database}.{table}"
-    qualified = qualified_in if "." in qualified_in else engine._qualify(table)
+    qualified = copy_target(engine, table, database)
     entry = engine._manifest["tables"].get(qualified)
     if not entry:
         raise ValueError(f"table '{table}' not found")

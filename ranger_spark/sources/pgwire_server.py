@@ -35,7 +35,7 @@ import threading
 
 from ranger_spark import sqltext
 from ranger_spark.engine import Engine
-from ranger_spark.sources.native_server import insert_string_block
+from ranger_spark.sources.native_server import copy_target, insert_string_block
 
 TEXT_OID = 25  # everything ships as text, like the reference
 MAX_FRAME = 64 * 1024 * 1024  # cap client-declared frame length (64 MiB)
@@ -504,15 +504,9 @@ class PgWireServer:
         if cols_s:
             columns = [c.strip() for c in cols_s.split(",") if c.strip()]
         else:
-            # resolve under the connection's startup database first (the
-            # same name insert_string_block will commit to)
-            if "." in table:
-                qualified = table
-            elif database:
-                qualified = f"{database}.{table}"
-            else:
-                qualified = self.engine._qualify(table)
-            entry = self.engine._manifest["tables"].get(qualified)
+            entry = self.engine._manifest["tables"].get(
+                copy_target(self.engine, table, database)
+            )
             if not entry:
                 conn.sendall(_error(f"table '{table}' not found", "42P01"))
                 return
@@ -640,11 +634,8 @@ class PgWireServer:
         Describe answer (handler.go:185-189)."""
         if sql:
             try:
-                s = sql.rstrip().rstrip(";")
-                if s.upper().lstrip().startswith(("SELECT", "WITH")):
-                    return _row_description(
-                        list(self.engine.spark.sql(s).columns)
-                    )
+                frame = self.engine.read_frame(sql.rstrip().rstrip(";"))
+                return _row_description(list(frame.columns))
             except Exception:
                 pass
         return _msg(b"n", b"")  # NoData
