@@ -163,9 +163,9 @@ class Engine:
         self._mv_pins: list[str] = []
         # One statement at a time per Engine: the wire servers run execute()
         # from many connection threads, but per-statement state (the
-        # time-travel view list, the OPTIMIZE write-opts override, and the
-        # session current-database used for name resolution) is engine-
-        # scoped, so interleaved statements would corrupt each other.
+        # time-travel view list and the session current-database used for
+        # name resolution) is engine-scoped, so interleaved statements
+        # would corrupt each other.
         # The reference shares one embedded DuckDB the same way
         # (server/query/duckdb/engine.go) — statement execution is the
         # cheap part; Spark still parallelizes each job across cores.
@@ -524,8 +524,6 @@ class Engine:
     def recover(self) -> int:
         """Re-register manifest databases/tables into a fresh session's
         catalog; returns the number of tables recovered."""
-        import os
-
         n = 0
         for db in self._manifest["databases"]:
             if not self._db_exists(db):
@@ -544,37 +542,7 @@ class Engine:
                     pass  # unreachable endpoint → table stays unregistered
             if not self._location_exists(entry["location"]):
                 continue
-            schema = itypes.to_spark_schema(
-                [tuple(c) for c in entry["columns"]]
-            )
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            ddl = f"CREATE TABLE {name} ({cols}) USING parquet"
-            if entry.get("partition_by"):
-                ddl += " PARTITIONED BY (" + ", ".join(entry["partition_by"]) + ")"
-            rec_cluster = (entry.get("settings") or {}).get("clustered_by")
-            if rec_cluster:
-                # bucket spec must be re-declared or the recovered table's
-                # files (bucket-id named) would be read as unbucketed and
-                # lose the co-located-join property
-                rec_n = int((entry.get("settings") or {}).get("buckets", 16))
-                ddl += (
-                    f" CLUSTERED BY ({rec_cluster})"
-                    f" SORTED BY ({rec_cluster}) INTO {rec_n} BUCKETS"
-                )
-            location = entry["location"]
-            if entry.get("versioned"):
-                # versioned tables: the catalog points INTO the current
-                # snapshot dir, resolved from the manifest chain (this is
-                # also the forward-heal for a crash mid-repoint)
-                vt = VersionedTable(location)
-                if vt.current_version():
-                    location = vt.snapshot_dir()
-            ddl += f" LOCATION '{location}'"
-            self.spark.sql(ddl)
-            if entry.get("partition_by"):
-                self.spark.catalog.recoverPartitions(name)
+            self._register_table(name)
             self._schemas[name] = [tuple(c) for c in entry["columns"]]
             n += 1
         return n
@@ -662,11 +630,7 @@ class Engine:
         """Execute one statement.
 
         ``database`` scopes unqualified table names to that database for
-        THIS statement only (≈ the reference's per-query
-        ``QueryContext.Database``, connection.go handleClientQuerySignal):
-        the session current-database is saved/restored around the
-        statement, under the engine statement lock so no concurrent
-        statement can observe the temporary switch.
+        THIS statement only (see ``statement_scope``).
         """
         if self.query_validation:
             from ranger_spark.security import validate_query
@@ -688,23 +652,8 @@ class Engine:
             )
             timer.start()
         try:
-            with self._stmt_lock:
-                saved_db = None
-                if database:
-                    if not self._db_exists(database):
-                        raise RangerError(
-                            DATABASE_NOT_FOUND,
-                            f"database '{database}' not found",
-                        )
-                    saved_db = self.spark.catalog.currentDatabase()
-                    self.spark.catalog.setCurrentDatabase(database)
-                try:
-                    result = self._dispatch(routed)
-                finally:
-                    # a USE inside a database-scoped query is statement-
-                    # local too: the saved session database always wins
-                    if saved_db is not None:
-                        self.spark.catalog.setCurrentDatabase(saved_db)
+            with self.statement_scope(database):
+                result = self._dispatch(routed)
             result.query_id = qi.query_id
             self.exec_mgr.finish(qi, "done")
             return result
@@ -714,6 +663,34 @@ class Engine:
         finally:
             if timer:
                 timer.cancel()
+
+    @contextmanager
+    def statement_scope(self, database: str | None = None):
+        """Hold the statement lock with unqualified table names resolving
+        in ``database`` (≈ the reference's per-query
+        ``QueryContext.Database``, connection.go handleClientQuerySignal).
+        The session's current database is restored on exit, so a USE
+        inside the scope is statement-local too; when that database is
+        gone by then (dropped inside the scope or behind the engine's
+        back), the session falls back to ``default``."""
+        with self._stmt_lock:
+            saved = None
+            if database:
+                if not self._db_exists(database):
+                    raise RangerError(
+                        DATABASE_NOT_FOUND, f"database '{database}' not found"
+                    )
+                saved = self.spark.catalog.currentDatabase()
+                self.spark.catalog.setCurrentDatabase(database)
+            try:
+                yield
+            finally:
+                if saved is not None:
+                    self.spark.catalog.setCurrentDatabase(
+                        saved
+                        if self.spark.catalog.databaseExists(saved)
+                        else "default"
+                    )
 
     def cancel(self, query_id: str) -> bool:
         return self.exec_mgr.cancel(query_id)
@@ -1624,18 +1601,7 @@ class Engine:
             out = df.repartition(n_files, *[F.col(c) for c in part_by])
         else:
             out = df.repartition(n_files)
-        # the compaction write must not inherit the table's own rotation
-        # cap (it would re-fragment); keep only the codec
-        entry_opts = {
-            k: v
-            for k, v in self._write_options(name).items()
-            if k == "compression"
-        }
-        self._write_opts_override = entry_opts
-        try:
-            self._rewrite_table(name, out, operation="optimize")
-        finally:
-            self._write_opts_override = None
+        self._rewrite_table(name, out, operation="optimize")
         files_after = len(vt.files())
         return QueryResult(
             [],
@@ -1781,8 +1747,8 @@ class Engine:
     # SETTINGS → real write behavior (reference
     # server/storage/parquet/compression.go:20-56 codec table + levels,
     # parquet/interface.go:110-139 MaxFileSize rotation). Spark levers:
-    # per-write parquet codec option / 'parquet.compression' table
-    # property, and the maxRecordsPerFile writer option for rotation.
+    # the parquet writer's compression and maxRecordsPerFile options,
+    # registered as table OPTIONS (_write_options).
     _PARQUET_CODECS = {
         "none": "uncompressed",
         "uncompressed": "uncompressed",
@@ -1946,17 +1912,12 @@ class Engine:
             ),
         )
 
-    # per-statement override of the derived writer options (OPTIMIZE
-    # must escape the table's own rotation cap or it re-fragments its
-    # output); None = derive from SETTINGS as usual
-    _write_opts_override: dict[str, str] | None = None
-
     def _write_options(self, name: str) -> dict[str, str]:
-        """Writer options derived from the table's SETTINGS: codec and
-        file-rotation record cap. Applied to every data write targeting
-        the table (INSERT paths and copy-on-write rewrites)."""
-        if self._write_opts_override is not None:
-            return dict(self._write_opts_override)
+        """Writer options derived from the table's SETTINGS: codec, bloom
+        filters and file-rotation record cap. They are the table's Spark
+        ``OPTIONS`` (``_register_table``), which Spark applies on every
+        insertInto and SQL INSERT; copy-on-write rewrites write to a path
+        and pass them themselves."""
         entry = self._manifest["tables"].get(name) or {}
         s = entry.get("settings", {})
         out: dict[str, str] = {}
@@ -1992,11 +1953,6 @@ class Engine:
             out["maxRecordsPerFile"] = str(max(1, rows))
         return out
 
-    def _apply_write_options(self, writer, name: str):
-        for k, v in self._write_options(name).items():
-            writer = writer.option(k, v)
-        return writer
-
     def _column_codec_plan(self, name: str) -> tuple[dict, str] | None:
         """(overrides, default_codec) when writes to this table need the
         distributed per-column Arrow writer — differing or
@@ -2028,74 +1984,11 @@ class Engine:
             ).lower()
         return overrides, default
 
-    _CONF_KEYS = {
-        "compression": "spark.sql.parquet.compression.codec",
-        "maxRecordsPerFile": "spark.sql.files.maxRecordsPerFile",
-    }
-
-    # serializes writes that scope session confs (see _write_conf): the
-    # conf is session-global, so two concurrent writes to tables with
-    # DIFFERENT settings could otherwise cross-apply codecs. Only writes
-    # to tables that declare settings take this lock — plain writes are
-    # unaffected.
-    _write_conf_lock = threading.Lock()
-
-    @contextmanager
-    def _write_conf(self, name: str):
-        """Scope the table's write settings as session confs around a
-        write. Needed because ``insertInto`` ignores per-writer options
-        and datasource (USING parquet) tables ignore 'parquet.compression'
-        TBLPROPERTIES — the session conf is the lever Spark actually
-        honors on that path. Restored afterwards even on failure."""
-        opts = self._write_options(name)
-        if not opts:
-            yield
-            return
-        saved: dict[str, str | None] = {}
-        # keys without a spark.sql.* equivalent (parquet.bloom.*) scope
-        # through the hadoop configuration, which the parquet writer
-        # reads on every output path (verified: blooms written)
-        hc = self.spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-        saved_hc: dict[str, str | None] = {}
-        with self._write_conf_lock:
-            try:
-                for k, v in opts.items():
-                    key = self._CONF_KEYS.get(k)
-                    if key is None:
-                        saved_hc[k] = hc.get(k)
-                        hc.set(k, v)
-                        continue
-                    try:
-                        saved[key] = self.spark.conf.get(key)
-                    except Exception:
-                        saved[key] = None
-                    self.spark.conf.set(key, v)
-                yield
-            finally:
-                for key, v in saved.items():
-                    if v is None:
-                        self.spark.conf.unset(key)
-                    else:
-                        self.spark.conf.set(key, v)
-                for key, v in saved_hc.items():
-                    if v is None:
-                        hc.unset(key)
-                    else:
-                        hc.set(key, v)
-
     def _materialize_table(
         self, name: str, columns: list[tuple[str, str, bool]], opts: dict
     ) -> QueryResult:
         self._validate_settings(opts["settings"])
-        schema = itypes.to_spark_schema(columns)
-        spark_cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            + ("" if f.nullable else " NOT NULL")
-            for f in schema.fields
-        )
-        ddl = f"CREATE TABLE {name} ({spark_cols}) USING parquet"
-        if opts["partition_by"]:
-            ddl += " PARTITIONED BY (" + ", ".join(opts["partition_by"]) + ")"
+        declared = {c for c, _, _ in columns}
         # SETTINGS clustered_by='key'[, buckets=N] → a bucketed layout:
         # INSERTs (insertInto honors the metastore bucket spec) land files
         # pre-hash-partitioned on the key, so joins and aggregations on it
@@ -2103,31 +1996,15 @@ class Engine:
         # for fact-fact joins (sources/bucketing.py; the reference always
         # writes an empty partition spec, SURVEY §1.3, so this exceeds).
         clustered_by = opts["settings"].get("clustered_by")
-        if clustered_by:
-            if clustered_by not in {c for c, _, _ in columns}:
-                raise RangerError(
-                    VALIDATION_FAILED,
-                    f"clustered_by column '{clustered_by}' is not in the schema",
-                )
-            n_buckets = int(opts["settings"].get("buckets", 16))
-            ddl += (
-                f" CLUSTERED BY ({clustered_by})"
-                f" SORTED BY ({clustered_by}) INTO {n_buckets} BUCKETS"
+        if clustered_by and clustered_by not in declared:
+            raise RangerError(
+                VALIDATION_FAILED,
+                f"clustered_by column '{clustered_by}' is not in the schema",
             )
-        props = dict(opts["settings"])
-        props["ranger.storage"] = opts["storage"]
-        if opts["order_by"]:
-            props["ranger.write_order"] = ",".join(opts["order_by"])
-        codec = opts["settings"].get("compression", "").lower()
-        if codec in self._PARQUET_CODECS:
-            # Spark-native property: every write to this table (including
-            # plain insertInto) picks up the codec without per-write opts
-            props["parquet.compression"] = self._PARQUET_CODECS[codec]
         if "column_compression" in opts["settings"]:
             overrides = self._parse_column_compression(
                 opts["settings"]["column_compression"]
             )
-            declared = {c for c, _, _ in columns}
             for col in overrides:
                 if col not in declared:
                     raise RangerError(
@@ -2135,18 +2012,13 @@ class Engine:
                         f"column_compression column '{col}' is not in the schema",
                     )
             codec_set = set(overrides.values())
+            codec = opts["settings"].get("compression", "").lower()
             uniform_full = (
                 len(codec_set) == 1
                 and not (declared - set(overrides))
                 and codec in ("", next(iter(codec_set)))
             )
-            if not codec and uniform_full:
-                # full-coverage uniform overrides (validated single-codec)
-                # are exactly expressible as the file codec
-                props["parquet.compression"] = self._PARQUET_CODECS[
-                    next(iter(codec_set))
-                ]
-            elif not uniform_full:
+            if not uniform_full:
                 # differing or partial codecs go through the distributed
                 # per-column Arrow writer on every write
                 # (sources/arrow_write, reference compression.go:103-109);
@@ -2159,14 +2031,13 @@ class Engine:
                         "be combined with PARTITION BY (the per-column "
                         "writer emits unpartitioned files)",
                     )
-                if opts["settings"].get("clustered_by"):
+                if clustered_by:
                     raise RangerError(
                         VALIDATION_FAILED,
                         "column_compression with differing codecs cannot "
                         "be combined with clustered_by (bucketed files "
                         "need Spark's bucket-id naming)",
                     )
-        ddl += _tblproperties(props)
         # explicit LOCATION so the table survives catalog loss and
         # recover() can re-register it (reference registry durability);
         # the root follows the STORAGE clause (s3 → configured bucket root)
@@ -2180,24 +2051,15 @@ class Engine:
         if versioned:
             import os
 
-            vt = VersionedTable(location)
             data_dir = os.path.join(location, "s1")
             os.makedirs(data_dir, exist_ok=True)
-            vt.commit(files=[], data_dir=data_dir, operation="create")
-            ddl += f" LOCATION '{data_dir}'"
-        else:
-            ddl += f" LOCATION '{location}'"
-        self.spark.sql(ddl)
-        if opts["storage"] == "memory":
-            # the reference's memory storage engine keeps table data in RAM
-            # (server/storage/memory); Spark equivalent: pin the table in
-            # the block-manager cache (lazy — materializes on first scan,
-            # auto-refreshes on insert)
-            self.spark.sql(f"CACHE LAZY TABLE {name}")
-        self._schemas[name] = columns
+            VersionedTable(location).commit(
+                files=[], data_dir=data_dir, operation="create"
+            )
         entry = {
             "columns": columns,
             "partition_by": opts["partition_by"],
+            "order_by": opts["order_by"],
             "storage": opts["storage"],
             "settings": opts["settings"],
             "location": location,
@@ -2208,10 +2070,66 @@ class Engine:
             db, tbl = name.split(".", 1)
             entry["s3_remote"] = f"{remote_root}/{db}.db/{tbl}"
         self._mutate_manifest(lambda m: m["tables"].__setitem__(name, entry))
+        try:
+            self._register_table(name)
+        except Exception:
+            # an entry Spark refuses to register would fail every recover()
+            self._mutate_manifest(lambda m: m["tables"].pop(name, None))
+            raise
+        self._schemas[name] = columns
         if versioned:
             self._emit_iceberg(name)
         self._s3_sync_up(name)
         return QueryResult([], [], 0, message=f"table '{name}' created")
+
+    def _register_table(self, name: str) -> None:
+        """Register ``name`` in Spark's catalog from its manifest entry.
+        This is the one place a table's Spark definition is written:
+        columns with NOT NULL, PARTITIONED BY, the clustered_by bucket
+        spec, the write SETTINGS as table OPTIONS (Spark applies them on
+        every insertInto and SQL INSERT), the entry's TBLPROPERTIES and
+        the LOCATION — a versioned table's current snapshot dir. Memory
+        storage (the reference's server/storage/memory) is pinned in the
+        block-manager cache: lazy, materialized on first scan and
+        refreshed on insert."""
+        entry = self._manifest["tables"][name]
+        schema = itypes.to_spark_schema([tuple(c) for c in entry["columns"]])
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in schema.fields
+        )
+        ddl = f"CREATE TABLE {name} ({cols}) USING parquet"
+        options = self._write_options(name)
+        if options:
+            ddl += " OPTIONS " + _property_list(options)
+        part_by = entry.get("partition_by") or []
+        if part_by:
+            ddl += " PARTITIONED BY (" + ", ".join(part_by) + ")"
+        settings = entry.get("settings") or {}
+        if settings.get("clustered_by"):
+            key = settings["clustered_by"]
+            ddl += (
+                f" CLUSTERED BY ({key}) SORTED BY ({key})"
+                f" INTO {int(settings.get('buckets', 16))} BUCKETS"
+            )
+        props = {**settings, "ranger.storage": entry.get("storage", "filesystem")}
+        if entry.get("order_by"):
+            props["ranger.write_order"] = ",".join(entry["order_by"])
+        ddl += " TBLPROPERTIES " + _property_list(props)
+        location = entry["location"]
+        if entry.get("versioned"):
+            # the catalog points INTO the current snapshot dir, resolved
+            # from the manifest chain (also the forward-heal for a crash
+            # between a commit and the repoint)
+            vt = VersionedTable(location)
+            if vt.current_version():
+                location = vt.snapshot_dir()
+        self.spark.sql(ddl + f" LOCATION {sqltext.quote(location)}")
+        if part_by:
+            self.spark.catalog.recoverPartitions(name)
+        if entry.get("storage") == "memory":
+            self.spark.sql(f"CACHE LAZY TABLE {name}")
 
     def _create_table_as(self, m: "re.Match[str]", sql: str) -> QueryResult:
         """CREATE TABLE ... AS SELECT — exceeds the reference (its parser
@@ -2257,7 +2175,7 @@ class Engine:
         self._append_commit(
             name,
             "append",
-            lambda: self._apply_write_options(out.write, name).insertInto(name),
+            lambda: out.write.insertInto(name),
         )
         n = obs.get["n"]
         return QueryResult(
@@ -2462,7 +2380,7 @@ class Engine:
         self._append_commit(
             name,
             "append",
-            lambda: self._apply_write_options(out.write, name).insertInto(name),
+            lambda: out.write.insertInto(name),
             out_df=out,
         )
         return QueryResult(
@@ -2530,7 +2448,7 @@ class Engine:
         self._append_commit(
             name,
             "append",
-            lambda: self._apply_write_options(out.write, name).insertInto(name),
+            lambda: out.write.insertInto(name),
             out_df=out,
         )
         n = obs.get["n"]
@@ -3004,8 +2922,7 @@ class Engine:
                     f"table '{name}' declares differing per-column codecs "
                     "but has no filesystem snapshot dir to write them to",
                 )
-            with self._write_conf(name):
-                write_fn()
+            write_fn()
             return
         cur = vt.current_version()
         data_dir = vt.snapshot_dir(cur) if cur else None
@@ -3035,8 +2952,7 @@ class Engine:
             self._s3_sync_up(name)
             return
         before = walk_parquet(data_dir) if data_dir else set()
-        with self._write_conf(name):
-            write_fn()
+        write_fn()
         if data_dir is None:
             return
         added = sorted(walk_parquet(data_dir) - before)
@@ -3063,10 +2979,10 @@ class Engine:
         part_by: list[str],
         operation: str,
         pre_swap=None,
-    ) -> str:
+    ) -> None:
         """Write the new table state ONCE into a fresh snapshot dir and
         commit it; prior snapshot dirs are left untouched (time travel).
-        Returns the new dir. On any failure — including a ``pre_swap``
+        On any failure — including a ``pre_swap``
         veto — the half-written dir is removed and the live table is
         untouched. This replaces the old double-write staging dance
         (staging saveAsTable + insertInto overwrite): one write, and the
@@ -3107,9 +3023,12 @@ class Engine:
                 os.makedirs(new_dir, exist_ok=True)
                 write_parquet_column_codecs(new_df, new_dir, *codec_plan)
             else:
-                w = self._apply_write_options(
-                    new_df.write.mode("overwrite"), name
-                )
+                options = self._write_options(name)
+                if operation == "optimize":
+                    # compaction must not inherit the table's own rotation
+                    # cap, or it re-fragments its output
+                    options.pop("maxRecordsPerFile", None)
+                w = new_df.write.mode("overwrite").options(**options)
                 if part_by:
                     w = w.partitionBy(*part_by)
                 w.parquet(new_dir)
@@ -3128,67 +3047,6 @@ class Engine:
         )
         self._emit_iceberg(name)
         self._s3_sync_up(name)
-        return new_dir
-
-    def _recreate_at(
-        self,
-        name: str,
-        entry: dict,
-        columns: list[tuple[str, str, bool]],
-        location: str,
-        renamed: dict[str, str] | None = None,
-        as_name: str | None = None,
-    ) -> list[str]:
-        """Repoint the catalog table at a new snapshot dir: drop +
-        recreate the same DDL with LOCATION swapped — metadata only, no
-        data moves (the Iceberg equivalent is the atomic metadata-pointer
-        swap; a crash between drop and create here is healed forward by
-        ``recover()``, which rebuilds the table from the catalog manifest
-        + current snapshot). Table options survive: PARTITIONED BY is
-        re-applied (renamed partition columns followed, dropped ones
-        removed), ranger.* TBLPROPERTIES carry over, memory-storage
-        tables are re-pinned in the cache."""
-        renamed = renamed or {}
-        props = {
-            r["key"]: r["value"]
-            for r in self.spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
-            if r["key"].startswith("ranger.")
-        }
-        for k, v in entry.get("settings", {}).items():
-            props.setdefault(k, v)
-        schema = itypes.to_spark_schema(columns)
-        new_names = {f.name for f in schema.fields}
-        part_by = [renamed.get(c, c) for c in entry.get("partition_by", [])]
-        part_by = [c for c in part_by if c in new_names]
-        if "ranger.write_order" in props:
-            order = [
-                renamed.get(c.strip(), c.strip())
-                for c in props["ranger.write_order"].split(",")
-            ]
-            order = [c for c in order if c in new_names]
-            if order:
-                props["ranger.write_order"] = ",".join(order)
-            else:
-                del props["ranger.write_order"]
-        spark_cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            + ("" if f.nullable else " NOT NULL")
-            for f in schema.fields
-        )
-        target = as_name or name  # rename: create under the new name
-        ddl = f"CREATE TABLE {target} ({spark_cols}) USING parquet"
-        if part_by:
-            ddl += " PARTITIONED BY (" + ", ".join(part_by) + ")"
-        if props:
-            ddl += _tblproperties(props)
-        ddl += f" LOCATION '{location}'"
-        self.spark.sql(f"DROP TABLE {name}")
-        self.spark.sql(ddl)
-        if part_by:
-            self.spark.catalog.recoverPartitions(target)
-        if entry.get("storage") == "memory":
-            self.spark.sql(f"CACHE LAZY TABLE {target}")
-        return part_by
 
     def _rewrite_table(
         self,
@@ -3210,7 +3068,7 @@ class Engine:
         entry = self._manifest["tables"].get(name, {})
         vt = self._versioned_for(name)
         if vt is not None:
-            new_dir = self._versioned_rewrite(
+            self._versioned_rewrite(
                 name,
                 entry,
                 vt,
@@ -3219,8 +3077,11 @@ class Engine:
                 operation,
                 pre_swap,
             )
-            columns = self._schemas.get(name) or self._column_info(name)
-            self._recreate_at(name, entry, columns, new_dir)
+            # metadata-only repoint at the new snapshot dir (the Iceberg
+            # pointer swap); a crash between drop and register is healed
+            # forward by recover() from the manifest chain
+            self.spark.sql(f"DROP TABLE {name}")
+            self._register_table(name)
             return
         staging = f"{name.split('.')[0]}.__staging_{name.split('.')[-1]}"
         new_df.write.mode("overwrite").saveAsTable(staging)
@@ -3487,7 +3348,7 @@ class Engine:
         self._append_commit(
             name,
             "append",
-            lambda: self._apply_write_options(out.write, name).insertInto(name),
+            lambda: out.write.insertInto(name),
         )
         self._mv_drop_pins()
         meta = {
@@ -3829,15 +3690,7 @@ class Engine:
                 f"table '{old}' backs materialized view(s) "
                 f"{', '.join(deps)}; drop them before renaming",
             )
-        entry = self._manifest["tables"].get(old, {})
-        columns = self._schemas.get(old) or self._column_info(old)
-        loc = self._catalog_location(old)
-        if loc is None:
-            raise RangerError(
-                VALIDATION_FAILED,
-                f"table '{old}' has no resolvable location to rename",
-            )
-        self._recreate_at(old, entry, columns, loc, as_name=new)
+        self._require_entry(old)
 
         def _mv(m: dict) -> None:
             e = m["tables"].pop(old, None)
@@ -3845,11 +3698,25 @@ class Engine:
                 m["tables"][new] = e
 
         self._mutate_manifest(_mv)
+        self.spark.sql(f"DROP TABLE {old}")
+        self._register_table(new)
         if old in self._schemas:
             self._schemas[new] = self._schemas.pop(old)
         return QueryResult(
             [], [], 0, message=f"table '{old}' renamed to '{new}'"
         )
+
+    def _require_entry(self, name: str) -> dict:
+        """The manifest entry of ``name``; RENAME and ALTER rebuild the
+        Spark registration from it, so a table Spark knows but the engine
+        catalog does not is refused."""
+        entry = self._manifest["tables"].get(name)
+        if entry is None:
+            raise RangerError(
+                UNSUPPORTED_STATEMENT,
+                f"table '{name}' is not in the engine catalog",
+            )
+        return entry
 
     def _replace_table(
         self,
@@ -3858,102 +3725,43 @@ class Engine:
         new_cols: list[tuple[str, str, bool]],
         renamed: dict[str, str] | None = None,
     ) -> None:
-        """Drop + recreate the table with a new schema and rewritten data
-        (schema-changing CoW; plain overwrite keeps the old schema).
-
-        Table options survive the rewrite: PARTITIONED BY is re-applied
-        (with renamed partition columns followed and dropped ones removed),
-        TBLPROPERTIES (ranger.storage / ranger.write_order / settings) are
-        carried over, and memory-storage tables are re-pinned in the cache —
-        otherwise a later recover() would recreate the table PARTITIONED BY
-        over unpartitioned files and the data would become invisible."""
+        """Rewrite the table under a new schema (schema-changing CoW; plain
+        overwrite keeps the old schema). The manifest entry takes the new
+        columns, with renamed PARTITION BY / ORDER BY columns followed and
+        dropped ones removed, and the Spark registration is rebuilt from
+        it — so a later recover() registers the same table."""
         renamed = renamed or {}
-        entry = self._manifest["tables"].get(name, {})
+        entry = self._require_entry(name)
+        names = {c for c, _, _ in new_cols}
+
+        def follow(cols: list[str]) -> list[str]:
+            return [renamed.get(c, c) for c in cols if renamed.get(c, c) in names]
+
+        part_by = follow(entry.get("partition_by") or [])
+        order_by = follow(entry.get("order_by") or [])
         vt = self._versioned_for(name)
-        if vt is not None:
-            new_names = {c[0] for c in new_cols}
-            part_by = [
-                renamed.get(c, c) for c in entry.get("partition_by", [])
-            ]
-            part_by = [c for c in part_by if c in new_names]
-            new_dir = self._versioned_rewrite(
-                name, entry, vt, new_df, part_by, "alter"
-            )
-            part_by = self._recreate_at(
-                name, entry, new_cols, new_dir, renamed=renamed
-            )
-            self._schemas[name] = new_cols
-            if entry:
-
-                def _set_cols_v(m: dict) -> None:
-                    e = m["tables"].get(name, dict(entry))
-                    e["columns"] = new_cols
-                    e["partition_by"] = part_by
-                    m["tables"][name] = e
-
-                self._mutate_manifest(_set_cols_v)
-            return
         staging = f"{name.split('.')[0]}.__staging_{name.split('.')[-1]}"
-        new_df.write.mode("overwrite").saveAsTable(staging)
-        # carry over user-facing props before the old table disappears
-        props = {
-            r["key"]: r["value"]
-            for r in self.spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
-            if r["key"].startswith("ranger.")
-        }
-        for k, v in entry.get("settings", {}).items():
-            props.setdefault(k, v)
+        if vt is not None:
+            self._versioned_rewrite(name, entry, vt, new_df, part_by, "alter")
+        else:
+            new_df.write.mode("overwrite").saveAsTable(staging)
+
+        def _set_cols(m: dict) -> None:
+            e = m["tables"].setdefault(name, dict(entry))
+            e.update(columns=new_cols, partition_by=part_by, order_by=order_by)
+
+        self._mutate_manifest(_set_cols)
         self.spark.sql(f"DROP TABLE {name}")
-        location = entry.get("location") or self.table_location(
-            name, entry.get("storage", "filesystem")
-        )
-        self._delete_location(location)
-        schema = itypes.to_spark_schema(new_cols)
-        new_names = {f.name for f in schema.fields}
-        part_by = [
-            renamed.get(c, c)
-            for c in entry.get("partition_by", [])
-        ]
-        part_by = [c for c in part_by if c in new_names]
-        if "ranger.write_order" in props:
-            order = [
-                renamed.get(c.strip(), c.strip())
-                for c in props["ranger.write_order"].split(",")
-            ]
-            order = [c for c in order if c in new_names]
-            if order:
-                props["ranger.write_order"] = ",".join(order)
-            else:
-                del props["ranger.write_order"]
-        spark_cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            + ("" if f.nullable else " NOT NULL")
-            for f in schema.fields
-        )
-        ddl = f"CREATE TABLE {name} ({spark_cols}) USING parquet"
-        if part_by:
-            ddl += " PARTITIONED BY (" + ", ".join(part_by) + ")"
-        if props:
-            ddl += _tblproperties(props)
-        ddl += f" LOCATION '{location}'"
-        self.spark.sql(ddl)
-        # partitioned tables re-order columns (partition cols last) — insert
-        # in the recreated table's canonical order, not the staging order
-        target_order = self.spark.table(name).columns
-        self.spark.table(staging).select(*target_order).write.insertInto(name)
-        self.spark.sql(f"DROP TABLE {staging}")
-        if entry.get("storage") == "memory":
-            self.spark.sql(f"CACHE LAZY TABLE {name}")
+        if vt is None:
+            self._delete_location(entry["location"])
+        self._register_table(name)
         self._schemas[name] = new_cols
-        if entry:
-
-            def _set_cols(m: dict) -> None:
-                e = m["tables"].get(name, dict(entry))
-                e["columns"] = new_cols
-                e["partition_by"] = part_by
-                m["tables"][name] = e
-
-            self._mutate_manifest(_set_cols)
+        if vt is None:
+            # partitioned tables re-order columns (partition cols last) —
+            # insert in the registered table's order, not the staging one
+            target_order = self.spark.table(name).columns
+            self.spark.table(staging).select(*target_order).write.insertInto(name)
+            self.spark.sql(f"DROP TABLE {staging}")
 
     # ------------------------------------------------- SHOW / system views
     def _show_databases(self) -> QueryResult:
@@ -3992,7 +3800,7 @@ class Engine:
 
     def _show_create_table(self, sql: str) -> QueryResult:
         """Regenerate the full ranger-style DDL (columns + STORAGE /
-        PARTITION BY / SETTINGS) from the registry
+        PARTITION BY / ORDER BY / SETTINGS) from the registry
         (≈ reference registry/system/manager.go GenerateCreateTableDDL)."""
         name = self._qualify(sql.split()[-1])
         if not self._table_exists(name):
@@ -4007,6 +3815,8 @@ class Engine:
             ddl += f"\nSTORAGE {entry.get('storage', 'filesystem')}"
             if entry.get("partition_by"):
                 ddl += "\nPARTITION BY (" + ", ".join(entry["partition_by"]) + ")"
+            if entry.get("order_by"):
+                ddl += "\nORDER BY (" + ", ".join(entry["order_by"]) + ")"
             if entry.get("settings"):
                 kv = ", ".join(f"{k} = '{v}'" for k, v in entry["settings"].items())
                 ddl += f"\nSETTINGS {kv}"
@@ -4204,9 +4014,9 @@ class Engine:
         return self.spark.catalog.tableExists(name)
 
 
-def _tblproperties(props: dict) -> str:
+def _property_list(props: dict) -> str:
     pairs = (f"{sqltext.quote(k)}={sqltext.quote(str(v))}" for k, v in props.items())
-    return f" TBLPROPERTIES ({', '.join(pairs)})"
+    return f"({', '.join(pairs)})"
 
 
 def _coerce(v, dtype: st.DataType):

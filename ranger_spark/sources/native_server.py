@@ -762,9 +762,7 @@ def _insert_rows_dataframe(
         engine._append_commit(
             qualified,
             "append",
-            lambda: engine._apply_write_options(out.write, qualified).insertInto(
-                qualified
-            ),
+            lambda: out.write.insertInto(qualified),
         )
     return len(rows)
 

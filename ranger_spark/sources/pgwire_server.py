@@ -462,7 +462,7 @@ class PgWireServer:
                                 + struct.pack("!I", TEXT_OID) * n,
                             )
                         )
-                    conn.sendall(self._describe(sql))
+                    conn.sendall(self._describe(sql, database))
                 elif tag == b"E":  # Execute
                     portal, pos = _read_cstr(payload, 0)
                     (max_rows,) = struct.unpack_from("!i", payload, pos)
@@ -628,14 +628,16 @@ class PgWireServer:
         out.append(_msg(b"C", _cstr(f"COPY {r.row_count}")))
         conn.sendall(b"".join(out))
 
-    def _describe(self, sql: str | None) -> bytes:
-        """RowDescription via Catalyst ANALYSIS only (no job); NoData when
-        the statement is absent or unanalyzable — the reference's constant
-        Describe answer (handler.go:185-189)."""
+    def _describe(self, sql: str | None, database: str) -> bytes:
+        """RowDescription via Catalyst ANALYSIS only (no job), in the
+        connection's database like Execute; NoData when the statement is
+        absent or unanalyzable — the reference's constant Describe answer
+        (handler.go:185-189)."""
         if sql:
             try:
-                frame = self.engine.read_frame(sql.rstrip().rstrip(";"))
-                return _row_description(list(frame.columns))
+                with self.engine.statement_scope(database or None):
+                    frame = self.engine.read_frame(sql.rstrip().rstrip(";"))
+                    return _row_description(list(frame.columns))
             except Exception:
                 pass
         return _msg(b"n", b"")  # NoData

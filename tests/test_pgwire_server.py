@@ -600,6 +600,30 @@ def test_pgwire_startup_database_scopes_queries(pg, engine):
     engine.spark.sql("DROP DATABASE pgdb1 CASCADE")
 
 
+def test_pgwire_describe_uses_the_connection_database(pg, engine):
+    """Describe analyzes the statement in the connection's startup
+    database, as Execute runs it: a RowDescription, not NoData."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS ddx;")
+    engine.execute("CREATE TABLE ddx.only_here (id int32);")
+    engine.execute("INSERT INTO ddx.only_here (id) VALUES (5);")
+    s = socket.create_connection(("127.0.0.1", pg.port), timeout=30)
+    s.sendall(_startup_packet_db("ddx"))
+    assert b"R" in [t for t, _ in _read_messages(s)]
+    s.sendall(_parse_pkt("st", "SELECT id FROM only_here"))
+    s.sendall(_ext(b"D", b"Sst\x00"))
+    s.sendall(_bind_pkt("", "st", []))
+    s.sendall(_ext(b"E", b"\x00" + struct.pack("!i", 0)))
+    s.sendall(_ext(b"S", b""))
+    msgs = _read_messages(s)
+    tags = [t for t, _ in msgs]
+    assert b"T" in tags and b"n" not in tags, tags
+    assert b"id\x00" in dict(msgs)[b"T"]
+    assert any(t == b"D" and b"5" in body for t, body in msgs)
+    s.sendall(b"X")
+    s.close()
+    engine.spark.sql("DROP DATABASE ddx CASCADE")
+
+
 def _record_server_sends(monkeypatch, port):
     """Every sendall the server makes on ``port``: (socket, bytes)."""
     sent = []
