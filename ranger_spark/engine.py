@@ -16,6 +16,7 @@ reference's DuckDB reader (duckdb/engine.go:395-400).
 
 from __future__ import annotations
 
+import functools
 import re
 import threading
 import time
@@ -42,6 +43,7 @@ from ranger_spark.frames import local_frame
 from ranger_spark.router import QUERY_KINDS, Routed, StmtKind, route
 from ranger_spark.sqltext import split_statements
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
+from ranger_spark.tables import parquet_schema
 
 RESULT_CAP = 100_000  # reference duckdb/engine.go:395-400
 # system.files flags data files under this size: the small-file problem
@@ -53,6 +55,30 @@ SCHEMA_PROP_VIEW_PREFIX = "ranger_schema_"  # per-table Iceberg schema registry
 # finished statements ExecutionManager keeps (system.queries, /status);
 # running ones are always kept, so cancel() can reach them
 QUERY_HISTORY = 1000
+
+# the raise_error text a NOT NULL guard (Engine._require_not_null) fails
+# a write job with; _reports_not_null finds it in the job's error
+_NOT_NULL_RE = re.compile(
+    r"validation failed: column '[^']*' of '[^']*' cannot be null"
+)
+
+
+def _reports_not_null(write):
+    """Report a write job that a NOT NULL guard failed as VALIDATION_FAILED."""
+
+    @functools.wraps(write)
+    def wrapper(*args, **kwargs):
+        try:
+            return write(*args, **kwargs)
+        except RangerError:
+            raise
+        except Exception as e:
+            m = _NOT_NULL_RE.search(str(e))
+            if m is None:
+                raise
+            raise RangerError(VALIDATION_FAILED, m.group(0)) from None
+
+    return wrapper
 
 
 @dataclass
@@ -1304,10 +1330,14 @@ class Engine:
         view = f"__tt_{name.replace('.', '_')}_v{version}"
         self._tt_views.append(view)
         if files:
-            # basePath keeps partition columns derivable from the paths
-            df = self.spark.read.option(
-                "basePath", vt.snapshot_dir(version)
-            ).parquet(*files)
+            # basePath keeps partition columns derivable from the paths;
+            # every file of one version shares its schema (ALTER rewrites
+            # the whole table)
+            df = (
+                self.spark.read.schema(parquet_schema(self.spark, files[-1]))
+                .option("basePath", vt.snapshot_dir(version))
+                .parquet(*files)
+            )
         else:
             df = self.spark.table(name).limit(0)
         df.createOrReplaceTempView(view)
@@ -1348,7 +1378,12 @@ class Engine:
         view = f"__cdc_{name.replace('.', '_')}_s{since_version}"
         self._tt_views.append(view)
         if added:
-            df = self.spark.read.parquet(*added)
+            # the newest snapshot's file carries the current schema; older
+            # files read through it, so a column renamed or dropped since
+            # reads as NULL
+            df = self.spark.read.schema(
+                parquet_schema(self.spark, added[-1])
+            ).parquet(*added)
         else:
             df = self.spark.table(name).limit(0)
         df.createOrReplaceTempView(view)
@@ -2445,6 +2480,7 @@ class Engine:
             return QueryResult(
                 [], [], n, message=f"overwrote '{name}' with {n} row(s)"
             )
+        out = self._require_not_null(name, out)
         self._append_commit(
             name,
             "append",
@@ -2900,6 +2936,39 @@ class Engine:
         except Exception:  # pragma: no cover - projection must not break DML
             pass
 
+    def _require_not_null(self, name: str, df: DataFrame) -> DataFrame:
+        """``df`` with each declared NOT NULL column of ``name`` guarded in
+        the projection that gets written: a NULL there fails the write's
+        own job through ``raise_error`` (no extra job), and
+        ``_reports_not_null`` reports it as VALIDATION_FAILED. Spark's
+        session catalog keeps parquet columns nullable whatever the DDL
+        says, so the engine enforces NOT NULL itself, as the VALUES path
+        does in ``_validate_batch``."""
+        required = {
+            c for c, _, nullable in self._schemas.get(name, ()) if not nullable
+        }
+        if not required:
+            return df
+        return df.select(
+            *[
+                F.when(
+                    df[c].isNull(),
+                    F.raise_error(
+                        F.lit(
+                            f"validation failed: column '{c}' of '{name}' "
+                            "cannot be null"
+                        )
+                    ),
+                )
+                .otherwise(df[c])
+                .alias(c)
+                if c in required
+                else df[c]
+                for c in df.columns
+            ]
+        )
+
+    @_reports_not_null
     def _append_commit(
         self, name: str, operation: str, write_fn, out_df: DataFrame | None = None
     ) -> None:
@@ -3048,6 +3117,7 @@ class Engine:
         self._emit_iceberg(name)
         self._s3_sync_up(name)
 
+    @_reports_not_null
     def _rewrite_table(
         self,
         name: str,
@@ -3066,6 +3136,7 @@ class Engine:
         cardinality check — the write is where Observation metrics become
         available)."""
         entry = self._manifest["tables"].get(name, {})
+        new_df = self._require_not_null(name, new_df)
         vt = self._versioned_for(name)
         if vt is not None:
             self._versioned_rewrite(

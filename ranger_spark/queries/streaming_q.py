@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 from ranger_spark.queries import register
 from ranger_spark.streaming.ingest import windowed_counts
 from ranger_spark.streaming.runtime import drain_scope, source_size
-from ranger_spark.tables import _normalize_events_ts
+from ranger_spark.tables import (
+    _normalize_events_ts,
+    parquet_schema,
+    read_parquet_file,
+)
 
 
 def _events_bytes(sf_dir: str) -> int:
@@ -38,11 +42,11 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a streaming source. File streams need a directory
     basePath; pathGlobFilter narrows the listing to the one table so the
     other tables in sf_dir never enter the stream."""
-    # Schema must be declared for file streams; take it from the batch
-    # reader so the TIMESTAMP(NANOS) legacy handling in tables.load stays
-    # the single source of truth.
+    # Schema must be declared for file streams; read it from the footer
+    # under the same TIMESTAMP(NANOS) legacy conf tables.load sets, so
+    # the stream and the batch table agree on ts.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -974,7 +978,7 @@ def stream_neardup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
     from ranger_spark.operators.dedup import shingle_set_hashes
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     src = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1150,7 +1154,7 @@ def stream_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ranger_spark.operators.text import normalize_text, token_count
     from ranger_spark.operators.urls import canonicalize_url
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     src = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1214,7 +1218,7 @@ def stream_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
          ("site21.example.com",)],
         ["host"],
     )
-    docs_b = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs_b = read_parquet_file(spark, f"{sf_dir}/documents.parquet")
     cat_all = variants(docs_b.filter(F.col("doc_id") % 11 == 5)).select(
         canonicalize_url(F.col("url")).alias("curl")
     )

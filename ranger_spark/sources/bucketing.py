@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ranger_spark.tables import parquet_schema, read_parquet_file
+
 
 def write_bucketed(
     df: DataFrame,
@@ -110,9 +112,9 @@ def ensure_bucketed_layout(
         loc = os.path.join(root, name)
         built = os.path.exists(os.path.join(loc, "_SUCCESS"))
         if built:
-            df = spark.read.parquet(f"{src_dir}/{name}.parquet")
+            schema = parquet_schema(spark, f"{src_dir}/{name}.parquet")
             cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
             )
             spark.sql(
                 f"CREATE TABLE {qual} ({cols}) USING parquet"
@@ -125,7 +127,7 @@ def ensure_bucketed_layout(
                 # bucket spec share Murmur3 pmod, so each bucket lands in
                 # exactly ONE file — required for the scan to trust
                 # SORTED BY (multi-file buckets re-sort before SMJ)
-                spark.read.parquet(f"{src_dir}/{name}.parquet")
+                read_parquet_file(spark, f"{src_dir}/{name}.parquet")
                 .repartition(buckets, key)
                 .write.mode("overwrite")
                 .bucketBy(buckets, key)

@@ -752,6 +752,7 @@ def _insert_rows_dataframe(
             for f in schema.fields
         ]
     )
+    out = engine._require_not_null(qualified, out)
     # the SQL path commits under engine.execute's statement lock; this
     # direct append must take the same lock or a concurrent statement
     # could observe the catalog mid-commit

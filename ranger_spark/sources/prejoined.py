@@ -29,6 +29,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ranger_spark.tables import read_parquet_file
+
 #: projection columns: lineitem side then orders side
 PROJECTION_COLS = (
     "l_orderkey",
@@ -60,10 +62,10 @@ def ensure_prejoined_fact(
     path = layout_path or prejoined_path(src_dir)
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    li = spark.read.parquet(os.path.join(src_dir, "lineitem.parquet")).select(
+    li = read_parquet_file(spark, os.path.join(src_dir, "lineitem.parquet")).select(
         "l_orderkey", "l_extendedprice", "l_discount", "l_shipdate"
     )
-    od = spark.read.parquet(os.path.join(src_dir, "orders.parquet")).select(
+    od = read_parquet_file(spark, os.path.join(src_dir, "orders.parquet")).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
     (

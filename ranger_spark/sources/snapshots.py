@@ -30,6 +30,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ranger_spark.frames import local_frame
+from ranger_spark.tables import parquet_schema
+
 
 class SnapshotTable:
     def __init__(self, path: str):
@@ -109,7 +112,9 @@ class SnapshotTable:
         if version == 0:
             raise FileNotFoundError(f"no snapshots in {self.path}")
         files = self._load(version)["files"]
-        return spark.read.parquet(*files)
+        # the newest commit's file is listed last and carries the
+        # current schema
+        return spark.read.schema(parquet_schema(spark, files[-1])).parquet(*files)
 
     def incremental(
         self, spark: SparkSession, from_version: int, to_version: int | None = None
@@ -121,8 +126,9 @@ class SnapshotTable:
         for v in range(from_version + 1, to_version + 1):
             added.extend(self._load(v)["added_files"])
         if not added:
-            return spark.read.parquet(*self._load(to_version)["files"]).limit(0)
-        return spark.read.parquet(*added)
+            newest = self._load(to_version)["files"][-1]
+            return local_frame(spark, [], parquet_schema(spark, newest))
+        return spark.read.schema(parquet_schema(spark, added[-1])).parquet(*added)
 
     def history(self) -> list[dict]:
         return [

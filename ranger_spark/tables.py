@@ -6,12 +6,15 @@ stream table and LLM-pipeline tables ``documents`` / ``embeddings``.
 
 At 100 TB these would be partitioned Iceberg/parquet datasets; reads here go
 through ``spark.read.parquet`` so predicate pushdown / column pruning apply
-exactly as they would on a partitioned lake layout.
+exactly as they would on a partitioned lake layout. The schema of a known
+file comes from its footer (:func:`parquet_schema`), as a table format
+takes it from metadata, so loading a table runs no Spark job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 TABLES = (
     "region",
@@ -31,12 +34,12 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
 
-# Per-session plan cache: spark.read.parquet() pays ~0.1 s of file
-# listing + footer schema inference per call; the returned DataFrame is
-# an immutable lazy plan, so re-serving it is safe as long as the files
-# under sf_dir don't change mid-session (they don't — the driver
-# generates testdata once). Keyed by session so a restarted SparkSession
-# never sees another session's JVM plan handles.
+# Per-session plan cache: a load pays one driver-side footer read
+# (parquet_schema, ~20 ms) plus the file listing and plan construction;
+# the returned DataFrame is an immutable lazy plan, so re-serving it is
+# safe as long as the files under sf_dir don't change mid-session (they
+# don't — the driver generates testdata once). Keyed by session so a
+# restarted SparkSession never sees another session's JVM plan handles.
 from weakref import WeakKeyDictionary  # noqa: E402
 
 _PLAN_CACHE: WeakKeyDictionary = WeakKeyDictionary()
@@ -78,12 +81,48 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (lossless — the data has microsecond resolution) and normalize
         # below so every consumer sees one canonical dtype.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet_file(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_events_ts(df)
     if cache is not None:
         cache[key] = df
     return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers for one Parquet file,
+    read from its footer on the driver.
+
+    A schema-less ``spark.read.parquet`` runs a Spark job to read one
+    footer. This reads that footer in the driver JVM and converts it the
+    way the job does for each file: ``ParquetFileFormat.
+    readSchemaFromFooter`` with a ``ParquetToSparkSchemaConverter`` built
+    from the session's SQLConf. So a Spark-written file's stored row
+    schema wins over its Parquet types, and ``inferTimestampNTZ``,
+    ``nanosAsLong`` and ``binaryAsString`` apply as they do to inference.
+    Callers pass the result to ``spark.read.schema(...)``; a directory or
+    a file of unknown layout is read without it."""
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    state = spark._jsparkSession.sessionState()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    metadata = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            hpath, state.newHadoopConf()
+        ),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(hpath, metadata),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    # a file source reports every column nullable, whatever the footer says
+    return _parse_datatype_json_string(schema.asNullable().json())
+
+
+def read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """One Parquet file as a DataFrame, its schema read from the footer."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
