@@ -17,6 +17,7 @@ reference's DuckDB reader (duckdb/engine.go:395-400).
 from __future__ import annotations
 
 import functools
+import os
 import re
 import threading
 import time
@@ -2207,11 +2208,7 @@ class Engine:
                 for src, f in zip(df.columns, target.fields)
             ]
         )
-        self._append_commit(
-            name,
-            "append",
-            lambda: out.write.insertInto(name),
-        )
+        self._append_commit(name, out)
         n = obs.get["n"]
         return QueryResult(
             [], [], n, message=f"table '{name}' created with {n} row(s)"
@@ -2412,12 +2409,7 @@ class Engine:
                 len(rows),
                 message=f"overwrote '{name}' with {len(rows)} row(s)",
             )
-        self._append_commit(
-            name,
-            "append",
-            lambda: out.write.insertInto(name),
-            out_df=out,
-        )
+        self._append_commit(name, out)
         return QueryResult(
             [], [], len(rows), message=f"inserted {len(rows)} row(s) into '{name}'"
         )
@@ -2480,13 +2472,7 @@ class Engine:
             return QueryResult(
                 [], [], n, message=f"overwrote '{name}' with {n} row(s)"
             )
-        out = self._require_not_null(name, out)
-        self._append_commit(
-            name,
-            "append",
-            lambda: out.write.insertInto(name),
-            out_df=out,
-        )
+        self._append_commit(name, out)
         n = obs.get["n"]
         return QueryResult(
             [], [], n, message=f"inserted {n} row(s) into '{name}'"
@@ -2942,8 +2928,10 @@ class Engine:
         own job through ``raise_error`` (no extra job), and
         ``_reports_not_null`` reports it as VALIDATION_FAILED. Spark's
         session catalog keeps parquet columns nullable whatever the DDL
-        says, so the engine enforces NOT NULL itself, as the VALUES path
-        does in ``_validate_batch``."""
+        says, so the engine enforces NOT NULL itself: ``_append_commit``
+        and ``_rewrite_table``, which every Spark-side write goes
+        through, apply this guard (the VALUES path also checks its rows
+        up front in ``_validate_batch``)."""
         required = {
             c for c, _, nullable in self._schemas.get(name, ()) if not nullable
         }
@@ -2969,20 +2957,20 @@ class Engine:
         )
 
     @_reports_not_null
-    def _append_commit(
-        self, name: str, operation: str, write_fn, out_df: DataFrame | None = None
-    ) -> None:
-        """Run an appending write and publish it as a snapshot commit: new
-        files land in the *current* snapshot dir (insertInto), the commit
-        lists previous files + added ones — no data is rewritten, the
-        commit itself is one JSON link (an Iceberg fast-append).
+    def _append_commit(self, name: str, out_df: DataFrame) -> None:
+        """Append ``out_df`` (in the table's column order) to ``name`` and
+        publish it as a snapshot commit: new files land in the *current*
+        snapshot dir (insertInto), the commit lists previous files + added
+        ones — no data is rewritten, the commit itself is one JSON link (an
+        Iceberg fast-append). The table's NOT NULL columns are guarded in
+        the written projection (``_require_not_null``).
 
-        When ``out_df`` is given and the table declares differing
-        per-column codecs, the write is routed through the distributed
-        Arrow writer (sources/arrow_write) into the same snapshot dir
-        instead of ``write_fn`` — the SQL surface honoring
+        When the table declares differing per-column codecs, the write is
+        routed through the distributed Arrow writer (sources/arrow_write)
+        into the same snapshot dir instead — the SQL surface honoring
         reference compression.go:103-109 end-to-end."""
-        plan = self._column_codec_plan(name) if out_df is not None else None
+        out_df = self._require_not_null(name, out_df)
+        plan = self._column_codec_plan(name)
         vt = self._versioned_for(name)
         if vt is None:
             if plan is not None:
@@ -2991,37 +2979,33 @@ class Engine:
                     f"table '{name}' declares differing per-column codecs "
                     "but has no filesystem snapshot dir to write them to",
                 )
-            write_fn()
+            out_df.write.insertInto(name)
             return
         cur = vt.current_version()
         data_dir = vt.snapshot_dir(cur) if cur else None
+        if plan is not None and data_dir is None:
+            raise RangerError(
+                VALIDATION_FAILED,
+                f"table '{name}' has no current snapshot dir for a "
+                "per-column-codec write",
+            )
+        before = walk_parquet(data_dir) if data_dir else set()
         if plan is not None:
-            if data_dir is None:
-                raise RangerError(
-                    VALIDATION_FAILED,
-                    f"table '{name}' has no current snapshot dir for a "
-                    "per-column-codec write",
-                )
             from ranger_spark.sources.arrow_write import (
                 write_parquet_column_codecs,
             )
 
-            overrides, default = plan
-            before = walk_parquet(data_dir)
-            write_parquet_column_codecs(out_df, data_dir, overrides, default)
+            try:
+                write_parquet_column_codecs(out_df, data_dir, *plan)
+            except Exception:
+                # the Arrow writer has no commit protocol: a failed job
+                # leaves its tasks' files in the live dir
+                for f in walk_parquet(data_dir) - before:
+                    os.remove(f)
+                raise
             self.spark.catalog.refreshTable(name)
-            added = sorted(walk_parquet(data_dir) - before)
-            vt.commit(
-                files=None,
-                data_dir=data_dir,
-                operation=operation,
-                added=added,
-            )
-            self._emit_iceberg(name)
-            self._s3_sync_up(name)
-            return
-        before = walk_parquet(data_dir) if data_dir else set()
-        write_fn()
+        else:
+            out_df.write.insertInto(name)
         if data_dir is None:
             return
         added = sorted(walk_parquet(data_dir) - before)
@@ -3033,7 +3017,7 @@ class Engine:
         vt.commit(
             files=None,
             data_dir=data_dir,
-            operation=operation,
+            operation="append",
             added=added,
         )
         self._emit_iceberg(name)
@@ -3416,11 +3400,7 @@ class Engine:
                 for c, f in zip(df.columns, target.fields)
             ]
         )
-        self._append_commit(
-            name,
-            "append",
-            lambda: out.write.insertInto(name),
-        )
+        self._append_commit(name, out)
         self._mv_drop_pins()
         meta = {
             "body": body,

@@ -752,7 +752,6 @@ def _insert_rows_dataframe(
             for f in schema.fields
         ]
     )
-    out = engine._require_not_null(qualified, out)
     # the SQL path commits under engine.execute's statement lock; this
     # direct append must take the same lock or a concurrent statement
     # could observe the catalog mid-commit
@@ -760,11 +759,7 @@ def _insert_rows_dataframe(
 
     lock = getattr(engine, "_stmt_lock", None)
     with lock if lock is not None else contextlib.nullcontext():
-        engine._append_commit(
-            qualified,
-            "append",
-            lambda: out.write.insertInto(qualified),
-        )
+        engine._append_commit(qualified, out)
     return len(rows)
 
 class NativeServer:

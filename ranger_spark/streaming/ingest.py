@@ -53,8 +53,8 @@ def stream_ingest(
 
     ``engine``: when the target is an engine table, pass the Engine so
     every micro-batch lands as a REAL snapshot commit (manifest
-    fast-append under the statement lock) instead of a bare file write —
-    the batch becomes visible to time travel, VACUUM's orphan scan, the
+    fast-append under the statement lock, NOT NULL columns enforced)
+    instead of a bare file write — the batch becomes visible to time travel, VACUUM's orphan scan, the
     Astha CDC bus, and therefore O(delta) MV auto-maintenance. Without
     it, files land unmanifested: readable (the catalog points at the
     live snapshot dir) but invisible to every consumer of the commit
@@ -71,11 +71,7 @@ def stream_ingest(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         if engine is not None:
             with engine._stmt_lock:  # noqa: SLF001 — same-process composition
-                engine._append_commit(  # noqa: SLF001
-                    table,
-                    "append",
-                    lambda: batch_df.write.mode("append").insertInto(table),
-                )
+                engine._append_commit(table, batch_df)  # noqa: SLF001
         else:
             batch_df.write.mode("append").insertInto(table)
         if cdc_table is not None:

@@ -90,38 +90,63 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema ``spark.read.parquet(path)`` infers for one Parquet file,
-    read from its footer on the driver.
+    """The schema ``spark.read.parquet(path)`` infers for a Parquet file or
+    a directory of them, read from one footer on the driver.
 
     A schema-less ``spark.read.parquet`` runs a Spark job to read one
     footer. This reads that footer in the driver JVM and converts it the
-    way the job does for each file: ``ParquetFileFormat.
-    readSchemaFromFooter`` with a ``ParquetToSparkSchemaConverter`` built
-    from the session's SQLConf. So a Spark-written file's stored row
-    schema wins over its Parquet types, and ``inferTimestampNTZ``,
-    ``nanosAsLong`` and ``binaryAsString`` apply as they do to inference.
-    Callers pass the result to ``spark.read.schema(...)``; a directory or
-    a file of unknown layout is read without it."""
+    way the job does: ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's SQLConf.
+    So a Spark-written file's stored row schema wins over its Parquet
+    types, and ``inferTimestampNTZ``, ``nanosAsLong`` and
+    ``binaryAsString`` apply as they do to inference. For a directory
+    (a Spark write's ``x.parquet/``) the footer is that of the first
+    visible data file in path order, the one Spark's inference reads when
+    schemas are not merged; partition columns of ``k=v`` directories are
+    not in it, and the reader appends them as it does after inference.
+    Callers pass the result to ``spark.read.schema(...)``."""
     jvm = spark._jvm
     pq = jvm.org.apache.spark.sql.execution.datasources.parquet
     state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(conf)
+    status = min(
+        _data_files(fs, fs.getFileStatus(hpath)),
+        key=lambda s: s.getPath().toString(),
+        default=None,
+    )
+    if status is None:
+        raise FileNotFoundError(f"no Parquet data file under {path}")
     metadata = pq.ParquetFooterReader.readFooter(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            hpath, state.newHadoopConf()
-        ),
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
         jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
     )
     schema = pq.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(hpath, metadata),
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), metadata),
         pq.ParquetToSparkSchemaConverter(state.conf()),
     )
     # a file source reports every column nullable, whatever the footer says
     return _parse_datatype_json_string(schema.asNullable().json())
 
 
+def _data_files(fs, status):
+    """``status`` if it is a file, else the files under it, skipping the
+    names Spark's file index hides (``_SUCCESS``, ``.crc``, ``_temporary``;
+    a ``_k=v`` partition directory stays)."""
+    if not status.isDirectory():
+        yield status
+        return
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        yield from _data_files(fs, child)
+
+
 def read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
-    """One Parquet file as a DataFrame, its schema read from the footer."""
+    """A Parquet file or directory as a DataFrame, its schema read from a
+    footer."""
     return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 

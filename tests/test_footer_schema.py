@@ -16,7 +16,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ranger_spark.tables import TABLES, load, parquet_schema
+from ranger_spark.queries import load_all
+from ranger_spark.sources.replicate import build_replicated
+from ranger_spark.tables import TABLES, load, parquet_schema, read_parquet_file
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent / "ranger_spark"
 
@@ -81,6 +83,42 @@ def test_footer_schema_of_nanos_timestamps_follows_nanos_as_long(spark, tmp_path
     schema = parquet_schema(spark, path)
     assert schema == spark.read.parquet(path).schema
     assert schema["ts"].dataType.simpleString() == "bigint"
+
+
+def test_table_load_reads_spark_written_directories(spark, tmp_path):
+    # a replica writes every table as a Spark output directory
+    # (x.parquet/part-*.parquet plus _SUCCESS and .crc files)
+    src, out = "/root/testdata/sf0.001", str(tmp_path / "x2")
+    build_replicated(spark, src, out, 2)
+    for name in TABLES:
+        path = f"{out}/{name}.parquet"
+        assert parquet_schema(spark, path) == spark.read.parquet(path).schema, name
+    assert load(spark, out, "lineitem").count() == 2 * load(
+        spark, src, "lineitem"
+    ).count()
+    q1 = load_all()["q1_pricing_summary"].builder
+    base = {r[0:2]: r for r in q1(spark, src).collect()}
+    replica = {r[0:2]: r for r in q1(spark, out).collect()}
+    assert replica.keys() == base.keys()
+    assert all(replica[k]["count_order"] == 2 * base[k]["count_order"] for k in base)
+
+
+def test_footer_schema_of_a_partitioned_directory(spark, tmp_path):
+    out = str(tmp_path / "part")
+    spark.sql(
+        "SELECT id, id % 3 AS k, CAST(id AS STRING) AS s FROM range(9)"
+    ).write.partitionBy("k").parquet(out)
+    # the footer holds the data columns; the reader appends k from the paths
+    assert parquet_schema(spark, out).names == ["id", "s"]
+    df = read_parquet_file(spark, out)
+    assert df.schema == spark.read.parquet(out).schema
+    assert df.count() == 9
+    empty = tmp_path / "empty"
+    (empty / "_temporary").mkdir(parents=True)
+    (empty / "_SUCCESS").touch()
+    (empty / ".part-0.parquet.crc").touch()
+    with pytest.raises(FileNotFoundError):
+        parquet_schema(spark, str(empty))
 
 
 def test_table_load_runs_no_job_and_time_travel_no_extra_job(spark, engine, tmp_path):

@@ -79,3 +79,58 @@ def test_large_native_copy_of_null_into_not_null_column_is_rejected(
         insert_string_block(engine, table, ["id", "v"], rows)
     assert err.value.code == VALIDATION_FAILED
     assert _state(engine, table) == before
+
+
+def test_not_null_holds_on_a_per_column_codec_append(engine):
+    # the Arrow per-column-codec writer has no commit protocol: the files
+    # its tasks wrote before the NULL failed the job are removed. The NULL
+    # is the last row of the last partition, so every task has opened its
+    # file by the time the job fails.
+    engine.execute("CREATE DATABASE IF NOT EXISTS nn;")
+    engine.execute("DROP TABLE IF EXISTS nn.cc;")
+    engine.execute(
+        "CREATE TABLE nn.cc (id int64 NOT NULL, v string) "
+        "SETTINGS column_compression = 'id:zstd, v:gzip';"
+    )
+    engine.execute("INSERT INTO nn.cc (id, v) VALUES (1, 'a');")
+    before = _state(engine, "nn.cc")
+    with pytest.raises(RangerError) as err:
+        engine.execute(
+            "INSERT INTO nn.cc SELECT IF(id = 399999, NULL, id), 'x' "
+            "FROM range(0, 400000, 1, 4);"
+        )
+    assert err.value.code == VALIDATION_FAILED
+    assert _state(engine, "nn.cc") == before
+    engine.execute("DROP DATABASE nn CASCADE;")
+
+
+def test_not_null_holds_on_an_engine_backed_stream_ingest(spark, engine, tmp_path):
+    import json
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from ranger_spark.streaming.ingest import stream_ingest
+
+    engine.execute("CREATE DATABASE IF NOT EXISTS nn;")
+    engine.execute("DROP TABLE IF EXISTS nn.s;")
+    engine.execute("CREATE TABLE nn.s (id int64 NOT NULL, v string);")
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "f0.json").write_text(
+        "\n".join(json.dumps(r) for r in [{"id": 1, "v": "a"}, {"id": None, "v": "b"}])
+    )
+    before = _state(engine, "nn.s")
+    q = stream_ingest(
+        spark,
+        str(src),
+        StructType(
+            [StructField("id", LongType()), StructField("v", StringType())]
+        ),
+        "nn.s",
+        str(tmp_path / "ckpt"),
+        engine=engine,
+    )
+    with pytest.raises(Exception, match="column 'id' of 'nn.s' cannot be null"):
+        q.awaitTermination(60)
+    assert _state(engine, "nn.s") == before
+    engine.execute("DROP DATABASE nn CASCADE;")
