@@ -1,5 +1,5 @@
 """S3-backed warehouse demo: the reference's `STORAGE s3` path
-end-to-end against an in-process S3-compatible object store.
+end-to-end against moto's S3 server, run in-process and offline.
 
     python examples/s3_warehouse.py
 
@@ -14,16 +14,19 @@ s3a:// root on a cluster with hadoop-aws for the direct path).
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import sys
 import tempfile
 
+from moto.server import ThreadedMotoServer
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ranger_spark.engine import Engine
 from ranger_spark.session import get_spark
-from ranger_spark.sources.s3_shim import serve
+from ranger_spark.sources.s3fs import S3ObjectFS
 
 
 def main() -> None:
@@ -32,10 +35,14 @@ def main() -> None:
         cpus=8,
         extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="s3demo_wh_")},
     )
-    shim = serve()
+    logging.getLogger("werkzeug").setLevel(logging.WARNING)  # per-request lines
+    server = ThreadedMotoServer(ip_address="127.0.0.1", port=0, verbose=False)
+    server.start()
+    endpoint = f"http://127.0.0.1:{server.get_host_and_port()[1]}"
+    store = S3ObjectFS(endpoint)
     cache = tempfile.mkdtemp(prefix="s3demo_cache_")
     spark.conf.set(Engine.S3_ROOT_CONF, "s3://demo-bucket/warehouse")
-    spark.conf.set(Engine.S3_ENDPOINT_CONF, shim.endpoint)
+    spark.conf.set(Engine.S3_ENDPOINT_CONF, endpoint)
     spark.conf.set(Engine.S3_CACHE_CONF, cache)
 
     e = Engine(spark)
@@ -53,7 +60,7 @@ def main() -> None:
         e.execute("SELECT day, clicks FROM lake.metrics VERSION AS OF 2;").rows,
     )
     print("\n-- every commit is in the object store --")
-    for k in shim.keys("demo-bucket")[:8]:
+    for k in sorted(store.list_prefix("demo-bucket", ""))[:8]:
         print("  s3://demo-bucket/" + k)
 
     print("\n-- disaster drill 1: cold cache, recover() --")
@@ -72,8 +79,8 @@ def main() -> None:
     print("rows after rebuild:", e3.execute("SELECT * FROM lake.metrics;").rows)
 
     e3.execute("DROP TABLE lake.metrics;")
-    print("\nremote objects after DROP:", shim.keys("demo-bucket"))
-    shim.shutdown()
+    print("\nremote objects after DROP:", sorted(store.list_prefix("demo-bucket", "")))
+    server.stop()
     spark.stop()
 
 

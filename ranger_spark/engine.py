@@ -1340,7 +1340,10 @@ class Engine:
                 .parquet(*files)
             )
         else:
-            df = self.spark.table(name).limit(0)
+            columns = vt.manifest(version)["columns"]
+            df = local_frame(
+                self.spark, [], itypes.to_spark_schema([tuple(c) for c in columns])
+            )
         df.createOrReplaceTempView(view)
         return view
 
@@ -2090,7 +2093,7 @@ class Engine:
             data_dir = os.path.join(location, "s1")
             os.makedirs(data_dir, exist_ok=True)
             VersionedTable(location).commit(
-                files=[], data_dir=data_dir, operation="create"
+                files=[], data_dir=data_dir, operation="create", columns=columns
             )
         entry = {
             "columns": columns,
@@ -3019,6 +3022,7 @@ class Engine:
             data_dir=data_dir,
             operation="append",
             added=added,
+            columns=self._manifest["tables"][name]["columns"],
         )
         self._emit_iceberg(name)
         self._s3_sync_up(name)
@@ -3097,6 +3101,7 @@ class Engine:
             files=sorted(walk_parquet(new_dir)),
             data_dir=new_dir,
             operation=operation,
+            columns=entry["columns"],
         )
         self._emit_iceberg(name)
         self._s3_sync_up(name)
@@ -3793,7 +3798,9 @@ class Engine:
         vt = self._versioned_for(name)
         staging = f"{name.split('.')[0]}.__staging_{name.split('.')[-1]}"
         if vt is not None:
-            self._versioned_rewrite(name, entry, vt, new_df, part_by, "alter")
+            self._versioned_rewrite(
+                name, {**entry, "columns": new_cols}, vt, new_df, part_by, "alter"
+            )
         else:
             new_df.write.mode("overwrite").saveAsTable(staging)
 

@@ -124,23 +124,6 @@ def shingle_df(
     ).select(id_col, base_hash32(F.col("shingle")).alias("sh_hash"))
 
 
-def minhash_signatures(
-    sh: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """k independent minhashes per doc in ONE aggregation (k min() columns
-    over affine transforms of the base hash — no k-way explode; the
-    shuffle is O(docs × k × 8B))."""
-    params = _affine_params(num_hashes)
-    return sh.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("sh_hash") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
-                f"mh_{i}"
-            )
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-
-
 def lsh_bands(
     sig: DataFrame, id_col: str, num_hashes: int = 16, bands: int = 8
 ) -> DataFrame:
@@ -159,77 +142,6 @@ def lsh_bands(
     return sig.select(
         F.col(id_col), F.explode(F.array(*rows)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-
-
-def lsh_candidate_pairs(bands_df: DataFrame, id_col: str) -> DataFrame:
-    """Distinct candidate pairs (a < b) whose signatures collide in ≥1 band.
-    The join key (band, band_key) is high-cardinality by construction, so
-    this is a well-distributed shuffle join; a degenerate hot bucket (all
-    docs identical) is the one skew case — AQE skew-join splitting handles
-    it, and the distinct() caps output at one row per pair."""
-    a = bands_df.select(
-        F.col(id_col).alias("id_a"), "band", "band_key"
-    )
-    b = bands_df.select(
-        F.col(id_col).alias("id_b"), "band", "band_key"
-    )
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def jaccard_verify(
-    pairs: DataFrame, sh: DataFrame, id_col: str
-) -> DataFrame:
-    """Exact Jaccard (over hashed shingle sets) for candidate pairs.
-
-    The shingle table is first collapsed to ONE row per doc holding the
-    distinct shingle-hash array; each candidate pair then joins the two
-    arrays and `array_intersect` computes |A∩B| JVM-side. Compared to the
-    naive plan (pairs ⋈ shingles ⋈ shingles grouped by pair) this removes
-    the candidates × shingles_per_doc row expansion and the (id, sh_hash)
-    re-shuffle — the only shuffles left are two id-keyed joins of the pair
-    list against a docs-sized table (measured 2.1 s → 0.3 s on the sf0.1
-    verify stage). Arrays are bounded by shingles-per-doc, the same payload
-    the naive plan shuffles row-by-row, so executor memory at 100 TB is
-    unchanged; intersection size is order-independent, so the
-    nondeterministic collect_list order cannot affect results."""
-    doc_sh = sh.groupBy(id_col).agg(
-        F.collect_list("sh_hash").alias("__shs"),
-        F.count(F.lit(1)).alias("n_sh"),
-    )
-    a = doc_sh.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__shs").alias("__shs_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = doc_sh.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__shs").alias("__shs_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__shs_a", "__shs_b")).alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
 
 
 def minhash_lsh_dedup(

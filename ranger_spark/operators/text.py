@@ -65,16 +65,6 @@ def word_shingles(tokens: Column, k: int = 2) -> Column:
     )
 
 
-def char_ngrams(col: Column, n: int = 8) -> Column:
-    """Distinct character n-grams of a string."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.lit(1), F.length(col) - (n - 1))),
-            lambda i: col.substr(i, F.lit(n)),
-        )
-    )
-
-
 def normalize_text(col: Column) -> Column:
     """Lowercase + collapse non-alphanumerics to single spaces + trim —
     the canonical form used for fingerprinting and exact dedup."""

@@ -3,11 +3,6 @@
 /status /info /health), fronted over our Engine. Stdlib-only
 (http.server), threaded, JSON-shaped like the reference's QueryResult
 {data, row_count, columns, message, query_id}.
-
-This is a dev/gateway surface; the cluster-grade network endpoint is the
-Spark Connect gRPC plugin (sources/connect_server.py). Both front the same
-Engine, mirroring the reference's one-engine-many-protocols layering
-(server/gateway/gateway.go).
 """
 
 from __future__ import annotations

@@ -15,8 +15,8 @@ Delete object ops, exercised by s3/fs_test.go). Two deployment shapes:
   store via the S3 REST API; a fresh engine hydrates the cache from S3
   on ``recover()``. The object store is the durability layer — this is
   the local-disk-cache-over-object-store architecture, and it is what
-  lets the sandbox exercise the complete S3 path against an
-  S3-compatible server (sources/s3_shim.py or any real endpoint).
+  lets tests exercise the complete S3 path against any S3-compatible
+  server (moto's in the test suite, or a real endpoint).
 
 All transfers go through boto3 (a real S3 client — signature v4,
 aws-chunked bodies, batch deletes), so the wire behavior matches what a

@@ -209,6 +209,7 @@ class VersionedTable:
         data_dir: str,
         operation: str,
         added: list[str] | None = None,
+        columns: list | None = None,
     ) -> int:
         """Publish snapshot N+1 with the given full file list.
 
@@ -219,6 +220,9 @@ class VersionedTable:
         commit on a stale version and silently drop the other's files).
         Passing a precomputed ``files`` list is reserved for rewrites
         (UPDATE/DELETE/MERGE), whose file list replaces history by design.
+        ``columns`` (the catalog entry's ``[name, type, nullable]`` list)
+        is the table's schema at this version: a version with no files
+        has no footer to read it from.
         """
         import fcntl
 
@@ -239,6 +243,7 @@ class VersionedTable:
                     "files": sorted(files),
                     "added_files": sorted(added if added is not None else files),
                     "parent": prev or None,
+                    "columns": columns,
                 }
                 tmp = self._manifest_path(version) + f".tmp-{uuid.uuid4().hex[:8]}"
                 with open(tmp, "w") as f:

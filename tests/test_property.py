@@ -506,28 +506,3 @@ def test_copy_text_rows_roundtrip_property(rows):
         for row in rows
     ).encode()
     assert _parse_copy_rows(payload, "text", 2) == [tuple(r) for r in rows]
-
-
-@given(
-    st.lists(st.binary(min_size=1, max_size=300), min_size=0, max_size=8),
-    st.booleans(),
-    st.booleans(),
-)
-@settings(max_examples=150, deadline=None)
-def test_aws_chunked_decode_property(chunks, sign_ext, trailer):
-    """S3 shim aws-chunked decoder (r8): any chunking of any payload —
-    with or without per-chunk signature extensions and checksum
-    trailers, upper or lower hex sizes — decodes to the original bytes.
-    This is the framing modern boto3 emits for PutObject."""
-    from ranger_spark.sources.s3_shim import _decode_aws_chunked
-
-    wire = bytearray()
-    for i, c in enumerate(chunks):
-        size = format(len(c), "X" if i % 2 else "x").encode()
-        ext = b";chunk-signature=" + b"ab" * 32 if sign_ext else b""
-        wire += size + ext + b"\r\n" + c + b"\r\n"
-    wire += b"0" + (b";chunk-signature=" + b"cd" * 32 if sign_ext else b"") + b"\r\n"
-    if trailer:
-        wire += b"x-amz-checksum-crc32:AAAAAA==\r\n"
-    wire += b"\r\n"
-    assert _decode_aws_chunked(bytes(wire)) == b"".join(chunks)

@@ -1,12 +1,12 @@
-"""End-to-end ``STORAGE s3`` over a real S3 client + in-process S3 API.
+"""End-to-end ``STORAGE s3`` over a real S3 client and an S3 test server.
 
 The reference's most-tested storage engine is S3 (server/storage/s3/
 fs.go, exercised by s3/fs_test.go): CREATE/INSERT/SELECT/UPDATE/DROP
 against an object store. Here the engine's mirror mode (local Spark
-cache + per-commit S3 sync, sources/s3fs.py) runs against the
-in-process S3-compatible shim (sources/s3_shim.py) through boto3 — a
-production S3 client, so signatures, aws-chunked bodies, ListObjectsV2
-pagination, and batch deletes all cross a real wire.
+cache + per-commit S3 sync, sources/s3fs.py) runs through boto3 against
+moto's S3 server (``ThreadedMotoServer``, in-process, offline), so
+signatures, ListObjectsV2 pagination and batch deletes all cross a real
+HTTP wire.
 """
 
 from __future__ import annotations
@@ -18,13 +18,44 @@ import tempfile
 import pytest
 
 
+class _S3Server:
+    """moto's S3 server on an ephemeral localhost port."""
+
+    def __init__(self) -> None:
+        import boto3
+        from botocore.config import Config
+        from moto.server import ThreadedMotoServer
+
+        self.server = ThreadedMotoServer(
+            ip_address="127.0.0.1", port=0, verbose=False
+        )
+        self.server.start()
+        self.port = self.server.get_host_and_port()[1]
+        self.endpoint = f"http://127.0.0.1:{self.port}"
+        self.client = boto3.client(
+            "s3", endpoint_url=self.endpoint, aws_access_key_id="k",
+            aws_secret_access_key="s", region_name="us-east-1",
+            config=Config(s3={"addressing_style": "path"}),
+        )
+
+    def keys(self, bucket: str) -> list[str]:
+        """Every key in the bucket, sorted; [] for a missing bucket."""
+        pages = self.client.get_paginator("list_objects_v2").paginate(
+            Bucket=bucket
+        )
+        try:
+            return sorted(
+                o["Key"] for page in pages for o in page.get("Contents", [])
+            )
+        except self.client.exceptions.NoSuchBucket:
+            return []
+
+
 @pytest.fixture(scope="module")
 def shim():
-    from ranger_spark.sources.s3_shim import serve
-
-    s = serve()
+    s = _S3Server()
     yield s
-    s.shutdown()
+    s.server.stop()
 
 
 @pytest.fixture()
@@ -199,27 +230,24 @@ def test_s3fs_sync_roundtrip_unit(shim, tmp_path):
     assert shim.keys("unit") == []
 
 
-def test_s3_shim_speaks_to_pyarrow_sdk(shim):
-    """Interop fidelity: a SECOND real S3 client (AWS SDK C++ via
-    pyarrow.fs.S3FileSystem — different signer, multipart writer, range
-    reader than boto3) round-trips parquet through the shim."""
-    pa_fs = pytest.importorskip("pyarrow.fs")
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def test_s3fs_list_and_delete_past_one_page(shim):
+    """ListObjectsV2 answers at most 1000 keys a page and DeleteObjects
+    takes at most 1000 keys a call: list_prefix must follow the
+    continuation token and delete_prefix must batch, so 1,005 keys are
+    all listed and then all deleted."""
+    from ranger_spark.sources.s3fs import S3ObjectFS
 
-    s3 = pa_fs.S3FileSystem(
-        endpoint_override=shim.endpoint,
-        access_key="k",
-        secret_key="s",
-        region="us-east-1",
-        scheme="http",
-        allow_bucket_creation=True,
-    )
-    s3.create_dir("pa-interop")
-    t = pa.table({"x": [1, 2, 3], "y": ["a", "b", "c"]})
-    pq.write_table(t, "pa-interop/d/t.parquet", filesystem=s3)
-    assert shim.keys("pa-interop") == ["d/t.parquet"]
-    assert pq.read_table("pa-interop/d/t.parquet", filesystem=s3).equals(t)
+    fs = S3ObjectFS(shim.endpoint)
+    fs.ensure_bucket("paged")
+    keys = [f"tbl/part-{i:04d}.parquet" for i in range(1005)]
+    for k in keys:
+        shim.client.put_object(Bucket="paged", Key=k, Body=b"x")
+    shim.client.put_object(Bucket="paged", Key="other/keep", Body=b"y")
+
+    assert sorted(fs.list_prefix("paged", "tbl/")) == keys
+    assert fs.delete_prefix("paged", "tbl/") == 1005
+    assert fs.list_prefix("paged", "tbl/") == {}
+    assert shim.keys("paged") == ["other/keep"]
 
 
 def test_s3_total_loss_catalog_recovery(spark, shim, tmp_path):
@@ -344,48 +372,6 @@ def test_s3_expire_propagates_scoped_deletes(s3_engine, shim):
     e.execute("DROP TABLE s3exp.t;")
 
 
-def test_s3_shim_concurrent_clients(shim):
-    """The shim serves concurrent clients correctly (ThreadingHTTPServer
-    + store lock): 8 threads × 25 put/get/list cycles, no lost or
-    corrupted objects."""
-    import threading
-
-    import boto3
-    from botocore.config import Config
-
-    def worker(tid, errs):
-        try:
-            c = boto3.client(
-                "s3", endpoint_url=shim.endpoint, aws_access_key_id="k",
-                aws_secret_access_key="s", region_name="us-east-1",
-                config=Config(s3={"addressing_style": "path"},
-                              retries={"max_attempts": 1}),
-            )
-            for i in range(25):
-                body = (f"{tid}-{i}-" * 20).encode()
-                key = f"w{tid}/obj{i}"
-                c.put_object(Bucket="conc", Key=key, Body=body)
-                got = c.get_object(Bucket="conc", Key=key)["Body"].read()
-                if got != body:
-                    errs.append(f"corrupt {key}")
-        except Exception as e:  # pragma: no cover - failure detail
-            errs.append(f"{tid}: {e}")
-
-    boto3.client(
-        "s3", endpoint_url=shim.endpoint, aws_access_key_id="k",
-        aws_secret_access_key="s", region_name="us-east-1",
-        config=Config(s3={"addressing_style": "path"}),
-    ).create_bucket(Bucket="conc")
-    errs: list = []
-    ts = [threading.Thread(target=worker, args=(t, errs)) for t in range(8)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join(timeout=60)
-    assert not errs, errs[:3]
-    assert len(shim.keys("conc")) == 8 * 25
-
-
 def test_s3_table_served_over_protocol_gateway(spark, shim, tmp_path):
     """Composition: an s3-mirrored table written over the NATIVE wire
     protocol and read over HTTP — the full production stack (protocol
@@ -439,67 +425,6 @@ def test_s3_table_served_over_protocol_gateway(spark, shim, tmp_path):
             Engine.S3_CACHE_CONF,
         ):
             spark.conf.unset(conf)
-
-
-def test_s3_shim_malformed_chunked_body_is_400(shim):
-    """A malformed aws-chunked body answers a typed 400 XML error, not a
-    dropped connection."""
-    import http.client
-
-    conn = http.client.HTTPConnection("127.0.0.1", shim.port, timeout=10)
-    conn.request(
-        "PUT",
-        "/badbkt/k",
-        body=b"ZZZ\r\nnot-hex\r\n",
-        headers={"x-amz-content-sha256": "STREAMING-UNSIGNED-PAYLOAD-TRAILER"},
-    )
-    resp = conn.getresponse()
-    body = resp.read()
-    assert resp.status == 400 and b"IncompleteBody" in body
-    # connection/server still serviceable
-    conn2 = http.client.HTTPConnection("127.0.0.1", shim.port, timeout=10)
-    conn2.request("PUT", "/badbkt/ok", body=b"fine")
-    assert conn2.getresponse().status == 200
-    conn.close()
-    conn2.close()
-
-
-def test_s3_shim_range_416_and_delimiter_pagination(shim):
-    """Spec conformance (r8 self-review): ranges beyond EOF answer 416
-    InvalidRange (not an empty 206 with a malformed Content-Range), and
-    delimiter pagination never re-emits a CommonPrefix on later pages."""
-    import boto3
-    from botocore.config import Config
-
-    c = boto3.client(
-        "s3", endpoint_url=shim.endpoint, aws_access_key_id="k",
-        aws_secret_access_key="s", region_name="us-east-1",
-        config=Config(s3={"addressing_style": "path"},
-                      retries={"max_attempts": 1}),
-    )
-    c.create_bucket(Bucket="spec")
-    c.put_object(Bucket="spec", Key="small", Body=b"12345")
-    import botocore.exceptions
-
-    with pytest.raises(botocore.exceptions.ClientError) as ei:
-        c.get_object(Bucket="spec", Key="small", Range="bytes=10-20")
-    assert ei.value.response["Error"]["Code"] in ("InvalidRange", "416")
-
-    for k in ("a/1", "a/2", "a/3", "b/1", "c"):
-        c.put_object(Bucket="spec", Key=k, Body=b"x")
-    seen_prefixes, seen_keys, token = [], [], None
-    while True:
-        kw = dict(Bucket="spec", Delimiter="/", MaxKeys=1)
-        if token:
-            kw["ContinuationToken"] = token
-        r = c.list_objects_v2(**kw)
-        seen_prefixes += [p["Prefix"] for p in r.get("CommonPrefixes", [])]
-        seen_keys += [o["Key"] for o in r.get("Contents", [])]
-        if not r["IsTruncated"]:
-            break
-        token = r["NextContinuationToken"]
-    assert seen_prefixes == ["a/", "b/"]  # each prefix exactly once
-    assert seen_keys == ["c", "small"]
 
 
 def test_s3_sync_up_reships_same_size_metadata(shim, tmp_path):
@@ -580,9 +505,8 @@ def test_s3a_direct_path_probe(spark, shim):
     blocked #1). This probe PINS that the blocker is the classpath and
     nothing else: a raw s3a read must fail with the missing-FileSystem/
     class error, not an auth or endpoint error. If this assertion ever
-    fails, the jar appeared — point fs.s3a.endpoint at the shim
-    (s3_shim already speaks sigv4/aws-chunked/ListObjectsV2 to real AWS
-    SDKs) and promote this into the end-to-end test."""
+    fails, the jar appeared — point fs.s3a.endpoint at the moto server
+    and promote this into the end-to-end test."""
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     hconf.set("fs.s3a.endpoint", shim.endpoint)
     hconf.set("fs.s3a.access.key", "ranger")

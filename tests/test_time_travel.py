@@ -126,6 +126,24 @@ def test_partitioned_time_travel(engine):
     ).rows == [(1, "eu"), (2, "us")]
 
 
+def test_file_less_version_answers_in_its_own_schema(engine):
+    """The CREATE snapshot has no file to read a schema from; it answers
+    in the columns it was committed with, not in today's."""
+    engine.execute("DROP TABLE IF EXISTS rn;")
+    engine.execute("CREATE TABLE rn (id int64, name string);")  # v1
+    engine.execute("INSERT INTO rn (id, name) VALUES (1, 'a');")  # v2
+    engine.execute("ALTER TABLE rn RENAME COLUMN name TO label;")  # v3
+    assert engine.execute("SELECT * FROM rn VERSION AS OF 1;").columns == [
+        "id",
+        "name",
+    ]
+    assert engine.execute("SELECT * FROM rn VERSION AS OF 2;").columns == [
+        "id",
+        "name",
+    ]
+    assert engine.execute("SELECT * FROM rn;").columns == ["id", "label"]
+
+
 def test_expire_snapshots_reclaims_old_dirs(engine, versioned):
     vt_obj = engine._versioned_for("ttest.vt")
     n_before = len(

@@ -3,7 +3,6 @@
 client library). Talks to a running gateway's HTTP endpoint.
 
     python tools/ranger_cli.py --url http://127.0.0.1:2847 query "SELECT 1;"
-    python tools/ranger_cli.py --url sc://127.0.0.1:15002 query "SELECT 1"
     python tools/ranger_cli.py table list
     python tools/ranger_cli.py table describe db.t
     python tools/ranger_cli.py catalog list
@@ -76,11 +75,6 @@ def main(argv: list[str] | None = None) -> int:
     cd.add_argument("namespace")
     args = p.parse_args(argv)
 
-    if args.url.startswith("sc://"):
-        # Spark Connect target (r10): query/shell ride the pure-Python
-        # gRPC client; the lakehouse subcommands need the gateway HTTP
-        # surface and are rejected with a pointer.
-        return _connect_main(args)
     lc = LakehouseClient(RangerClient(args.url))
     try:
         if args.cmd == "query":
@@ -124,65 +118,6 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 lc.drop_namespace(args.namespace)
                 print(f"dropped namespace {args.namespace}")
-    except Exception as e:
-        print(f"error: {e}", file=sys.stderr)
-        return 1
-    return 0
-
-
-def _print_arrow(table) -> None:
-    cols = table.column_names
-    rows = [
-        tuple(str(table.column(c)[i].as_py()) for c in cols)
-        for i in range(table.num_rows)
-    ]
-    if cols:
-        widths = [
-            max(len(c), *(len(r[i]) for r in rows)) if rows else len(c)
-            for i, c in enumerate(cols)
-        ]
-        print(" | ".join(c.ljust(w) for c, w in zip(cols, widths)))
-        print("-+-".join("-" * w for w in widths))
-        for r in rows:
-            print(" | ".join(v.ljust(w) for v, w in zip(r, widths)))
-    print(f"({table.num_rows} rows)")
-
-
-def _connect_main(args) -> int:
-    from ranger_spark.sources.connect_client import ConnectClient
-
-    hostport = args.url[len("sc://"):]
-    host, _, port = hostport.partition(":")
-    client = ConnectClient(host or "127.0.0.1", int(port or 15002))
-    try:
-        if args.cmd == "query":
-            _print_arrow(client.sql(args.sql.rstrip(";")))
-        elif args.cmd == "shell":
-            print(f"connect shell (Spark {client.spark_version()}) — "
-                  "';' ends a statement, \\q quits")
-            buf = ""
-            while True:
-                try:
-                    buf += input("connect> " if not buf else "    ...> ")
-                except EOFError:
-                    break
-                if buf.strip() in ("\\q", "exit", "quit"):
-                    break
-                if _complete(buf):
-                    try:
-                        _print_arrow(client.sql(buf.rstrip().rstrip(";")))
-                    except Exception as e:
-                        print(f"error: {e}")
-                    buf = ""
-                else:
-                    buf += "\n"  # line comments end at the line
-        else:
-            print(
-                f"error: '{args.cmd}' needs the gateway HTTP surface — "
-                "use --url http://host:port for lakehouse subcommands",
-                file=sys.stderr,
-            )
-            return 1
     except Exception as e:
         print(f"error: {e}", file=sys.stderr)
         return 1
