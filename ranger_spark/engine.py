@@ -41,18 +41,25 @@ from ranger_spark.errors import (
     RangerError,
 )
 from ranger_spark.frames import local_frame
+from ranger_spark.result import QueryResult, fetch
 from ranger_spark.router import QUERY_KINDS, Routed, StmtKind, route
 from ranger_spark.sqltext import split_statements
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
 from ranger_spark.tables import parquet_schema
 
 RESULT_CAP = 100_000  # reference duckdb/engine.go:395-400
+# the SELECT result cache keeps its newest results up to this many bytes
+# of Arrow data (pyarrow.Table.nbytes) in all
+RESULT_CACHE_BYTES = 64 << 20
 # system.files flags data files under this size: the small-file problem
 # that motivates OPTIMIZE (Iceberg's default write target is 512 MB; on
 # the test corpus 32 MB separates per-batch commit files from compacted
 # output without flagging everything)
 SMALL_FILE_BYTES = 32 << 20
 SCHEMA_PROP_VIEW_PREFIX = "ranger_schema_"  # per-table Iceberg schema registry
+# own commits remembered for the schema-cache subscriber to skip; more
+# than the commits of any burst between two CDC polls
+OWN_COMMITS_KEPT = 1024
 # finished statements ExecutionManager keeps (system.queries, /status);
 # running ones are always kept, so cancel() can reach them
 QUERY_HISTORY = 1000
@@ -80,16 +87,6 @@ def _reports_not_null(write):
             raise RangerError(VALIDATION_FAILED, m.group(0)) from None
 
     return wrapper
-
-
-@dataclass
-class QueryResult:
-    columns: list[str]
-    rows: list[tuple]
-    row_count: int
-    message: str = ""
-    query_id: str = ""
-    truncated: bool = False
 
 
 @dataclass
@@ -172,6 +169,8 @@ class Engine:
 
         self._result_cache: "OrderedDict[str, QueryResult]" = OrderedDict()
         self._result_cache_hits = 0
+        # (table, version) of snapshots this engine committed, newest last
+        self._own_commits: "OrderedDict[tuple[str, int], None]" = OrderedDict()
         # security validation gate (reference EnableQueryValidation —
         # shipped disabled there too, duckdb/engine.go:55); when on,
         # every statement passes ranger_spark.security.validate_query
@@ -573,6 +572,22 @@ class Engine:
             self._schemas[name] = [tuple(c) for c in entry["columns"]]
             n += 1
         return n
+
+    def _own_commit(self, name: str, version: int) -> None:
+        """Record a snapshot this engine committed: its catalog and
+        registration are already current, so the schema-cache subscriber
+        skips its event (``is_own_commit``)."""
+        self._own_commits[(name, version)] = None
+        while len(self._own_commits) > OWN_COMMITS_KEPT:
+            self._own_commits.popitem(last=False)
+
+    def is_own_commit(self, name: str, version) -> bool:
+        """Whether ``name``'s snapshot ``version`` is one this engine
+        committed; each is answered once."""
+        if (name, version) not in self._own_commits:
+            return False
+        del self._own_commits[(name, version)]
+        return True
 
     def refresh_table_registration(self, name: str) -> bool:
         """Event-driven schema/plan-cache invalidation — the engine-side
@@ -1139,7 +1154,6 @@ class Engine:
         re.I,
     )
     _RESULT_CACHE_MAX = 32
-    _RESULT_CACHE_MAX_ROWS = 10_000
 
     def read_frame(self, body: str) -> DataFrame:
         """The one way a client's query text reaches ``spark.sql``, which
@@ -1157,7 +1171,8 @@ class Engine:
         return self.spark.sql(self._rewrite_system(routed.sql))
 
     def _read(self, sql: str) -> QueryResult:
-        df = self.read_frame(sql)
+        # one planned frame: the cache key and the fetch share its plan
+        frame = self.read_frame(sql).limit(RESULT_CAP + 1)
         key = None
         refs_view = any(
             re.search(rf"\b{re.escape(v.split('.')[-1])}\b", sql, re.I)
@@ -1170,7 +1185,7 @@ class Engine:
             and not self._NONDET_RE.search(sql)
         ):
             try:
-                files = df.inputFiles()
+                files = frame.inputFiles()
             except Exception:
                 files = []
             if files:  # file-less plans (VALUES, memory tables) skip
@@ -1183,29 +1198,36 @@ class Engine:
                 if hit is not None:
                     self._result_cache.move_to_end(key)
                     self._result_cache_hits += 1
-                    return hit
-        rows = df.limit(RESULT_CAP + 1).collect()
-        truncated = len(rows) > RESULT_CAP
+                    return hit.copy()
+        qr = self._fetch(frame)
+        if key is not None and not qr.truncated:
+            cache = self._result_cache
+            cache[key] = qr.copy()
+            while cache and (
+                len(cache) > self._RESULT_CACHE_MAX
+                or sum(r.table.nbytes for r in cache.values())
+                > RESULT_CACHE_BYTES
+            ):
+                cache.popitem(last=False)
+        return qr
+
+    @staticmethod
+    def _fetch(frame: DataFrame) -> QueryResult:
+        """The result of a read frame limited to ``RESULT_CAP + 1`` rows:
+        one Arrow fetch, cut to the cap."""
+        table = fetch(frame)
+        truncated = table.num_rows > RESULT_CAP
         if truncated:
-            rows = rows[:RESULT_CAP]
-        qr = QueryResult(
-            columns=list(df.columns),
-            rows=[tuple(r) for r in rows],
-            row_count=len(rows),
+            table = table.slice(0, RESULT_CAP)
+        return QueryResult(
+            columns=list(frame.columns),
             message=(
                 f"result truncated to {RESULT_CAP} rows" if truncated else ""
             ),
             truncated=truncated,
+            table=table,
+            schema=frame.schema,
         )
-        if (
-            key is not None
-            and not truncated
-            and len(rows) <= self._RESULT_CACHE_MAX_ROWS
-        ):
-            self._result_cache[key] = qr
-            while len(self._result_cache) > self._RESULT_CACHE_MAX:
-                self._result_cache.popitem(last=False)
-        return qr
 
     _SYSTEM_REF = re.compile(r"\bsystem(?=\.)", re.I)
 
@@ -1447,19 +1469,7 @@ class Engine:
             return self._materialize_df_as_table(
                 self._qualify(m.group(3)), df
             )
-        rows = df.limit(RESULT_CAP + 1).collect()
-        truncated = len(rows) > RESULT_CAP
-        if truncated:
-            rows = rows[:RESULT_CAP]
-        return QueryResult(
-            columns=list(df.columns),
-            rows=[tuple(r) for r in rows],
-            row_count=len(rows),
-            message=(
-                f"result truncated to {RESULT_CAP} rows" if truncated else ""
-            ),
-            truncated=truncated,
-        )
+        return self._fetch(df.limit(RESULT_CAP + 1))
 
     def _show_pipelines(self) -> QueryResult:
         from ranger_spark.queries import load_all
@@ -2092,9 +2102,9 @@ class Engine:
 
             data_dir = os.path.join(location, "s1")
             os.makedirs(data_dir, exist_ok=True)
-            VersionedTable(location).commit(
+            self._own_commit(name, VersionedTable(location).commit(
                 files=[], data_dir=data_dir, operation="create", columns=columns
-            )
+            ))
         entry = {
             "columns": columns,
             "partition_by": opts["partition_by"],
@@ -3017,13 +3027,13 @@ class Engine:
         # appends can't base themselves on the same stale version and
         # drop each other's files (lost-update safe; mirrors
         # SnapshotTable.append's read-inside-lock protocol).
-        vt.commit(
+        self._own_commit(name, vt.commit(
             files=None,
             data_dir=data_dir,
             operation="append",
             added=added,
             columns=self._manifest["tables"][name]["columns"],
-        )
+        ))
         self._emit_iceberg(name)
         self._s3_sync_up(name)
 
@@ -3097,12 +3107,12 @@ class Engine:
             except Exception:
                 pass
             raise
-        vt.commit(
+        self._own_commit(name, vt.commit(
             files=sorted(walk_parquet(new_dir)),
             data_dir=new_dir,
             operation=operation,
             columns=entry["columns"],
-        )
+        ))
         self._emit_iceberg(name)
         self._s3_sync_up(name)
 
@@ -4066,7 +4076,15 @@ class Engine:
         return f"{self.spark.catalog.currentDatabase()}.{name}"
 
     def _db_exists(self, name: str) -> bool:
-        return any(d.name == name for d in self.spark.catalog.listDatabases())
+        # One catalog lookup, no Spark job (listDatabases runs two). The
+        # name is one identifier, matched exactly as the listing was:
+        # Spark keeps database names in lower case and looks them up
+        # ignoring case, so a name with an upper-case letter is not found
+        # (the manifest and DROP key databases by their exact name). A
+        # name with a backtick cannot exist and would not parse.
+        if not name or "`" in name or name != name.lower():
+            return False
+        return self.spark.catalog.databaseExists(f"`{name}`")
 
     def _table_exists(self, name: str) -> bool:
         return self.spark.catalog.tableExists(name)

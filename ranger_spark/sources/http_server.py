@@ -11,20 +11,28 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow.compute as pc
+
 from ranger_spark import __version__
 from ranger_spark.engine import Engine
 from ranger_spark.errors import RangerError
+from ranger_spark.result import joined
 
 
-def _json_default(v):
-    return str(v)
+def _data_json(r) -> str:
+    """``json.dumps`` of the result's rows as lists, joined from its
+    per-column JSON text."""
+    cols = r.column_json()
+    if not r.num_rows or not cols:
+        return "[" + ", ".join(["[]"] * r.num_rows) + "]"
+    return "[[" + joined(pc.binary_join_element_wise(*cols, ", "), "], [") + "]]"
 
 
 class _Handler(BaseHTTPRequestHandler):
     engine: Engine  # set by serve()
 
-    def _send(self, code: int, payload: dict) -> None:
-        body = json.dumps(payload, default=_json_default).encode()
+    def _send(self, code: int, payload: dict | str) -> None:
+        body = (payload if isinstance(payload, str) else json.dumps(payload)).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -126,13 +134,12 @@ class _Handler(BaseHTTPRequestHandler):
         # reads its keys unchanged
         import datetime as _dt
 
-        self._send(
-            200,
+        body = json.dumps(
             {
                 "status": "success",
                 "query": sql,
                 "columns": r.columns,
-                "data": [list(row) for row in r.rows],
+                "data": None,
                 "rowCount": r.row_count,
                 "row_count": r.row_count,
                 "message": r.message,
@@ -141,6 +148,10 @@ class _Handler(BaseHTTPRequestHandler):
                 .strftime("%Y-%m-%dT%H:%M:%SZ"),
             },
         )
+        # the rows go in as text, joined from the result's per-column
+        # JSON; the first '"data": null' is the key (inside a string
+        # every quote is escaped)
+        self._send(200, body.replace('"data": null', f'"data": {_data_json(r)}', 1))
 
 
 def serve(engine: Engine, port: int = 0, host: str = "127.0.0.1"):

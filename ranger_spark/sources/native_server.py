@@ -69,11 +69,13 @@ import time
 import zlib
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from ranger_spark import sqltext
 from ranger_spark.engine import RESULT_CAP, Engine
 from ranger_spark.errors import RangerError
 from ranger_spark.frames import local_frame
+from ranger_spark.result import joined
 from ranger_spark.router import READ_KINDS, route
 
 # protocol/constants.go (ClickHouse-compatible numbering)
@@ -530,18 +532,18 @@ def unpack_server_profile_info(data: bytes) -> dict:
     return out
 
 
-def pack_server_data(columns: list[tuple[str, str]], rows: list[tuple]) -> bytes:
-    """server_data.go Pack: columnar text block, per-column comma-joined."""
+def pack_server_data(
+    columns: list[tuple[str, str]], texts: list[pa.Array]
+) -> bytes:
+    """server_data.go Pack: columnar text block, per column its cells'
+    text (``QueryResult.column_text``) comma-joined, NULL as empty."""
     out = bytearray(write_uvarint(len(columns)))
     for name, typ in columns:
         out += _suv(name) + _suv(typ)
     out += write_uvarint(1)  # data block marker
-    out += write_uvarint(len(rows))
-    for ci in range(len(columns)):
-        vals = [
-            "" if (ci >= len(r) or r[ci] is None) else str(r[ci]) for r in rows
-        ]
-        out += _suv(",".join(vals))
+    out += write_uvarint(len(texts[0]) if texts else 0)
+    for t in texts:
+        out += _suv(joined(pc.fill_null(t, ""), ","))
     return bytes(out)
 
 
@@ -1065,42 +1067,38 @@ class NativeServer:
         # degenerate case). Every column ships as String, like the
         # reference (connection.go:471-481).
         columns = [(c, "String") for c in r.columns]
-        rows = r.rows
         if not columns and r.message:
-            columns, rows = [("result", "String")], [(r.message,)]
+            columns, texts = [("result", "String")], [pa.array([r.message])]
+        else:
+            texts = r.column_text()
         # ServerProgress(103) / ServerProfileInfo(106): the reference
         # REGISTERS both signals with full codecs
         # (protocol/signals/server_progress.go, server_profile_info.go)
         # but never sends them during a query; this server sends them —
         # progress ahead of the data blocks, profile info (incl. the
         # RESULT_CAP as applied_limit when the result was truncated)
-        # right before EndOfStream.
-        n_rows = len(rows)
-        est_bytes = sum(
-            len(str(v)) for row in rows[:100] for v in row
-        ) * (max(n_rows, 1) // max(min(n_rows, 100), 1))
+        # right before EndOfStream. Their byte count is the result's
+        # text bytes.
+        n_rows = len(texts[0]) if texts else 0
+        n_bytes = sum(pc.sum(pc.binary_length(t)).as_py() or 0 for t in texts)
         self._send(
             conn,
             SERVER_PROGRESS,
             pack_server_progress(
-                n_rows, est_bytes, n_rows, est_bytes,
+                n_rows, n_bytes, n_rows, n_bytes,
                 time.monotonic() - t_start,
             ),
         )
-        first = True
-        while first or rows:
-            block = rows[: self.block_rows]
-            rows = rows[self.block_rows :]
+        for start in range(0, max(n_rows, 1), self.block_rows):
+            block = [t.slice(start, self.block_rows) for t in texts]
             self._send(conn, SERVER_DATA, pack_server_data(columns, block))
-            first = False
-        truncated = bool(r.message and "truncated" in (r.message or ""))
         self._send(
             conn,
             SERVER_PROFILE_INFO,
             pack_server_profile_info(
-                r.row_count, est_bytes,
-                RESULT_CAP if truncated else 0, 0,
-                n_rows, est_bytes,
+                r.row_count, n_bytes,
+                RESULT_CAP if r.truncated else 0, 0,
+                n_rows, n_bytes,
             ),
         )
         self._send(conn, SERVER_END_OF_STREAM, b"")
@@ -1134,10 +1132,12 @@ class NativeServer:
         # then EndOfStream (connection.go:297-352)
         msg = f"Query {query_id} cancelled successfully"
         self._send(
-            conn, SERVER_DATA, pack_server_data([("result", "String")], [])
+            conn,
+            SERVER_DATA,
+            pack_server_data([("result", "String")], [pa.array([], pa.string())]),
         )
         self._send(
-            conn, SERVER_DATA, pack_server_data([("col_0", "String")], [(msg,)])
+            conn, SERVER_DATA, pack_server_data([("col_0", "String")], [pa.array([msg])])
         )
         self._send(conn, SERVER_END_OF_STREAM, b"")
 

@@ -33,8 +33,13 @@ import socket
 import struct
 import threading
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from ranger_spark import sqltext
 from ranger_spark.engine import Engine
+from ranger_spark.result import joined
 from ranger_spark.sources.native_server import copy_target, insert_string_block
 
 TEXT_OID = 25  # everything ships as text, like the reference
@@ -70,15 +75,33 @@ def _row_description(columns: list[str]) -> bytes:
     return _msg(b"T", body)
 
 
-def _data_row(row: tuple) -> bytes:
-    body = struct.pack("!H", len(row))
-    for v in row:
-        if v is None:
-            body += struct.pack("!i", -1)
-        else:
-            b = str(v).encode()
-            body += struct.pack("!i", len(b)) + b
-    return _msg(b"D", body)
+def _be32(ints) -> pa.Array:
+    """Each int as its 4 big-endian bytes."""
+    raw = np.asarray(ints, ">i4")
+    return pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(4), len(raw), [None, pa.py_buffer(raw.tobytes())]
+    ).cast(pa.binary())
+
+
+def _msgs(tag: bytes, bodies: pa.Array) -> bytes:
+    """``_msg(tag, body)`` for each body, concatenated."""
+    lens = _be32(pc.binary_length(bodies).to_numpy() + 4)
+    return joined(pc.binary_join_element_wise(tag, lens, bodies, b""), b"")
+
+
+def _data_row(texts: list[pa.Array]) -> bytes:
+    """DataRow messages, one per row of the columns' cell text (None is
+    NULL): the column count, then per cell its byte length (-1 for NULL)
+    and bytes."""
+    cells = [
+        pc.binary_join_element_wise(
+            _be32(pc.fill_null(pc.binary_length(t), -1).to_numpy()),
+            pc.cast(pc.fill_null(t, ""), pa.binary()), b"",
+        )
+        for t in texts
+    ]
+    ncols = struct.pack("!H", len(texts))
+    return _msgs(b"D", pc.binary_join_element_wise(ncols, *cells, b""))
 
 
 def _error(message: str, code: str = "42000") -> bytes:
@@ -192,15 +215,29 @@ def _unescape_copy_text(v: str) -> str:
     return "".join(out)
 
 
-def _escape_copy_text(v: str) -> str:
-    """Escape a value for COPY TO text format so embedded tabs, newlines,
+def _escape_copy_text(text: pa.Array) -> pa.Array:
+    """Escape cell text for COPY TO text format so embedded tabs, newlines,
     CRs, and backslashes can't break row framing on the client."""
-    return (
-        v.replace("\\", "\\\\")
-        .replace("\t", "\\t")
-        .replace("\n", "\\n")
-        .replace("\r", "\\r")
+    for raw, escaped in (
+        ("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r")
+    ):
+        text = pc.replace_substring(text, raw, escaped)
+    return text
+
+
+def _csv_field(text: pa.Array) -> pa.Array:
+    """PG COPY TO csv cells: NULL is bare empty, the empty string is a
+    quoted "" (csv.writer's QUOTE_MINIMAL would erase that difference),
+    and a cell with a comma, quote or line break is quoted with its
+    quotes doubled; round-trips exactly through _parse_csv_records."""
+    quote = pc.or_(
+        pc.equal(pc.binary_length(text), 0),
+        pc.match_substring_regex(text, '[,"\n\r]'),
     )
+    quoted = pc.binary_join_element_wise(
+        '"', pc.replace_substring(text, '"', '""'), '"', ""
+    )
+    return pc.fill_null(pc.if_else(quote, quoted, text), "")
 
 
 def _parse_csv_records(text: str) -> list:
@@ -598,32 +635,17 @@ class PgWireServer:
         out = [
             _msg(b"H", b"\x00" + struct.pack("!H", ncols) + b"\x00\x00" * ncols)
         ]
+        texts = r.column_text()
         if fmt == "csv":
-            # PG COPY TO csv distinguishes NULL (bare empty) from the
-            # empty string (quoted "") — csv.writer's QUOTE_MINIMAL
-            # erases that, so fields are rendered by hand; round-trips
-            # exactly through _parse_csv_records.
-            def _csv_field(v) -> str:
-                if v is None:
-                    return ""
-                s = str(v)
-                if s == "" or any(c in s for c in ',"\n\r'):
-                    return '"' + s.replace('"', '""') + '"'
-                return s
-
-            for row in r.rows:
-                line = ",".join(_csv_field(v) for v in row) + "\n"
-                out.append(_msg(b"d", line.encode()))
+            cells, sep = [_csv_field(t) for t in texts], ","
         else:
-            for row in r.rows:
-                line = (
-                    "\t".join(
-                        "\\N" if v is None else _escape_copy_text(str(v))
-                        for v in row
-                    )
-                    + "\n"
-                )
-                out.append(_msg(b"d", line.encode()))
+            cells = [pc.fill_null(_escape_copy_text(t), "\\N") for t in texts]
+            sep = "\t"
+        if cells:
+            lines = pc.binary_join_element_wise(
+                pc.binary_join_element_wise(*cells, sep), "\n", ""
+            )
+            out.append(_msgs(b"d", pc.cast(lines, pa.binary())))
         out.append(_msg(b"c", b""))  # CopyDone
         out.append(_msg(b"C", _cstr(f"COPY {r.row_count}")))
         conn.sendall(b"".join(out))
@@ -654,18 +676,19 @@ class PgWireServer:
                 r = self.engine.execute(
                     sql, database=p.get("database") or None
                 )
-                p["result"] = list(r.rows)
+                p["result"] = r.column_text()
                 p["columns"] = r.columns
                 p["message"] = r.message
                 p["count"] = r.row_count
         except Exception as e:
             conn.sendall(_error(str(e)[:400]))
             return False
-        rows = p["result"]
-        send = rows if max_rows <= 0 else rows[:max_rows]
-        out = [_data_row(row) for row in send]
-        p["result"] = rows[len(send) :]
-        if max_rows > 0 and p["result"]:
+        texts = p["result"]
+        left = len(texts[0]) if texts else 0
+        n = left if max_rows <= 0 else min(max_rows, left)
+        out = [_data_row([t.slice(0, n) for t in texts])] if n else []
+        p["result"] = [t.slice(n) for t in texts]
+        if max_rows > 0 and left > n:
             out.append(_msg(b"s", b""))  # PortalSuspended
         elif p["columns"]:
             out.append(_msg(b"C", _cstr(f"SELECT {p['count']}")))
@@ -684,7 +707,7 @@ class PgWireServer:
             return
         if r.columns:
             out = [_row_description(r.columns)]
-            out += [_data_row(row) for row in r.rows]
+            out.append(_data_row(r.column_text()))
             out.append(_msg(b"C", _cstr(f"SELECT {r.row_count}")))
             conn.sendall(b"".join(out))
         else:

@@ -359,13 +359,15 @@ def register_schema_cache(astha: "Astha", engine) -> None:
     table's current snapshot, so a commit from ANY writer (another
     protocol server, another engine over the same warehouse, a
     storage-level ingest job) invalidates this session's cached plans
-    event-driven — zero manual refresh."""
-    astha.register_component(
-        "schema-cache",
-        "1.0",
-        ["*"],
-        lambda ev: engine.refresh_table_registration(ev.table),
-    )
+    event-driven — zero manual refresh. The engine's own commits are
+    skipped: it registered their snapshot as it committed them."""
+
+    def on_event(ev) -> None:
+        version = ev.data.get("version") if isinstance(ev.data, dict) else None
+        if not engine.is_own_commit(ev.table, version):
+            engine.refresh_table_registration(ev.table)
+
+    astha.register_component("schema-cache", "1.0", ["*"], on_event)
 
 
 def register_mview_maintenance(astha: "Astha", engine) -> None:

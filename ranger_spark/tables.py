@@ -1,6 +1,6 @@
 """Test-table loading helpers over the driver's synthetic parquet data.
 
-Tables (see /root/repo/TESTDATA.md): TPC-H-ish star schema
+Tables (see TESTDATA.md at the repo root): TPC-H-ish star schema
 ``region nation customer supplier part orders lineitem`` plus an ``events``
 stream table and LLM-pipeline tables ``documents`` / ``embeddings``.
 

@@ -5,7 +5,15 @@ engine commits instead of SQLite triggers."""
 
 from __future__ import annotations
 
-from ranger_spark.streaming.astha import Astha, Config, MemoryEventStore
+import uuid
+
+from ranger_spark.sources.snapshots import VersionedTable
+from ranger_spark.streaming.astha import (
+    Astha,
+    Config,
+    MemoryEventStore,
+    register_schema_cache,
+)
 
 
 def test_event_store_roundtrip():
@@ -162,3 +170,45 @@ def test_astha_incremental_dedup_subscriber(engine, spark):
     assert any(ia == 1 and ib == 10 for ia, ib, _ in found), found
     assert not any(11 in (ia, ib) for ia, ib, _ in found)
     engine.spark.sql("DROP DATABASE ing CASCADE")
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted by a job group of its own."""
+    sc = spark.sparkContext
+    group = f"astha-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group, True)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schema_cache_skips_own_commits(engine, spark):
+    """The schema-cache subscriber reloads the catalog and runs DESC
+    FORMATTED for a commit; for this engine's own INSERT it does nothing,
+    so delivering that event runs no Spark job. A commit it did not make
+    is still refreshed."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS asown;")
+    engine.execute("DROP TABLE IF EXISTS asown.t;")
+    engine.execute("CREATE TABLE asown.t (id int32, name string);")
+    a = Astha(engine, Config(poll_interval_s=0.05))
+    a.consumer.start_from_now()
+    register_schema_cache(a, engine)
+    refreshed = []
+    real = engine.refresh_table_registration
+    engine.refresh_table_registration = lambda n: refreshed.append(n) or real(n)
+    try:
+        engine.execute("INSERT INTO asown.t (id, name) VALUES (1, 'a');")
+        n = []
+        assert _jobs(spark, lambda: n.append(a.pump())) == 0
+        assert n == [1] and refreshed == []
+        # a commit from elsewhere (same table, no engine call) is refreshed
+        entry = engine.catalog_store.load()["tables"]["asown.t"]
+        vt = VersionedTable(entry["location"])
+        vt.commit(files=None, data_dir=vt.snapshot_dir(), operation="append",
+                  added=[])
+        assert a.pump() == 1 and refreshed == ["asown.t"]
+    finally:
+        del engine.refresh_table_registration
+        engine.execute("DROP DATABASE asown CASCADE;")

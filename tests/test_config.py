@@ -2,6 +2,8 @@
 YAML load/save round-trip, validation errors, fixed ports, and the
 gateway boot bridge — including the reference's own ranger-server.yml."""
 
+import pathlib
+
 import pytest
 
 from ranger_spark.config import (
@@ -14,6 +16,8 @@ from ranger_spark.config import (
     save_config,
 )
 from ranger_spark.errors import RangerError
+
+TOOLS = pathlib.Path(__file__).resolve().parent.parent / "tools"
 
 
 def test_defaults_match_reference():
@@ -131,7 +135,7 @@ def test_server_entrypoint_boot_and_graceful_shutdown(tmp_path):
         f"storage:\n  data_path: {tmp_path}/wh\n  catalog: {{type: json}}\n"
     )
     p = subprocess.Popen(
-        [sys.executable, "/root/repo/tools/ranger_server.py",
+        [sys.executable, str(TOOLS / "ranger_server.py"),
          str(tmp_path / "ranger-server.yml"), "--ephemeral-ports"],
         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
         cwd=str(tmp_path),

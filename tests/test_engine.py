@@ -316,6 +316,72 @@ def test_update_delete_single_scan(engine):
     assert n_jobs <= 2, f"DELETE ran {n_jobs} jobs (expected CoW's 2)"
 
 
+def test_database_scoped_lookup_runs_only_its_own_jobs(engine):
+    """A statement scoped to a database (pgwire's startup database, the
+    native and HTTP ``database`` field) checks that the database exists
+    with a catalog lookup, not a listing job: the scoped point lookup
+    runs as many Spark jobs as the same lookup by qualified name."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS dbscope;")
+    engine.execute("DROP TABLE IF EXISTS dbscope.t;")
+    engine.execute("CREATE TABLE dbscope.t (id int32, v string);")
+    engine.execute("INSERT INTO dbscope.t (id, v) VALUES (1, 'a'), (2, 'b');")
+    tracker = engine.spark.sparkContext.statusTracker()
+    try:
+        scoped = engine.execute(
+            "SELECT v FROM t WHERE id = 1;", database="dbscope"
+        )
+        plain = engine.execute("SELECT v FROM dbscope.t WHERE id = 2;")
+        assert scoped.rows == [("a",)] and plain.rows == [("b",)]
+        assert len(tracker.getJobIdsForGroup(scoped.query_id)) == len(
+            tracker.getJobIdsForGroup(plain.query_id)
+        )
+        # names match exactly, as the database listing did
+        assert engine._db_exists("dbscope")
+        assert not engine._db_exists("DBScope")
+        assert not engine._db_exists("dbscope.t")
+        assert not engine._db_exists("db-scope")
+    finally:
+        engine.execute("DROP DATABASE dbscope CASCADE;")
+
+
+def test_result_cache_evicts_by_bytes(engine, monkeypatch):
+    """The SELECT result cache is bounded by the Arrow bytes it holds:
+    past RESULT_CACHE_BYTES the oldest results go, and a result larger
+    than the whole budget is not kept."""
+    import ranger_spark.engine as engine_mod
+
+    engine.execute("CREATE DATABASE IF NOT EXISTS rcb;")
+    engine.execute("DROP TABLE IF EXISTS rcb.t;")
+    engine.execute("CREATE TABLE rcb.t (id int64, s string);")
+    values = ", ".join(f"({i}, '{'x' * (i % 7)}')" for i in range(60))
+    engine.execute(f"INSERT INTO rcb.t (id, s) VALUES {values};")
+    sqls = [f"SELECT * FROM rcb.t WHERE id < {n};" for n in (40, 30, 20)]
+
+    def hit(sql) -> bool:
+        before = engine._result_cache_hits
+        engine.execute(sql)
+        return engine._result_cache_hits > before
+
+    try:
+        engine._result_cache.clear()
+        a, b, _ = (engine.execute(q).table.nbytes for q in sqls)
+        assert len(engine._result_cache) == 3
+        engine._result_cache.clear()
+        monkeypatch.setattr(engine_mod, "RESULT_CACHE_BYTES", a + b)
+        for q in sqls:
+            engine.execute(q)
+        # the third result pushed the oldest out; the newest two fit
+        assert len(engine._result_cache) == 2
+        assert hit(sqls[2]) and hit(sqls[1]) and not hit(sqls[0])
+        monkeypatch.setattr(engine_mod, "RESULT_CACHE_BYTES", a - 1)
+        engine._result_cache.clear()
+        engine.execute(sqls[0])
+        assert not engine._result_cache
+    finally:
+        engine._result_cache.clear()
+        engine.execute("DROP DATABASE rcb CASCADE;")
+
+
 def test_timeout_reports_cancelled_not_error(engine):
     # ADVICE r1: a timed-out query must surface as 'cancelled', not be
     # overwritten to 'error' by execute()'s exception path

@@ -11,6 +11,7 @@ import time
 
 import pytest
 
+from ranger_spark.result import QueryResult
 from ranger_spark.sources import native_server as ns
 
 
@@ -55,9 +56,9 @@ def test_signal_pack_unpack_symmetry():
     assert sh["server_name"] == "Ranger Server"
     assert sh["revision"] == ns.DBMS_TCP_PROTOCOL_VERSION
 
+    texts = QueryResult(["a", "b"], [(1, "x"), (2, "y")]).column_text()
     sd = ns.unpack_server_data(
-        ns.pack_server_data([("a", "String"), ("b", "String")],
-                            [(1, "x"), (2, "y")])
+        ns.pack_server_data([("a", "String"), ("b", "String")], texts)
     )
     assert sd["columns"] == [("a", "String"), ("b", "String")]
     assert sd["rows"] == [("1", "x"), ("2", "y")]
@@ -277,7 +278,8 @@ try:
     def test_fuzz_server_data_roundtrip(cols, data):
         rows = data.draw(st.lists(
             st.tuples(*[txt_nocomma for _ in cols]), min_size=1, max_size=5))
-        d = ns.unpack_server_data(ns.pack_server_data(cols, rows))
+        texts = QueryResult([c for c, _ in cols], rows).column_text()
+        d = ns.unpack_server_data(ns.pack_server_data(cols, texts))
         assert d["columns"] == cols
         assert d["rows"] == [tuple(r) for r in rows]
 except ImportError:  # pragma: no cover

@@ -335,6 +335,8 @@ def test_copy_text_escape_unit():
     \\\\, octal and hex forms unescape on the way in; \\N stays NULL but
     \\\\N is the literal two-char string; empty line = one empty-string
     field (not skipped); data after the \\. terminator is ignored."""
+    import pyarrow as pa
+
     from ranger_spark.sources.pgwire_server import (
         _escape_copy_text,
         _parse_copy_rows,
@@ -353,7 +355,8 @@ def test_copy_text_escape_unit():
     assert _parse_copy_rows(b"\nx\n", "text", 1) == [("",), ("x",)]
     # round-trip: escape then unescape is identity
     for v in ["a\tb", "line1\nline2", "back\\slash", "cr\rhere", "plain"]:
-        assert _unescape_copy_text(_escape_copy_text(v)) == v
+        esc = _escape_copy_text(pa.array([v]))[0].as_py()
+        assert _unescape_copy_text(esc) == v
 
 
 def test_copy_csv_null_semantics_unit():

@@ -7,6 +7,7 @@ class. Runs in a subprocess so the module-scoped test session's confs
 cannot leak in."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -35,7 +36,8 @@ print("PLAIN_RESULT " + json.dumps(out))
 def test_front_head_runs_on_plain_session():
     r = subprocess.run(
         [sys.executable, "-c", _SCRIPT], capture_output=True, text=True,
-        cwd="/root/repo", timeout=600,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=600,
     )
     line = next(
         (ln for ln in r.stdout.splitlines() if ln.startswith("PLAIN_RESULT ")),

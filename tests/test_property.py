@@ -474,7 +474,9 @@ def test_copy_text_escape_roundtrip_property(s):
         _unescape_copy_text,
     )
 
-    esc = _escape_copy_text(s)
+    import pyarrow as pa
+
+    esc = _escape_copy_text(pa.array([s]))[0].as_py()
     assert "\t" not in esc and "\n" not in esc and "\r" not in esc
     assert _unescape_copy_text(esc) == s
 
@@ -498,9 +500,12 @@ def test_copy_text_rows_roundtrip_property(rows):
         _parse_copy_rows,
     )
 
+    import pyarrow as pa
+
     payload = "".join(
         "\t".join(
-            "\\N" if v is None else _escape_copy_text(v) for v in row
+            "\\N" if v is None else _escape_copy_text(pa.array([v]))[0].as_py()
+            for v in row
         )
         + "\n"
         for row in rows

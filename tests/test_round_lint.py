@@ -1,17 +1,19 @@
 """The rounding-protocol lint (tools/round_lint.py) must stay green on
 the repo AND must actually detect the r8/r9 failure shapes."""
 
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 from round_lint import lint_source  # noqa: E402
 
 
 def test_repo_is_clean():
     r = subprocess.run(
         [sys.executable, "tools/round_lint.py"], capture_output=True,
-        text=True, cwd="/root/repo",
+        text=True, cwd=ROOT,
     )
     assert r.returncode == 0, r.stdout + r.stderr
 

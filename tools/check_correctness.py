@@ -11,13 +11,15 @@ both engines' own rounding). Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ranger_spark.queries import load_all
 from ranger_spark.session import get_spark

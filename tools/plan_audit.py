@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ranger_spark.plans.inspect import formatted_plan, join_strategies
 from ranger_spark.queries import load_all
@@ -125,7 +127,7 @@ def main() -> int:
             1 for r in out.values() if r.get("nonscalar_output_columns")
         ),
     }
-    with open("/root/repo/PLANAUDIT.json", "w") as f:
+    with open(os.path.join(ROOT, "PLANAUDIT.json"), "w") as f:
         json.dump({"totals": totals, "queries": out}, f, indent=1, sort_keys=True)
     print(json.dumps(totals))
     return 1 if flagged else 0

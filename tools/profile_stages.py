@@ -21,7 +21,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def profile(
@@ -199,5 +200,5 @@ if __name__ == "__main__":
             args.append(a)
         i += 1
     q = args[0]
-    d = args[1] if len(args) > 1 else "/root/repo/.benchcache/sf0.1_x64"
+    d = args[1] if len(args) > 1 else os.path.join(ROOT, ".benchcache", "sf0.1_x64")
     profile(q, d, runs, bucketed_db)

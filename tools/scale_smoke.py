@@ -10,10 +10,12 @@ Usage: python tools/scale_smoke.py [replication_factor]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ranger_spark.plans.inspect import join_strategies, num_exchanges
 from ranger_spark.queries import load_all
