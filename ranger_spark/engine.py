@@ -171,6 +171,7 @@ class Engine:
         self._result_cache_hits = 0
         # (table, version) of snapshots this engine committed, newest last
         self._own_commits: "OrderedDict[tuple[str, int], None]" = OrderedDict()
+        self._own_commits_lock = threading.Lock()  # the CDC thread reads it
         # security validation gate (reference EnableQueryValidation —
         # shipped disabled there too, duckdb/engine.go:55); when on,
         # every statement passes ranger_spark.security.validate_query
@@ -577,17 +578,19 @@ class Engine:
         """Record a snapshot this engine committed: its catalog and
         registration are already current, so the schema-cache subscriber
         skips its event (``is_own_commit``)."""
-        self._own_commits[(name, version)] = None
-        while len(self._own_commits) > OWN_COMMITS_KEPT:
-            self._own_commits.popitem(last=False)
+        with self._own_commits_lock:
+            self._own_commits[(name, version)] = None
+            while len(self._own_commits) > OWN_COMMITS_KEPT:
+                self._own_commits.popitem(last=False)
 
     def is_own_commit(self, name: str, version) -> bool:
         """Whether ``name``'s snapshot ``version`` is one this engine
         committed; each is answered once."""
-        if (name, version) not in self._own_commits:
-            return False
-        del self._own_commits[(name, version)]
-        return True
+        with self._own_commits_lock:
+            if (name, version) not in self._own_commits:
+                return False
+            del self._own_commits[(name, version)]
+            return True
 
     def refresh_table_registration(self, name: str) -> bool:
         """Event-driven schema/plan-cache invalidation — the engine-side
@@ -3012,7 +3015,12 @@ class Engine:
                 write_parquet_column_codecs(out_df, data_dir, *plan)
             except Exception:
                 # the Arrow writer has no commit protocol: a failed job
-                # leaves its tasks' files in the live dir
+                # leaves its tasks' files in the live dir, and a task the
+                # abort has not stopped yet can still open one
+                tracker = self.spark.sparkContext.statusTracker()
+                deadline = time.monotonic() + 30
+                while tracker.getActiveStageIds() and time.monotonic() < deadline:
+                    time.sleep(0.05)
                 for f in walk_parquet(data_dir) - before:
                     os.remove(f)
                 raise

@@ -124,17 +124,21 @@ class QueryResult:
 
     def column_text(self) -> list[pa.Array]:
         """Each column's cells as ``str()`` of their value; NULL is None."""
-        return self._columns(_text_rule)
+        return self._columns(_text_rule, str, None)
 
     def column_json(self) -> list[pa.Array]:
         """Each column's cells as ``json.dumps(value, default=str)``."""
-        return self._columns(_json_rule)
+        return self._columns(_json_rule, _json, "null")
 
-    def _columns(self, rule) -> list[pa.Array]:
+    def _columns(self, rule, fmt, null) -> list[pa.Array]:
         if self.table is None:
             return [
-                _python_column(
-                    [r[i] if i < len(r) else None for r in self._rows], rule
+                pa.array(
+                    [
+                        null if i >= len(r) or r[i] is None else fmt(r[i])
+                        for r in self._rows
+                    ],
+                    pa.string(),
                 )
                 for i in range(len(self.columns))
             ]
@@ -264,9 +268,9 @@ def _java_hash(k, t: st.DataType) -> int | None:
 
 def _hash_map_order(items: list, key_type: st.DataType) -> list:
     """``items`` in the iteration order of a java.util.HashMap sized for
-    them that they were put into in order: by bucket, then by insertion. A bucket of 8 or
-    more keys makes Java reorder it as a tree, and then, as for keys
-    without a reproduced hash, the map keeps its own order."""
+    them and filled in their order: by bucket, then by insertion. A
+    bucket of 8 or more keys makes Java reorder it as a tree; then, as
+    for keys without a reproduced hash, the map keeps its own order."""
     hashes = [_java_hash(k, key_type) for k, _ in items]
     if len(items) < 2 or hashes[0] is None:
         return items
@@ -284,24 +288,12 @@ def _hash_map_order(items: list, key_type: st.DataType) -> list:
 
 
 # ------------------------------------------------------------ the rules
-def _str(v) -> str:
-    return str(v)
-
-
 def _json(v) -> str:
     return json.dumps(v, default=str)
 
 
 def _array(a) -> pa.Array:
     return a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
-
-
-def _python_column(values: list, rule) -> pa.Array:
-    if rule is _json_rule:
-        return pa.array([_json(v) for v in values], pa.string())
-    return pa.array(
-        [None if v is None else str(v) for v in values], pa.string()
-    )
 
 
 def _patch(text, mask, values, fmt) -> pa.Array:
@@ -371,10 +363,10 @@ def _text_rule(col, values) -> pa.Array:
     if pa.types.is_floating(t):
         return _float_text(col, repr)
     if pa.types.is_decimal(t):
-        return _decimal_text(col, values, _str)
+        return _decimal_text(col, values, str)
     text = _scalar_text(col, t)
     if text is None:
-        return _from_python(col, values, _str)
+        return _from_python(col, values, str)
     return _array(text)
 
 
@@ -388,7 +380,7 @@ def _json_rule(col, values) -> pa.Array:
         text = _float_text(col, _json)
     elif pa.types.is_decimal(t):
         text = pc.binary_join_element_wise(
-            '"', _decimal_text(col, values, _str), '"', ""
+            '"', _decimal_text(col, values, str), '"', ""
         )
     elif pa.types.is_string(t):
         # json.dumps escapes everything outside printable ASCII as \uXXXX;
