@@ -16,6 +16,7 @@ reference's DuckDB reader (duckdb/engine.go:395-400).
 
 from __future__ import annotations
 
+import copy
 import functools
 import os
 import re
@@ -25,6 +26,7 @@ import uuid as uuid_mod
 from collections import deque
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +43,7 @@ from ranger_spark.errors import (
     RangerError,
 )
 from ranger_spark.frames import local_frame
+from ranger_spark.jvm import jclass
 from ranger_spark.result import QueryResult, fetch
 from ranger_spark.router import QUERY_KINDS, Routed, StmtKind, route
 from ranger_spark.sqltext import split_statements
@@ -97,6 +100,33 @@ class QueryInfo:
     started_at: float = field(default_factory=time.time)  # for display
     started_pc: float = field(default_factory=time.perf_counter)
     duration_s: float | None = None
+    # "hit" or "miss" for a read the result cache may keep, else None
+    result_cache: str | None = None
+
+
+class _Dep(NamedTuple):
+    """A table a cached result read: its catalog entry when the result
+    was cached, and the snapshot version read with that version's commit
+    time. A live dependency holds while ``version`` is the table's current
+    one, a pinned one (``VERSION AS OF n``, the older versions a
+    ``CHANGES SINCE`` read scans) while its manifest is not expired."""
+
+    name: str
+    entry: dict
+    version: int
+    committed_at: float
+    live: bool
+
+
+def _local_path(uri: str) -> str:
+    """The local path of a ``file:`` URI as ``DataFrame.inputFiles()``
+    lists it (percent-encoded); other URIs are returned as they are."""
+    if not uri.startswith("file:"):
+        return uri
+    from urllib.parse import unquote
+
+    path = uri[len("file:") :]
+    return unquote(path[2:] if path.startswith("//") else path)
 
 
 class ExecutionManager:
@@ -158,16 +188,18 @@ class Engine:
     ):
         self.spark = spark
         self.strict_gate = strict_gate
-        # version-keyed SELECT result cache (≈ the reference running
-        # DuckDB with object caching on, duckdb/engine.go:160-179, but
-        # SELF-INVALIDATING: the key hashes the plan's input FILES, and
-        # files are immutable under the CoW commit protocol — any
-        # append/rewrite changes the file set, so a stale hit is
-        # impossible by construction; no event plumbing needed)
+        # SELECT result cache (≈ the reference running DuckDB with object
+        # caching on, duckdb/engine.go:160-179): (statement text, current
+        # database) → the result and the snapshot of every table it read,
+        # checked against the manifests on disk before a hit is served
+        # (_read), so a commit, DROP + CREATE, RENAME or expiry is never
+        # answered from before it
         self.result_cache_enabled = result_cache
         from collections import OrderedDict
 
-        self._result_cache: "OrderedDict[str, QueryResult]" = OrderedDict()
+        self._result_cache: (
+            "OrderedDict[tuple[str, str], tuple[QueryResult, tuple[_Dep, ...]]]"
+        ) = OrderedDict()
         self._result_cache_hits = 0
         # (table, version) of snapshots this engine committed, newest last
         self._own_commits: "OrderedDict[tuple[str, int], None]" = OrderedDict()
@@ -181,9 +213,6 @@ class Engine:
         # In-process registry of declared Iceberg schemas per table
         # (≈ the reference's SQLite registry): "db.table" → [(name, type, nullable)]
         self._schemas: dict[str, list[tuple[str, str, bool]]] = {}
-        # time-travel temp views created while rewriting the current
-        # statement; dropped after its eager read completes (no leak)
-        self._tt_views: list[str] = []
         # session-scoped executable views (CREATE VIEW — exceeds; the
         # reference reserves the keyword but has no statement for it)
         self._views: set[str] = set()
@@ -533,8 +562,7 @@ class Engine:
         return os.path.join(root, f"{db}.db", tbl)
 
     def _hadoop_path(self, location: str):
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(location)
+        path = jclass(self.spark, "org.apache.hadoop.fs.Path")(location)
         fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, path
 
@@ -606,6 +634,9 @@ class Engine:
         import os
 
         with self._stmt_lock:
+            # a registration that lagged the commit may have answered a
+            # cached read; the manifests cannot tell, so start over
+            self._result_cache.clear()
             current = self.catalog_store.load()
             entry = current["tables"].get(name)
             known = self._manifest["tables"].get(name)
@@ -700,6 +731,7 @@ class Engine:
             with self.statement_scope(database):
                 result = self._dispatch(routed)
             result.query_id = qi.query_id
+            qi.result_cache = result.result_cache
             self.exec_mgr.finish(qi, "done")
             return result
         except Exception:
@@ -752,34 +784,20 @@ class Engine:
     def _dispatch(self, r: Routed) -> QueryResult:
         k = r.kind
         if k in QUERY_KINDS:
-            sql = r.sql
-            if not self.strict_gate:
-                # VERSION AS OF / TIMESTAMP AS OF — exceeds the reference
-                sql = self._rewrite_time_travel(sql)
-            try:
-                mp = re.match(
-                    r"(?is)^\s*EXPLAIN\s+(ANALYZE\s+)?PIPELINE\s+(\w+)"
-                    r"(?:\s+USING\s+'([^']+)')?\s*$",
-                    sql,
+            mp = re.match(
+                r"(?is)^\s*EXPLAIN\s+(ANALYZE\s+)?PIPELINE\s+(\w+)"
+                r"(?:\s+USING\s+'([^']+)')?\s*$",
+                r.sql,
+            )
+            if mp:
+                return self._explain_pipeline(
+                    mp.group(2), mp.group(3), analyze=bool(mp.group(1))
                 )
-                if mp:
-                    return self._explain_pipeline(
-                        mp.group(2), mp.group(3), analyze=bool(mp.group(1))
-                    )
-                m = re.match(r"(?is)^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql)
-                if m:
-                    return self._explain_analyze(m.group(1))
-                return self._read(sql)
-            finally:
-                # _read collects eagerly, so the snapshot-pinned temp views
-                # are no longer needed — drop them instead of letting a
-                # long session leak one view per (table, version) read
-                for v in self._tt_views:
-                    try:
-                        self.spark.catalog.dropTempView(v)
-                    except Exception:
-                        pass
-                self._tt_views.clear()
+            m = re.match(r"(?is)^\s*EXPLAIN\s+ANALYZE\s+(.+)$", r.sql)
+            if m:
+                with self._time_travel(m.group(1)) as body:
+                    return self._explain_analyze(body)
+            return self._read(r.sql)
         if k == StmtKind.INSERT:
             return self._insert(r.sql)
         if k == StmtKind.UPDATE:
@@ -1174,45 +1192,163 @@ class Engine:
         return self.spark.sql(self._rewrite_system(routed.sql))
 
     def _read(self, sql: str) -> QueryResult:
-        # one planned frame: the cache key and the fetch share its plan
-        frame = self.read_frame(sql).limit(RESULT_CAP + 1)
+        """A query's result. A cached one is served when every table it
+        read is still at the snapshot it read, without planning the
+        statement in Spark; otherwise one planned frame serves the cache
+        fill and the fetch."""
         key = None
-        refs_view = any(
-            re.search(rf"\b{re.escape(v.split('.')[-1])}\b", sql, re.I)
-            for v in self._views
-        )
-        if (
-            self.result_cache_enabled
-            and not refs_view  # a CREATE OR REPLACE VIEW can change the
-            # result without touching any input file — skip, don't key
-            and not self._NONDET_RE.search(sql)
-        ):
-            try:
-                files = frame.inputFiles()
-            except Exception:
-                files = []
-            if files:  # file-less plans (VALUES, memory tables) skip
-                import hashlib
-
-                key = hashlib.md5(
-                    ("\n".join(sorted(files)) + "\0" + sql).encode()
-                ).hexdigest()
-                hit = self._result_cache.get(key)
-                if hit is not None:
-                    self._result_cache.move_to_end(key)
-                    self._result_cache_hits += 1
-                    return hit.copy()
-        qr = self._fetch(frame)
-        if key is not None and not qr.truncated:
+        if self.result_cache_enabled:
+            key = (sql, self.spark.catalog.currentDatabase())
+            hit = self._cache_get(key)
+            if hit is not None:
+                return hit
+        reads: list[tuple[str, int | None, list[int], list[str]]] = []
+        with self._time_travel(sql, reads) as body:
+            frame = self.read_frame(body).limit(RESULT_CAP + 1)
+            deps = None
+            if key is not None and self._cacheable(sql):
+                deps = self._cache_deps(frame, body, key[1], reads)
+            qr = self._fetch(frame)
+        if deps is not None and not qr.truncated:
             cache = self._result_cache
-            cache[key] = qr.copy()
+            cache[key] = (qr.copy(), deps)
             while cache and (
                 len(cache) > self._RESULT_CACHE_MAX
-                or sum(r.table.nbytes for r in cache.values())
+                or sum(r.table.nbytes for r, _ in cache.values())
                 > RESULT_CACHE_BYTES
             ):
                 cache.popitem(last=False)
+            qr.result_cache = "miss"
         return qr
+
+    def _cacheable(self, sql: str) -> bool:
+        """Whether the text allows caching: no view (a CREATE OR REPLACE
+        VIEW changes the answer without a commit) and nothing
+        non-deterministic or session-dependent."""
+        return not self._NONDET_RE.search(sql) and not any(
+            re.search(rf"\b{re.escape(v.split('.')[-1])}\b", sql, re.I)
+            for v in self._views
+        )
+
+    def _cache_get(self, key: tuple[str, str]) -> QueryResult | None:
+        found = self._result_cache.get(key)
+        if found is None:
+            return None
+        qr, deps = found
+        if not all(self._dep_holds(d) for d in deps):
+            del self._result_cache[key]
+            return None
+        self._result_cache.move_to_end(key)
+        self._result_cache_hits += 1
+        hit = qr.copy()
+        hit.result_cache = "hit"
+        return hit
+
+    def _dep_holds(self, dep: "_Dep") -> bool:
+        """Whether ``dep``'s table still has its catalog entry and the
+        snapshot the cached result read: for a live read the same current
+        version, for a pinned one a manifest not yet expired; the commit
+        time tells a re-created table's version n from the old one's."""
+        if self._manifest["tables"].get(dep.name) != dep.entry:
+            return False
+        vt = VersionedTable(dep.entry["location"])
+        if dep.live and vt.current_version() != dep.version:
+            return False
+        try:
+            return vt.manifest(dep.version)["committed_at"] == dep.committed_at
+        except (OSError, ValueError, KeyError):
+            return False
+
+    def _cache_deps(
+        self,
+        frame: DataFrame,
+        body: str,
+        db: str,
+        reads: list[tuple[str, int | None, list[int], list[str]]],
+    ) -> "tuple[_Dep, ...] | None":
+        """The dependencies of a read's result, or None when it must not
+        be cached. ``body`` is the statement after the time-travel
+        rewrite, whose temp views scanned ``reads``: (table, the current
+        version it saw or None for a pinned read, the versions it read,
+        the files it read). Every table ``body`` can name is a live
+        dependency at its current version. The result is cached only
+        when the plan reads files (``inputFiles()``), each of them in the
+        snapshot its table is held at, and, for a live table, all of
+        that snapshot's files in each directory the plan reads from: a
+        Spark registration that lags a commit, or reads files outside
+        any engine table, is never cached."""
+        try:
+            files = frame.inputFiles()
+        except Exception:
+            return None
+        if not files:
+            return None
+        tables = self._manifest["tables"]
+        deps: list[_Dep] = []
+        allowed: set[str] = set()
+        live_files: list[set[str]] = []
+
+        def snapshot(name: str, version: int | None, live: bool) -> list[str]:
+            """Add a dependency on ``version`` (None: the current one) and
+            return that snapshot's files."""
+            entry = tables[name]
+            vt = VersionedTable(entry["location"])
+            m = vt.manifest(vt.current_version() if version is None else version)
+            deps.append(_Dep(
+                name, copy.deepcopy(entry), m["version"], m["committed_at"], live
+            ))
+            return m["files"]
+
+        try:
+            for name in self._named_tables(body, db):
+                if not tables[name].get("versioned"):
+                    return None
+                current = set(snapshot(name, None, True))
+                allowed |= current
+                live_files.append(current)
+            for name, current, versions, read in reads:
+                if current is not None:
+                    snapshot(name, current, True)
+                for v in versions:
+                    snapshot(name, v, False)
+                allowed.update(read)
+        except (OSError, ValueError, KeyError):
+            return None
+        read = {_local_path(f) for f in files}
+        if not read <= allowed:
+            return None
+        dirs = {os.path.dirname(f) for f in read}
+        for current in live_files:
+            if any(
+                os.path.dirname(f) in dirs and f not in read for f in current
+            ):
+                return None
+        return tuple(deps)
+
+    _NAME_RE = re.compile(r"[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)*")
+
+    def _named_tables(self, sql: str, db: str) -> set[str]:
+        """The engine tables ``sql`` can name: each ``a.b`` of an
+        identifier chain, and each single name in ``db``. A superset of
+        what Spark resolves (a column or alias can share a table's name),
+        which costs a cache fill one extra dependency at most."""
+        text = "".join(
+            sql[sp.start : sp.end] if sp.kind == sqltext.CODE
+            else sql[sp.start + 1 : sp.end - 1].replace("``", "`")
+            if sp.kind == sqltext.IDENT
+            else " "
+            for sp in sqltext.spans(sql)
+        )
+        by_lower = {n.lower(): n for n in self._manifest["tables"]}
+        found: set[str] = set()
+        for m in self._NAME_RE.finditer(text):
+            parts = [p.strip().lower() for p in m.group().split(".")]
+            for i, part in enumerate(parts):
+                names = [f"{db}.{part}"]
+                if i + 1 < len(parts):
+                    names.append(f"{part}.{parts[i + 1]}")
+                found.update(by_lower[n] for n in names if n in by_lower)
+        return found
 
     @staticmethod
     def _fetch(frame: DataFrame) -> QueryResult:
@@ -1253,7 +1389,29 @@ class Engine:
 
     # ------------------------------------------------------------ DDL path
     # ------------------------------------------------ time travel (exceeds)
-    def _rewrite_time_travel(self, sql: str) -> str:
+    @contextmanager
+    def _time_travel(self, sql: str, reads: list | None = None):
+        """``sql`` with its time-travel reads rewritten to temp views
+        (unless ``strict_gate``); the views are dropped on exit — the
+        statement's read is eager, so they are no longer needed, and a
+        long session does not leak one view per (table, version) read.
+        What the views scan is appended to ``reads`` (see
+        ``_cache_deps``)."""
+        views: list[str] = []
+        try:
+            yield sql if self.strict_gate else self._rewrite_time_travel(
+                sql, views, [] if reads is None else reads
+            )
+        finally:
+            for v in views:
+                try:
+                    self.spark.catalog.dropTempView(v)
+                except Exception:
+                    pass
+
+    def _rewrite_time_travel(
+        self, sql: str, views: list[str], reads: list
+    ) -> str:
         """``FROM t VERSION AS OF n`` / ``FROM t TIMESTAMP AS OF 'ts'`` —
         Iceberg time-travel syntax over the engine's snapshot manifests
         (the reference is Iceberg-native but cannot time-travel either:
@@ -1276,7 +1434,7 @@ class Engine:
             seg = re.sub(
                 r"\b([A-Za-z_][\w.]*)\s+VERSION\s+AS\s+OF\s+(\d+)",
                 lambda m: self._time_travel_view(
-                    m.group(1), version=int(m.group(2))
+                    views, reads, m.group(1), version=int(m.group(2))
                 ),
                 seg,
                 flags=re.I,
@@ -1286,7 +1444,9 @@ class Engine:
             # query surface; Iceberg's incremental read in SQL clothes)
             seg = re.sub(
                 r"\b([A-Za-z_][\w.]*)\s+CHANGES\s+SINCE\s+VERSION\s+(\d+)",
-                lambda m: self._changes_view(m.group(1), int(m.group(2))),
+                lambda m: self._changes_view(
+                    views, reads, m.group(1), int(m.group(2))
+                ),
                 seg,
                 flags=re.I,
             )
@@ -1301,7 +1461,7 @@ class Engine:
                 value = sqltext.unquote(parts[i][1])
                 by = "ts" if m.group(2).upper() == "TIMESTAMP" else "tag"
                 seg = seg[: m.start()] + self._time_travel_view(
-                    m.group(1), **{by: value}
+                    views, reads, m.group(1), **{by: value}
                 )
                 i += 1
             out.append(seg)
@@ -1309,6 +1469,8 @@ class Engine:
 
     def _time_travel_view(
         self,
+        views: list[str],
+        reads: list,
         table: str,
         version: int | None = None,
         ts: str | None = None,
@@ -1322,6 +1484,7 @@ class Engine:
                 f"time travel not available for '{table}' "
                 "(not a versioned table)",
             )
+        current = vt.current_version()
         if tag is not None:
             tags = self._manifest["tables"].get(name, {}).get("tags", {})
             if tag not in tags:
@@ -1341,7 +1504,7 @@ class Engine:
                     f"bad TIMESTAMP AS OF literal: {ts!r}",
                 ) from e
             version = vt.version_at(epoch)
-        if not 1 <= version <= vt.current_version():
+        if not 1 <= version <= current:
             raise RangerError(
                 VALIDATION_FAILED,
                 f"snapshot version {version} does not exist for '{name}'",
@@ -1354,7 +1517,10 @@ class Engine:
                 f"snapshot version {version} of '{name}' has been expired",
             ) from None
         view = f"__tt_{name.replace('.', '_')}_v{version}"
-        self._tt_views.append(view)
+        views.append(view)
+        # a tag or a timestamp resolves against the table as it is now
+        pinned = tag is None and ts is None
+        reads.append((name, None if pinned else current, [version], files))
         if files:
             # basePath keeps partition columns derivable from the paths;
             # every file of one version shares its schema (ALTER rewrites
@@ -1372,7 +1538,9 @@ class Engine:
         df.createOrReplaceTempView(view)
         return view
 
-    def _changes_view(self, table: str, since_version: int) -> str:
+    def _changes_view(
+        self, views: list[str], reads: list, table: str, since_version: int
+    ) -> str:
         """``FROM t CHANGES SINCE VERSION n`` — scan only the files ADDED
         by snapshots n+1..current (exact because data files are
         immutable; a rewrite in the range surfaces its whole new file
@@ -1405,7 +1573,10 @@ class Engine:
                     "incremental range is not reconstructable",
                 ) from e
         view = f"__cdc_{name.replace('.', '_')}_s{since_version}"
-        self._tt_views.append(view)
+        views.append(view)
+        reads.append(
+            (name, current, list(range(since_version + 1, current + 1)), added)
+        )
         if added:
             # the newest snapshot's file carries the current schema; older
             # files read through it, so a column renamed or dropped since
@@ -2466,11 +2637,14 @@ class Engine:
                 f"SELECT produces {len(src.columns)} column(s) for "
                 f"{len(cols)} target column(s)",
             )
-        # positional mapping, cast to the target types
+        # positional mapping, cast to the target types: the source columns
+        # are renamed by position first, because a generated name (`36.0`
+        # for a literal) or a repeated one does not resolve by name
+        src = src.toDF(*(f"_c{i}" for i in range(len(cols))))
         df = src.select(
             *[
-                F.col(sc).cast(field_by_name[tc].dataType).alias(tc)
-                for sc, tc in zip(src.columns, cols)
+                F.col(f"_c{i}").cast(field_by_name[tc].dataType).alias(tc)
+                for i, tc in enumerate(cols)
             ]
         )
         for f in schema.fields:
@@ -3011,19 +3185,7 @@ class Engine:
                 write_parquet_column_codecs,
             )
 
-            try:
-                write_parquet_column_codecs(out_df, data_dir, *plan)
-            except Exception:
-                # the Arrow writer has no commit protocol: a failed job
-                # leaves its tasks' files in the live dir, and a task the
-                # abort has not stopped yet can still open one
-                tracker = self.spark.sparkContext.statusTracker()
-                deadline = time.monotonic() + 30
-                while tracker.getActiveStageIds() and time.monotonic() < deadline:
-                    time.sleep(0.05)
-                for f in walk_parquet(data_dir) - before:
-                    os.remove(f)
-                raise
+            write_parquet_column_codecs(out_df, data_dir, *plan)
             self.spark.catalog.refreshTable(name)
         else:
             out_df.write.insertInto(name)
@@ -3982,6 +4144,7 @@ class Engine:
                     if q.duration_s is not None
                     else time.perf_counter() - q.started_pc
                 ),
+                result_cache=q.result_cache,
             )
             for q in self.exec_mgr.list_queries()
         ]
@@ -3989,7 +4152,7 @@ class Engine:
             s,
             q_rows,
             "query_id string, sql string, status string, "
-            "started_at double, duration_s double",
+            "started_at double, duration_s double, result_cache string",
         ).createOrReplaceTempView("system_queries")
         # system.mviews — materialized-view registry (exceeds)
         mv_rows = [

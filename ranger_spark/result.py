@@ -94,6 +94,9 @@ class QueryResult:
         self.message = message
         self.query_id = query_id
         self.truncated = truncated
+        # "hit" or "miss" when the engine's result cache may keep this
+        # read's result (Engine._read), else None
+        self.result_cache: str | None = None
 
     def __repr__(self) -> str:
         return (

@@ -18,6 +18,8 @@ list is exactly what a snapshot manifest commit needs.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 
@@ -32,13 +34,21 @@ def write_parquet_column_codecs(
 ) -> list[str]:
     """Write ``df`` under ``path`` as parquet with per-column codecs
     (columns absent from ``codecs`` use ``default``). Returns the list
-    of files written (one per non-empty partition)."""
+    of files written (one per non-empty partition).
+
+    The tasks write into an ``_staging-*`` directory under ``path``
+    (hidden from Spark's listing and the snapshot walks) whose files move
+    into ``path`` only when the job succeeded. A failed job's directory is
+    removed: a Python worker can outlive its killed task by
+    ``spark.python.task.killTimeout`` and still write its file, which then
+    goes to the staging directory, never to ``path``."""
     for col, codec in codecs.items():
         if col not in df.columns:
             raise ValueError(f"column_compression column {col!r} not in schema")
         if codec.lower() not in _CODECS:
             raise ValueError(f"unsupported codec {codec!r} for column {col!r}")
-    os.makedirs(path, exist_ok=True)
+    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
+    os.makedirs(staging)
     comp = {c: k.upper() for c, k in codecs.items()}
     default_u = default.upper()
 
@@ -51,7 +61,7 @@ def write_parquet_column_codecs(
         writer = None
         # ULID names sort by creation time in listings — the reference's
         # data-file naming property (storage.go:307-309)
-        fname = os.path.join(path, f"part-{generate_ulid()}.parquet")
+        fname = os.path.join(staging, f"part-{generate_ulid()}.parquet")
         n = 0
         for batch in batches:
             if writer is None:
@@ -70,5 +80,13 @@ def write_parquet_column_codecs(
                 {"file": [fname], "rows": [n]}
             )
 
-    out = df.mapInArrow(run, "file string, rows long").collect()
-    return [r.file for r in out]
+    try:
+        out = df.mapInArrow(run, "file string, rows long").collect()
+        files = []
+        for r in out:
+            dst = os.path.join(path, os.path.basename(r.file))
+            os.rename(r.file, dst)
+            files.append(dst)
+        return files
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ranger_spark.errors import UNSUPPORTED_STATEMENT, RangerError
+from ranger_spark.jvm import jclass
 
 FORMATS = (
     "parquet",
@@ -35,7 +36,7 @@ FORMATS = (
 def avro_available(spark: SparkSession) -> bool:
     """True if the external spark-avro module is on the classpath."""
     try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
+        jclass(spark, "java.lang.Class").forName(
             "org.apache.spark.sql.avro.AvroFileFormat"
         )
         return True

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_json_string
 
+from ranger_spark.jvm import jclass
+
 TABLES = (
     "region",
     "nation",
@@ -105,11 +107,10 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     schemas are not merged; partition columns of ``k=v`` directories are
     not in it, and the reader appends them as it does after inference.
     Callers pass the result to ``spark.read.schema(...)``."""
-    jvm = spark._jvm
-    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
     state = spark._jsparkSession.sessionState()
     conf = state.newHadoopConf()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = jclass(spark, "org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(conf)
     status = min(
         _data_files(fs, fs.getFileStatus(hpath)),
@@ -118,13 +119,19 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     )
     if status is None:
         raise FileNotFoundError(f"no Parquet data file under {path}")
-    metadata = pq.ParquetFooterReader.readFooter(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    metadata = jclass(spark, pq + "ParquetFooterReader").readFooter(
+        jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile")
+        .fromStatus(status, conf),
+        jclass(
+            spark,
+            "org.apache.parquet.format.converter.ParquetMetadataConverter",
+        ).SKIP_ROW_GROUPS,
     )
-    schema = pq.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), metadata),
-        pq.ParquetToSparkSchemaConverter(state.conf()),
+    schema = jclass(spark, pq + "ParquetFileFormat").readSchemaFromFooter(
+        jclass(spark, "org.apache.parquet.hadoop.Footer")(
+            status.getPath(), metadata
+        ),
+        jclass(spark, pq + "ParquetToSparkSchemaConverter")(state.conf()),
     )
     # a file source reports every column nullable, whatever the footer says
     return _parse_datatype_json_string(schema.asNullable().json())

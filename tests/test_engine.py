@@ -1401,11 +1401,11 @@ def test_result_cache_version_keyed(engine):
     # identical statement, unchanged files → served from cache
     assert engine.execute(q).rows == [(2,)]
     assert engine._result_cache_hits == 1
-    # any commit changes the file set → the key changes, no stale hit
+    # any commit moves the table's current version → no stale hit
     engine.execute("INSERT INTO rc_t (id) VALUES (3);")
     assert engine.execute(q).rows == [(3,)]
     assert engine._result_cache_hits == 1
-    # CoW rewrite also re-keys
+    # so does a CoW rewrite
     engine.execute("UPDATE rc_t SET id = 10 WHERE id = 1;")
     assert sorted(engine.execute("SELECT id FROM rc_t;").rows) == [
         (2,),
@@ -1631,3 +1631,26 @@ def test_vacuum_dry_run_lists_without_deleting(engine, tmp_path):
     assert not os.path.exists(orphan)
     engine.execute("DROP TABLE vdr.t;")
     engine.execute("DROP DATABASE vdr;")
+
+
+def test_insert_select_maps_columns_by_position(engine):
+    """INSERT ... SELECT takes the SELECT's columns by position, so a
+    generated name with a dot (`36.0`) or a repeated name still lands."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS ispos;")
+    try:
+        engine.execute("CREATE TABLE ispos.t (i int32, f float64);")
+        engine.execute("INSERT INTO ispos.t (i, f) SELECT 7, 36.0;")
+        engine.execute("INSERT INTO ispos.t (i, f) SELECT 8 AS x, 1.5 AS x;")
+        assert sorted(engine.execute("SELECT * FROM ispos.t;").rows) == [
+            (7, 36.0), (8, 1.5),
+        ]
+        engine.execute(
+            "CREATE TABLE ispos.s (s struct<a:int32>, f float64);"
+        )
+        engine.execute(
+            "INSERT INTO ispos.s (s, f) SELECT named_struct('a', 3), 36.0;"
+        )
+        row = engine.execute("SELECT s.a, f FROM ispos.s;").rows
+        assert row == [(3, 36.0)]
+    finally:
+        engine.execute("DROP DATABASE ispos CASCADE;")

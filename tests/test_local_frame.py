@@ -242,6 +242,7 @@ SYSTEM_VIEW_TYPES = {
     "queries": [
         ("query_id", "string"), ("sql", "string"), ("status", "string"),
         ("started_at", "double"), ("duration_s", "double"),
+        ("result_cache", "string"),
     ],
     "mviews": [
         ("name", "string"), ("source_table", "string"),
@@ -299,7 +300,12 @@ def test_system_views_rows_and_types(engine):
         )
         assert len(files) == 1 and files[0][1] > 0 and files[0][2] is True
         marker = engine.execute("SELECT 'lf_newest' AS m;")
-        ids = {r[0] for r in q("SELECT query_id FROM system.queries;")}
-        assert marker.query_id in ids
+        read = [engine.execute("SELECT count(*) AS n FROM lf_sys.t;")]
+        read.append(engine.execute("SELECT count(*) AS n FROM lf_sys.t;"))
+        cache = dict(q("SELECT query_id, result_cache FROM system.queries;"))
+        assert marker.query_id in cache
+        # a file-less read is not cacheable; a table read misses, then hits
+        assert cache[marker.query_id] is None
+        assert [cache[r.query_id] for r in read] == ["miss", "hit"]
     finally:
         engine.spark.sql("DROP DATABASE lf_sys CASCADE")

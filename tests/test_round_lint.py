@@ -146,3 +146,35 @@ def test_flags_manual_average_and_exemption_actually_fires():
         " AS DECIMAL(38,4)), 2) AS DOUBLE) AS r FROM lineitem"
     )
     assert lint_oracle(snap_sql, "t") == []
+
+
+def test_jvm_classes_only_through_the_cached_handles():
+    """``spark._jvm.org.apache...`` costs one Py4J round trip per dotted
+    level, each package level a failed class lookup across the classpath;
+    ``ranger_spark.jvm.jclass`` resolves a class once per gateway. No
+    other module of the package walks a JVM package path
+    (``plans/inspect.py`` reaches a class the JVM view imports, by its
+    simple name, for debugging output)."""
+    import re
+
+    walk = re.compile(r"\b_?jvm\s*\.\s*[a-z_]\w*\s*\.")
+    pkg = os.path.join(ROOT, "ranger_spark")
+    exempt = {
+        os.path.join(pkg, "jvm.py"),
+        os.path.join(pkg, "plans", "inspect.py"),
+    }
+    found = []
+    for dirpath, _, names in os.walk(pkg):
+        for n in names:
+            path = os.path.join(dirpath, n)
+            if not n.endswith(".py") or path in exempt:
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if walk.search(line):
+                        found.append(f"{os.path.relpath(path, ROOT)}:{i}")
+    assert not found, found
+    # the pattern does catch the walks it replaced
+    assert walk.search("path = jvm.org.apache.hadoop.fs.Path(p)")
+    assert walk.search("spark._jvm.java.lang.Class.forName(n)")
+    assert not walk.search('jclass(spark, "org.apache.hadoop.fs.Path")')
