@@ -28,6 +28,8 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
@@ -48,7 +50,7 @@ from ranger_spark.result import QueryResult, fetch
 from ranger_spark.router import QUERY_KINDS, Routed, StmtKind, route
 from ranger_spark.sqltext import split_statements
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
-from ranger_spark.tables import parquet_schema
+from ranger_spark.tables import read_parquet_file, read_parquet_files
 
 RESULT_CAP = 100_000  # reference duckdb/engine.go:395-400
 # the SELECT result cache keeps its newest results up to this many bytes
@@ -226,6 +228,7 @@ class Engine:
         # (server/query/duckdb/engine.go) — statement execution is the
         # cheap part; Spark still parallelizes each job across cores.
         self._stmt_lock = threading.RLock()
+        self._uses = 0  # USE statements run, for statement_scope's restore
         self.catalog_store = self._make_catalog_store()
         self._load_manifest()
 
@@ -749,19 +752,27 @@ class Engine:
         The session's current database is restored on exit, so a USE
         inside the scope is statement-local too; when that database is
         gone by then (dropped inside the scope or behind the engine's
-        back), the session falls back to ``default``."""
+        back), the session falls back to ``default``. When ``database``
+        is already current, the scope only reads that, unless a USE runs
+        inside it."""
         with self._stmt_lock:
             saved = None
+            uses = self._uses
             if database:
-                if not self._db_exists(database):
-                    raise RangerError(
-                        DATABASE_NOT_FOUND, f"database '{database}' not found"
-                    )
-                saved = self.spark.catalog.currentDatabase()
-                self.spark.catalog.setCurrentDatabase(database)
+                current = self.spark.catalog.currentDatabase()
+                if database != current:
+                    if not self._db_exists(database):
+                        raise RangerError(
+                            DATABASE_NOT_FOUND,
+                            f"database '{database}' not found",
+                        )
+                    saved = current
+                    self.spark.catalog.setCurrentDatabase(database)
             try:
                 yield
             finally:
+                if saved is None and database and self._uses != uses:
+                    saved = database
                 if saved is not None:
                     self.spark.catalog.setCurrentDatabase(
                         saved
@@ -1181,7 +1192,10 @@ class Engine:
         runs commands eagerly: ``body`` must route as a query, so a write
         hidden in it (CTE-DML, an INSERT as a MERGE source) is refused
         before Spark sees it instead of landing around the snapshot
-        commit. ``system.X`` references are rewritten on the way."""
+        commit. ``system.X`` references are rewritten on the way, and
+        ``parquet.`path``` relations bound to footer-schema views
+        (``_bind_parquet_paths``), which ``spark.sql``'s eager analysis
+        makes part of the plan, so they are dropped when it returns."""
         routed = route(body + ";")
         if routed.kind not in QUERY_KINDS:
             raise RangerError(
@@ -1189,7 +1203,57 @@ class Engine:
                 f"expected a query (SELECT, WITH ... SELECT or EXPLAIN), "
                 f"got {routed.kind.value.upper()}",
             )
-        return self.spark.sql(self._rewrite_system(routed.sql))
+        sql = self._rewrite_system(routed.sql)
+        with self._temp_views() as views:
+            return self.spark.sql(self._bind_parquet_paths(sql, views))
+
+    # ``parquet.`` ending a code span, not as the tail of a longer name
+    _PARQUET_PREFIX = re.compile(r"(?<![\w.])parquet\.\Z", re.I)
+    _DOT_NEXT = re.compile(r"\s*\.")
+    _GLOB_CHARS = frozenset("{}[]*?\\")  # Spark's isGlobPath set
+
+    def _bind_parquet_paths(self, sql: str, views: list[str]) -> str:
+        """``sql`` with each ``parquet.`<path>``` relation on an existing
+        file or directory replaced by a temp view over
+        ``read_parquet_file``, whose schema comes from a footer read on
+        the driver, so Spark runs no schema-inference job for it. The new
+        views are appended to ``views``. A glob, a path the footer read
+        cannot serve (missing, not Parquet) and, when an engine database
+        is named ``parquet``, every path are left to Spark's own
+        resolution, which gives their answers and errors as before."""
+        if (
+            "parquet.`" not in sql.lower()
+            or "parquet" in self._manifest["databases"]
+        ):
+            return sql
+        parts = sqltext.spans(sql)
+        out: list[str] = []
+        last = 0
+        bound: dict[str, str | None] = {}
+        for prev, span in zip(parts, parts[1:]):
+            if span.kind != sqltext.IDENT or not span.closed:
+                continue
+            m = prev.kind == sqltext.CODE and self._PARQUET_PREFIX.search(
+                sql, prev.start, prev.end
+            )
+            # a name going on past the path is no relation
+            if not m or self._DOT_NEXT.match(sql, span.end):
+                continue
+            path = sql[span.start + 1 : span.end - 1].replace("``", "`")
+            if path not in bound:
+                bound[path] = None
+                if not self._GLOB_CHARS.intersection(path):
+                    try:
+                        df = read_parquet_file(self.spark, path)
+                    except (OSError, Py4JJavaError, PySparkException):
+                        continue
+                    bound[path] = f"__rs_f_{uuid_mod.uuid4().hex[:12]}"
+                    df.createOrReplaceTempView(bound[path])
+                    views.append(bound[path])
+            if bound[path] is not None:
+                out += (sql[last : m.start()], bound[path])
+                last = span.end
+        return "".join(out) + sql[last:] if out else sql
 
     def _read(self, sql: str) -> QueryResult:
         """A query's result. A cached one is served when every table it
@@ -1390,24 +1454,30 @@ class Engine:
     # ------------------------------------------------------------ DDL path
     # ------------------------------------------------ time travel (exceeds)
     @contextmanager
-    def _time_travel(self, sql: str, reads: list | None = None):
-        """``sql`` with its time-travel reads rewritten to temp views
-        (unless ``strict_gate``); the views are dropped on exit — the
+    def _temp_views(self):
+        """A list for a statement's temp views, each dropped on exit: the
         statement's read is eager, so they are no longer needed, and a
-        long session does not leak one view per (table, version) read.
-        What the views scan is appended to ``reads`` (see
-        ``_cache_deps``)."""
+        long session does not leak one view per read. They leave the
+        session catalog only; ``Catalog.dropTempView`` would also uncache
+        any cached plan that scans the same files."""
         views: list[str] = []
         try:
+            yield views
+        finally:
+            if views:
+                catalog = self.spark._jsparkSession.sessionState().catalog()  # noqa: SLF001
+                for v in views:
+                    catalog.dropTempView(v)
+
+    @contextmanager
+    def _time_travel(self, sql: str, reads: list | None = None):
+        """``sql`` with its time-travel reads rewritten to temp views
+        (unless ``strict_gate``), dropped on exit (``_temp_views``). What
+        the views scan is appended to ``reads`` (see ``_cache_deps``)."""
+        with self._temp_views() as views:
             yield sql if self.strict_gate else self._rewrite_time_travel(
                 sql, views, [] if reads is None else reads
             )
-        finally:
-            for v in views:
-                try:
-                    self.spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
 
     def _rewrite_time_travel(
         self, sql: str, views: list[str], reads: list
@@ -1525,10 +1595,8 @@ class Engine:
             # basePath keeps partition columns derivable from the paths;
             # every file of one version shares its schema (ALTER rewrites
             # the whole table)
-            df = (
-                self.spark.read.schema(parquet_schema(self.spark, files[-1]))
-                .option("basePath", vt.snapshot_dir(version))
-                .parquet(*files)
+            df = read_parquet_files(
+                self.spark, files, base_path=vt.snapshot_dir(version)
             )
         else:
             columns = vt.manifest(version)["columns"]
@@ -1581,9 +1649,7 @@ class Engine:
             # the newest snapshot's file carries the current schema; older
             # files read through it, so a column renamed or dropped since
             # reads as NULL
-            df = self.spark.read.schema(
-                parquet_schema(self.spark, added[-1])
-            ).parquet(*added)
+            df = read_parquet_files(self.spark, added)
         else:
             df = self.spark.table(name).limit(0)
         df.createOrReplaceTempView(view)
@@ -2389,11 +2455,16 @@ class Engine:
         )
         obs = Observation()
         target = itypes.to_spark_schema(columns)
-        out = df.observe(obs, F.count(F.lit(1)).alias("n")).select(
-            *[
-                F.col(src).cast(f.dataType).alias(f.name)
-                for src, f in zip(df.columns, target.fields)
-            ]
+        # positional mapping, as in _insert_select
+        out = (
+            df.observe(obs, F.count(F.lit(1)).alias("n"))
+            .toDF(*(f"_c{i}" for i in range(len(columns))))
+            .select(
+                *[
+                    F.col(f"_c{i}").cast(f.dataType).alias(f.name)
+                    for i, f in enumerate(target.fields)
+                ]
+            )
         )
         self._append_commit(name, out)
         n = obs.get["n"]
@@ -2496,6 +2567,7 @@ class Engine:
         if not self._db_exists(name):
             raise RangerError(DATABASE_NOT_FOUND, f"database '{name}' not found")
         self.spark.catalog.setCurrentDatabase(name)
+        self._uses += 1
         return QueryResult([], [], 0, message=f"using database '{name}'")
 
     # --------------------------------------------------------- insert path
@@ -2587,7 +2659,7 @@ class Engine:
         for f in schema.fields:
             if f.name not in cols:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        out = df.select(*[f.name for f in schema.fields])
+        out = df.select(*[_col(f.name) for f in schema.fields])
         if overwrite:
             self._rewrite_table(name, out, operation="overwrite")
             return QueryResult(
@@ -2652,7 +2724,7 @@ class Engine:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        out = df.select(*[f.name for f in schema.fields])
+        out = df.select(*[_col(f.name) for f in schema.fields])
         if overwrite:
             # SELECT may read the target table itself: _rewrite_table
             # stages into a fresh snapshot dir before the repoint, so the
@@ -3130,7 +3202,7 @@ class Engine:
         return df.select(
             *[
                 F.when(
-                    df[c].isNull(),
+                    _col(c).isNull(),
                     F.raise_error(
                         F.lit(
                             f"validation failed: column '{c}' of '{name}' "
@@ -3138,10 +3210,10 @@ class Engine:
                         )
                     ),
                 )
-                .otherwise(df[c])
+                .otherwise(_col(c))
                 .alias(c)
                 if c in required
-                else df[c]
+                else _col(c)
                 for c in df.columns
             ]
         )
@@ -3382,10 +3454,11 @@ class Engine:
         elif fmt == "json":
             src = reader.schema(schema).json(path)
         else:
-            src = reader.parquet(path)
+            src = read_parquet_file(self.spark, path)
         view = f"__copy_src_{uuid_mod.uuid4().hex[:8]}"
-        src.createOrReplaceTempView(view)
-        try:
+        with self._temp_views() as views:
+            src.createOrReplaceTempView(view)
+            views.append(view)
             col_list = ", ".join(c[0] for c in cols)
             msel = re.match(
                 r"INSERT\s+INTO\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*"
@@ -3395,8 +3468,6 @@ class Engine:
                 re.I | re.S,
             )
             res = self._insert_select(msel)
-        finally:
-            self.spark.catalog.dropTempView(view)
         return QueryResult(
             [], [], 0,
             message=f"copied into '{name}' from {path} ({fmt}): "
@@ -3607,7 +3678,7 @@ class Engine:
         schema = self.spark.table(src).schema
         files = vt.files(version) if version else []
         if files:
-            pinned = self.spark.read.schema(schema).parquet(*files)
+            pinned = read_parquet_files(self.spark, files, schema)
         else:
             pinned = local_frame(self.spark, [], schema)
         tmp = f"__mv_pin_{uuid_mod.uuid4().hex[:8]}"
@@ -3693,7 +3764,7 @@ class Engine:
         if not added:
             return 0
         src_schema = self.spark.table(meta["src"]).schema
-        delta = self.spark.read.schema(src_schema).parquet(*added)
+        delta = read_parquet_files(self.spark, added, src_schema)
         tmp = f"__mv_delta_{uuid_mod.uuid4().hex[:8]}"
         delta.createOrReplaceTempView(tmp)
         self._mv_pins.append(tmp)
@@ -4259,6 +4330,12 @@ class Engine:
 
     def _table_exists(self, name: str) -> bool:
         return self.spark.catalog.tableExists(name)
+
+
+def _col(name: str):
+    """The column named ``name``, taken as one name: a dot in it (the
+    generated name of a ``36.0`` literal) is no field access."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _property_list(props: dict) -> str:

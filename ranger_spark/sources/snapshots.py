@@ -31,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ranger_spark.frames import local_frame
-from ranger_spark.tables import parquet_schema
+from ranger_spark.tables import parquet_schema, read_parquet_files
 
 
 class SnapshotTable:
@@ -114,7 +114,7 @@ class SnapshotTable:
         files = self._load(version)["files"]
         # the newest commit's file is listed last and carries the
         # current schema
-        return spark.read.schema(parquet_schema(spark, files[-1])).parquet(*files)
+        return read_parquet_files(spark, files)
 
     def incremental(
         self, spark: SparkSession, from_version: int, to_version: int | None = None
@@ -128,7 +128,7 @@ class SnapshotTable:
         if not added:
             newest = self._load(to_version)["files"][-1]
             return local_frame(spark, [], parquet_schema(spark, newest))
-        return spark.read.schema(parquet_schema(spark, added[-1])).parquet(*added)
+        return read_parquet_files(spark, added)
 
     def history(self) -> list[dict]:
         return [

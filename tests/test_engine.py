@@ -1654,3 +1654,19 @@ def test_insert_select_maps_columns_by_position(engine):
         assert row == [(3, 36.0)]
     finally:
         engine.execute("DROP DATABASE ispos CASCADE;")
+
+
+def test_ctas_maps_columns_by_position(engine):
+    """CTAS takes the SELECT's columns by position too: the generated
+    names `7` and `36.0` become the new table's columns."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS ctpos;")
+    try:
+        r = engine.execute("CREATE TABLE ctpos.c AS SELECT 7, 36.0;")
+        assert r.row_count == 1
+        got = engine.execute("SELECT * FROM ctpos.c;")
+        assert got.columns == ["7", "36.0"]
+        assert got.rows == [(7, 36.0)]
+        engine.execute("INSERT INTO ctpos.c SELECT 8, 1.5;")
+        assert engine.execute("SELECT count(*) AS n FROM ctpos.c;").rows == [(2,)]
+    finally:
+        engine.execute("DROP DATABASE ctpos CASCADE;")

@@ -164,9 +164,6 @@ def test_changes_since_reads_through_the_newest_schema_across_alter(engine):
 
 
 # ------------------------------------------------------------------ guard
-# Reads whose files are not known up front: a directory, and a COPY FROM
-# source the user names.
-_SCHEMA_LESS_ALLOWED = {("tables.py", "path_view"), ("engine.py", "_copy_from")}
 _ENDS = ("read", "readStream", "write", "writeStream")
 
 
@@ -197,8 +194,6 @@ def schema_less_parquet_reads(root: pathlib.Path) -> list[str]:
         tree = ast.parse(path.read_text())
         for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            if (path.name, fn.name) in _SCHEMA_LESS_ALLOWED:
                 continue
             assigned = {
                 t.id: a.value

@@ -134,3 +134,23 @@ def test_not_null_holds_on_an_engine_backed_stream_ingest(spark, engine, tmp_pat
         q.awaitTermination(60)
     assert _state(engine, "nn.s") == before
     engine.execute("DROP DATABASE nn CASCADE;")
+
+
+def test_not_null_column_whose_name_has_a_dot(engine):
+    """The guard takes each column as one name: CTAS of a literal makes
+    the NOT NULL column `36.0`, whose dot is no field access."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS nnd;")
+    try:
+        engine.execute("CREATE TABLE nnd.c AS SELECT 7 AS id, 36.0;")
+        assert [(c, n) for c, _, n in engine._schemas["nnd.c"]] == [
+            ("id", False), ("36.0", False)
+        ]
+        engine.execute("INSERT INTO nnd.c SELECT 8, 1.5;")
+        before = _state(engine, "nnd.c")
+        with pytest.raises(RangerError) as err:
+            engine.execute("INSERT INTO nnd.c SELECT 9, NULL;")
+        assert err.value.code == VALIDATION_FAILED
+        assert "column '36.0' of 'nnd.c' cannot be null" in str(err.value)
+        assert _state(engine, "nnd.c") == before
+    finally:
+        engine.execute("DROP DATABASE nnd CASCADE;")

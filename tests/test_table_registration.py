@@ -176,6 +176,37 @@ def test_scoped_statement_after_its_saved_database_was_dropped(engine, spark):
         spark.catalog.setCurrentDatabase("default")
 
 
+def test_scope_on_the_current_database_makes_one_catalog_call(
+    engine, spark, monkeypatch
+):
+    engine.execute("CREATE DATABASE IF NOT EXISTS scope_db;")
+    engine.execute("USE default;")
+    calls: list[str] = []
+    for fn in ("currentDatabase", "setCurrentDatabase", "databaseExists"):
+        orig = getattr(spark.catalog, fn)
+        monkeypatch.setattr(
+            spark.catalog,
+            fn,
+            lambda *a, _fn=fn, _orig=orig: calls.append(_fn) or _orig(*a),
+        )
+    try:
+        with engine.statement_scope("default"):
+            pass
+        assert calls == ["currentDatabase"]
+        calls.clear()
+        with engine.statement_scope("scope_db"):
+            assert spark.catalog.currentDatabase() == "scope_db"
+        assert spark.catalog.currentDatabase() == "default"
+        assert calls.count("setCurrentDatabase") == 2
+        # a USE inside a scope on the current database stays statement-local
+        engine.execute("USE scope_db;", database="default")
+        assert spark.catalog.currentDatabase() == "default"
+    finally:
+        monkeypatch.undo()
+        spark.catalog.setCurrentDatabase("default")
+        engine.execute("DROP DATABASE scope_db CASCADE;")
+
+
 # ------------------------------------------------------------------ guard
 # a session or Hadoop conf write; the Hadoop configuration may only be
 # passed straight into a call (getFileSystem), never held to set keys on
