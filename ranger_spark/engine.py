@@ -50,7 +50,7 @@ from ranger_spark.result import QueryResult, fetch
 from ranger_spark.router import QUERY_KINDS, Routed, StmtKind, route
 from ranger_spark.sqltext import split_statements
 from ranger_spark.sources.snapshots import VersionedTable, walk_parquet
-from ranger_spark.tables import read_parquet_file, read_parquet_files
+from ranger_spark.tables import parquet_schema, read_parquet_file, read_parquet_files
 
 RESULT_CAP = 100_000  # reference duckdb/engine.go:395-400
 # the SELECT result cache keeps its newest results up to this many bytes
@@ -104,6 +104,24 @@ class QueryInfo:
     duration_s: float | None = None
     # "hit" or "miss" for a read the result cache may keep, else None
     result_cache: str | None = None
+
+
+class _Read(NamedTuple):
+    """What a snapshot relation scanned (``Engine._bind_relations``): its
+    table, the current version it saw (None for a pinned ``VERSION AS OF
+    n``), the versions and files it read, and the statement text it
+    stood for."""
+
+    name: str
+    current: int | None
+    versions: list[int]
+    files: list[str]
+    relation: str
+
+    @property
+    def version(self) -> int:
+        """The table version the read reflects."""
+        return self.versions[-1] if self.current is None else self.current
 
 
 class _Dep(NamedTuple):
@@ -218,12 +236,11 @@ class Engine:
         # session-scoped executable views (CREATE VIEW — exceeds; the
         # reference reserves the keyword but has no statement for it)
         self._views: set[str] = set()
-        self._mv_pins: list[str] = []
         # One statement at a time per Engine: the wire servers run execute()
         # from many connection threads, but per-statement state (the
-        # time-travel view list and the session current-database used for
-        # name resolution) is engine-scoped, so interleaved statements
-        # would corrupt each other.
+        # session current-database used for name resolution) is
+        # engine-scoped, so interleaved statements would corrupt each
+        # other.
         # The reference shares one embedded DuckDB the same way
         # (server/query/duckdb/engine.go) — statement execution is the
         # cheap part; Spark still parallelizes each job across cores.
@@ -806,8 +823,7 @@ class Engine:
                 )
             m = re.match(r"(?is)^\s*EXPLAIN\s+ANALYZE\s+(.+)$", r.sql)
             if m:
-                with self._time_travel(m.group(1)) as body:
-                    return self._explain_analyze(body)
+                return self._explain_analyze(m.group(1))
             return self._read(r.sql)
         if k == StmtKind.INSERT:
             return self._insert(r.sql)
@@ -1187,15 +1203,18 @@ class Engine:
     )
     _RESULT_CACHE_MAX = 32
 
-    def read_frame(self, body: str) -> DataFrame:
+    def read_frame(self, body: str, reads: list | None = None) -> DataFrame:
         """The one way a client's query text reaches ``spark.sql``, which
         runs commands eagerly: ``body`` must route as a query, so a write
         hidden in it (CTE-DML, an INSERT as a MERGE source) is refused
         before Spark sees it instead of landing around the snapshot
         commit. ``system.X`` references are rewritten on the way, and
-        ``parquet.`path``` relations bound to footer-schema views
-        (``_bind_parquet_paths``), which ``spark.sql``'s eager analysis
-        makes part of the plan, so they are dropped when it returns."""
+        snapshot and path relations bound to temp views
+        (``_bind_relations``, which appends a ``_Read`` per snapshot
+        relation to ``reads``). ``spark.sql``'s eager analysis makes the
+        views part of the plan, so they are dropped when it returns; they
+        leave the session catalog only, as ``Catalog.dropTempView`` would
+        also uncache any cached plan that scans the same files."""
         routed = route(body + ";")
         if routed.kind not in QUERY_KINDS:
             raise RangerError(
@@ -1204,56 +1223,120 @@ class Engine:
                 f"got {routed.kind.value.upper()}",
             )
         sql = self._rewrite_system(routed.sql)
-        with self._temp_views() as views:
-            return self.spark.sql(self._bind_parquet_paths(sql, views))
+        views: list[str] = []
+        try:
+            return self.spark.sql(
+                self._bind_relations(sql, views, [] if reads is None else reads)
+            )
+        finally:
+            if views:
+                catalog = self.spark._jsparkSession.sessionState().catalog()  # noqa: SLF001
+                for v in views:
+                    catalog.dropTempView(v)
 
     # ``parquet.`` ending a code span, not as the tail of a longer name
     _PARQUET_PREFIX = re.compile(r"(?<![\w.])parquet\.\Z", re.I)
     _DOT_NEXT = re.compile(r"\s*\.")
     _GLOB_CHARS = frozenset("{}[]*?\\")  # Spark's isGlobPath set
+    _SNAPSHOT_HINT = re.compile(r"\bAS\s+OF\b|\bCHANGES\s+SINCE\b", re.I)
+    # a snapshot relation in code; a TIMESTAMP or quoted VERSION one ends
+    # its code span, and the next, quoted, span holds the value
+    _SNAPSHOT_REF = re.compile(
+        r"\b([A-Za-z_][\w.]*)\s+(?:VERSION\s+AS\s+OF\s+(\d+)"
+        r"|CHANGES\s+SINCE\s+VERSION\s+(\d+)"
+        r"|(TIMESTAMP|VERSION)\s+AS\s+OF\s*\Z)",
+        re.I,
+    )
 
-    def _bind_parquet_paths(self, sql: str, views: list[str]) -> str:
-        """``sql`` with each ``parquet.`<path>``` relation on an existing
-        file or directory replaced by a temp view over
-        ``read_parquet_file``, whose schema comes from a footer read on
-        the driver, so Spark runs no schema-inference job for it. The new
-        views are appended to ``views``. A glob, a path the footer read
-        cannot serve (missing, not Parquet) and, when an engine database
-        is named ``parquet``, every path are left to Spark's own
-        resolution, which gives their answers and errors as before."""
-        if (
-            "parquet.`" not in sql.lower()
-            or "parquet" in self._manifest["databases"]
-        ):
+    def _bind_relations(self, sql: str, views: list[str], reads: list) -> str:
+        """``sql`` with each of these relations in code replaced by a temp
+        view, whose name is appended to ``views``:
+
+        - ``t VERSION AS OF n|'tag'`` and ``t TIMESTAMP AS OF 'ts'``
+          (``_time_travel_view``), ``t CHANGES SINCE VERSION n``
+          (``_changes_view``): Iceberg's time-travel and incremental reads
+          over the snapshot manifests, unless ``strict_gate``;
+        - ``parquet.`<path>``` on an existing file or directory, read with
+          the schema of a footer read on the driver, so Spark runs no
+          schema-inference job for it. A glob, a path the footer read
+          cannot serve (missing, not Parquet) and, when an engine database
+          is named ``parquet``, every path are left to Spark's own
+          resolution, which gives their answers and errors as before.
+
+        A relation written twice the same way is bound once."""
+        snapshots = not self.strict_gate and self._SNAPSHOT_HINT.search(sql)
+        paths = (
+            "parquet.`" in sql.lower()
+            and "parquet" not in self._manifest["databases"]
+        )
+        if not (snapshots or paths):
             return sql
         parts = sqltext.spans(sql)
         out: list[str] = []
         last = 0
         bound: dict[str, str | None] = {}
-        for prev, span in zip(parts, parts[1:]):
-            if span.kind != sqltext.IDENT or not span.closed:
+
+        def bind(start: int, end: int, make) -> None:
+            """Put a view over ``make()`` in place of ``sql[start:end]``; a
+            None frame leaves the relation to Spark."""
+            nonlocal last
+            relation = sql[start:end]
+            if relation not in bound:
+                frame = make()
+                bound[relation] = None
+                if frame is not None:
+                    bound[relation] = f"__rs_f_{uuid_mod.uuid4().hex[:12]}"
+                    frame.createOrReplaceTempView(bound[relation])
+                    views.append(bound[relation])
+            if bound[relation] is not None:
+                out.extend((sql[last:start], bound[relation]))
+                last = end
+
+        for i, span in enumerate(parts):
+            if span.kind != sqltext.CODE:
                 continue
-            m = prev.kind == sqltext.CODE and self._PARQUET_PREFIX.search(
-                sql, prev.start, prev.end
-            )
+            nxt = parts[i + 1] if i + 1 < len(parts) else None
+            refs = self._SNAPSHOT_REF.finditer(sql, span.start, span.end)
+            for m in refs if snapshots else ():
+                table, version, since, by = m.groups()
+                end, build = m.end(), self._time_travel_view
+                if since is not None:
+                    build, at = self._changes_view, {"since": int(since)}
+                elif version is not None:
+                    at = {"version": int(version)}
+                elif nxt is not None and nxt.kind == sqltext.STRING:
+                    end = nxt.end
+                    value = sqltext.unquote(sql[nxt.start : end])
+                    at = {"ts" if by.upper() == "TIMESTAMP" else "tag": value}
+                else:
+                    continue
+                relation = sql[m.start() : end]
+                bind(m.start(), end, functools.partial(
+                    build, reads, relation, table, **at
+                ))
+            if not (
+                paths
+                and nxt is not None
+                and nxt.kind == sqltext.IDENT
+                and nxt.closed
+            ):
+                continue
+            m = self._PARQUET_PREFIX.search(sql, span.start, span.end)
             # a name going on past the path is no relation
-            if not m or self._DOT_NEXT.match(sql, span.end):
-                continue
-            path = sql[span.start + 1 : span.end - 1].replace("``", "`")
-            if path not in bound:
-                bound[path] = None
-                if not self._GLOB_CHARS.intersection(path):
-                    try:
-                        df = read_parquet_file(self.spark, path)
-                    except (OSError, Py4JJavaError, PySparkException):
-                        continue
-                    bound[path] = f"__rs_f_{uuid_mod.uuid4().hex[:12]}"
-                    df.createOrReplaceTempView(bound[path])
-                    views.append(bound[path])
-            if bound[path] is not None:
-                out += (sql[last : m.start()], bound[path])
-                last = span.end
+            if m and not self._DOT_NEXT.match(sql, nxt.end):
+                path = sql[nxt.start + 1 : nxt.end - 1].replace("``", "`")
+                bind(m.start(), nxt.end, functools.partial(self._path_frame, path))
         return "".join(out) + sql[last:] if out else sql
+
+    def _path_frame(self, path: str) -> DataFrame | None:
+        """``path`` read with its footer schema, or None to leave it to
+        Spark."""
+        if self._GLOB_CHARS.intersection(path):
+            return None
+        try:
+            return read_parquet_file(self.spark, path)
+        except (OSError, Py4JJavaError, PySparkException):
+            return None
 
     def _read(self, sql: str) -> QueryResult:
         """A query's result. A cached one is served when every table it
@@ -1266,13 +1349,12 @@ class Engine:
             hit = self._cache_get(key)
             if hit is not None:
                 return hit
-        reads: list[tuple[str, int | None, list[int], list[str]]] = []
-        with self._time_travel(sql, reads) as body:
-            frame = self.read_frame(body).limit(RESULT_CAP + 1)
-            deps = None
-            if key is not None and self._cacheable(sql):
-                deps = self._cache_deps(frame, body, key[1], reads)
-            qr = self._fetch(frame)
+        reads: list[_Read] = []
+        frame = self.read_frame(sql, reads).limit(RESULT_CAP + 1)
+        deps = None
+        if key is not None and self._cacheable(sql):
+            deps = self._cache_deps(frame, sql, key[1], reads)
+        qr = self._fetch(frame)
         if deps is not None and not qr.truncated:
             cache = self._result_cache
             cache[key] = (qr.copy(), deps)
@@ -1324,23 +1406,18 @@ class Engine:
             return False
 
     def _cache_deps(
-        self,
-        frame: DataFrame,
-        body: str,
-        db: str,
-        reads: list[tuple[str, int | None, list[int], list[str]]],
+        self, frame: DataFrame, sql: str, db: str, reads: list[_Read]
     ) -> "tuple[_Dep, ...] | None":
         """The dependencies of a read's result, or None when it must not
-        be cached. ``body`` is the statement after the time-travel
-        rewrite, whose temp views scanned ``reads``: (table, the current
-        version it saw or None for a pinned read, the versions it read,
-        the files it read). Every table ``body`` can name is a live
-        dependency at its current version. The result is cached only
-        when the plan reads files (``inputFiles()``), each of them in the
-        snapshot its table is held at, and, for a live table, all of
-        that snapshot's files in each directory the plan reads from: a
-        Spark registration that lags a commit, or reads files outside
-        any engine table, is never cached."""
+        be cached. ``sql`` is the statement text; cut out of it the
+        snapshot relations the binder replaced (``reads``), every table
+        it can name is a live dependency at its current version, and
+        each read adds its own. The result is cached only when the plan
+        reads files (``inputFiles()``), each of them in the snapshot its
+        table is held at, and, for a live table, all of that snapshot's
+        files in each directory the plan reads from: a Spark
+        registration that lags a commit, or reads files outside any
+        engine table, is never cached."""
         try:
             files = frame.inputFiles()
         except Exception:
@@ -1363,19 +1440,21 @@ class Engine:
             ))
             return m["files"]
 
+        for r in reads:
+            sql = sql.replace(r.relation, " ")
         try:
-            for name in self._named_tables(body, db):
+            for name in self._named_tables(sql, db):
                 if not tables[name].get("versioned"):
                     return None
                 current = set(snapshot(name, None, True))
                 allowed |= current
                 live_files.append(current)
-            for name, current, versions, read in reads:
-                if current is not None:
-                    snapshot(name, current, True)
-                for v in versions:
-                    snapshot(name, v, False)
-                allowed.update(read)
+            for r in reads:
+                if r.current is not None:
+                    snapshot(r.name, r.current, True)
+                for v in r.versions:
+                    snapshot(r.name, v, False)
+                allowed.update(r.files)
         except (OSError, ValueError, KeyError):
             return None
         read = {_local_path(f) for f in files}
@@ -1451,101 +1530,21 @@ class Engine:
             chars[i] = "_"  # system.X -> system_X, same length
         return "".join(chars)
 
-    # ------------------------------------------------------------ DDL path
     # ------------------------------------------------ time travel (exceeds)
-    @contextmanager
-    def _temp_views(self):
-        """A list for a statement's temp views, each dropped on exit: the
-        statement's read is eager, so they are no longer needed, and a
-        long session does not leak one view per read. They leave the
-        session catalog only; ``Catalog.dropTempView`` would also uncache
-        any cached plan that scans the same files."""
-        views: list[str] = []
-        try:
-            yield views
-        finally:
-            if views:
-                catalog = self.spark._jsparkSession.sessionState().catalog()  # noqa: SLF001
-                for v in views:
-                    catalog.dropTempView(v)
-
-    @contextmanager
-    def _time_travel(self, sql: str, reads: list | None = None):
-        """``sql`` with its time-travel reads rewritten to temp views
-        (unless ``strict_gate``), dropped on exit (``_temp_views``). What
-        the views scan is appended to ``reads`` (see ``_cache_deps``)."""
-        with self._temp_views() as views:
-            yield sql if self.strict_gate else self._rewrite_time_travel(
-                sql, views, [] if reads is None else reads
-            )
-
-    def _rewrite_time_travel(
-        self, sql: str, views: list[str], reads: list
-    ) -> str:
-        """``FROM t VERSION AS OF n`` / ``FROM t TIMESTAMP AS OF 'ts'`` —
-        Iceberg time-travel syntax over the engine's snapshot manifests
-        (the reference is Iceberg-native but cannot time-travel either:
-        its DuckDB views always read current metadata). The table
-        reference is replaced by a temp view scanning exactly that
-        snapshot's file list. Only identifier positions are rewritten —
-        quoted literals pass through untouched."""
-        up = sql.upper()
-        if "AS OF" not in up and "CHANGES SINCE" not in up:
-            return sql
-        parts = [(s.kind, sql[s.start : s.end]) for s in sqltext.spans(sql)]
-        out: list[str] = []
-        i = 0
-        while i < len(parts):
-            kind, seg = parts[i]
-            i += 1
-            if kind != sqltext.CODE:
-                out.append(seg)
-                continue
-            seg = re.sub(
-                r"\b([A-Za-z_][\w.]*)\s+VERSION\s+AS\s+OF\s+(\d+)",
-                lambda m: self._time_travel_view(
-                    views, reads, m.group(1), version=int(m.group(2))
-                ),
-                seg,
-                flags=re.I,
-            )
-            # SQL CDC read: rows ADDED strictly after version n (snapshot-
-            # diff incremental — the pull half of the Astha fan-out, as a
-            # query surface; Iceberg's incremental read in SQL clothes)
-            seg = re.sub(
-                r"\b([A-Za-z_][\w.]*)\s+CHANGES\s+SINCE\s+VERSION\s+(\d+)",
-                lambda m: self._changes_view(
-                    views, reads, m.group(1), int(m.group(2))
-                ),
-                seg,
-                flags=re.I,
-            )
-            # TIMESTAMP AS OF 'ts', or VERSION AS OF 'tag' (a named
-            # Iceberg ref): the value is the next, quoted, span
-            m = re.search(
-                r"\b([A-Za-z_][\w.]*)\s+(TIMESTAMP|VERSION)\s+AS\s+OF\s*$",
-                seg,
-                re.I,
-            )
-            if m and i < len(parts) and parts[i][0] == sqltext.STRING:
-                value = sqltext.unquote(parts[i][1])
-                by = "ts" if m.group(2).upper() == "TIMESTAMP" else "tag"
-                seg = seg[: m.start()] + self._time_travel_view(
-                    views, reads, m.group(1), **{by: value}
-                )
-                i += 1
-            out.append(seg)
-        return "".join(out)
-
     def _time_travel_view(
         self,
-        views: list[str],
-        reads: list,
+        reads: list[_Read],
+        relation: str,
         table: str,
         version: int | None = None,
         ts: str | None = None,
         tag: str | None = None,
-    ) -> str:
+    ) -> DataFrame:
+        """``t VERSION AS OF n|'tag'`` / ``t TIMESTAMP AS OF 'ts'`` —
+        Iceberg time travel over the engine's snapshot manifests (the
+        reference is Iceberg-native but cannot time-travel either: its
+        DuckDB views always read current metadata): exactly that
+        snapshot's file list."""
         name = self._qualify(table)
         vt = self._versioned_for(name)
         if vt is None:
@@ -1580,41 +1579,28 @@ class Engine:
                 f"snapshot version {version} does not exist for '{name}'",
             )
         try:
-            files = vt.files(version)
+            manifest = vt.manifest(version)
         except FileNotFoundError:
             raise RangerError(
                 VALIDATION_FAILED,
                 f"snapshot version {version} of '{name}' has been expired",
             ) from None
-        view = f"__tt_{name.replace('.', '_')}_v{version}"
-        views.append(view)
         # a tag or a timestamp resolves against the table as it is now
         pinned = tag is None and ts is None
-        reads.append((name, None if pinned else current, [version], files))
-        if files:
-            # basePath keeps partition columns derivable from the paths;
-            # every file of one version shares its schema (ALTER rewrites
-            # the whole table)
-            df = read_parquet_files(
-                self.spark, files, base_path=vt.snapshot_dir(version)
-            )
-        else:
-            columns = vt.manifest(version)["columns"]
-            df = local_frame(
-                self.spark, [], itypes.to_spark_schema([tuple(c) for c in columns])
-            )
-        df.createOrReplaceTempView(view)
-        return view
+        reads.append(_Read(
+            name, None if pinned else current, [version], manifest["files"],
+            relation,
+        ))
+        return self._snapshot_frame(name, [manifest], "files")
 
     def _changes_view(
-        self, views: list[str], reads: list, table: str, since_version: int
-    ) -> str:
-        """``FROM t CHANGES SINCE VERSION n`` — scan only the files ADDED
-        by snapshots n+1..current (exact because data files are
-        immutable; a rewrite in the range surfaces its whole new file
-        set, the correct conservative answer for CoW history). This is
-        the SQL face of the incremental reads Astha subscribers and MV
-        refresh use internally."""
+        self, reads: list[_Read], relation: str, table: str, since: int
+    ) -> DataFrame:
+        """``t CHANGES SINCE VERSION n`` — only the files ADDED by
+        snapshots n+1..current (exact because data files are immutable; a
+        rewrite in the range surfaces its whole new file set, the correct
+        conservative answer for CoW history). This is the SQL face of the
+        incremental reads Astha subscribers and MV refresh use."""
         name = self._qualify(table)
         vt = self._versioned_for(name)
         if vt is None:
@@ -1624,36 +1610,63 @@ class Engine:
                 "(not a versioned table)",
             )
         current = vt.current_version()
-        if not 0 <= since_version <= current:
+        if not 0 <= since <= current:
             raise RangerError(
                 VALIDATION_FAILED,
-                f"snapshot version {since_version} does not exist for "
-                f"'{name}'",
+                f"snapshot version {since} does not exist for '{name}'",
             )
-        added: list[str] = []
-        for v in range(since_version + 1, current + 1):
+        manifests = []
+        for v in range(since + 1, current + 1):
             try:
-                added.extend(vt.manifest(v)["added_files"])
+                manifests.append(vt.manifest(v))
             except FileNotFoundError as e:
                 raise RangerError(
                     VALIDATION_FAILED,
                     f"snapshot version {v} of '{name}' has been expired; "
                     "incremental range is not reconstructable",
                 ) from e
-        view = f"__cdc_{name.replace('.', '_')}_s{since_version}"
-        views.append(view)
-        reads.append(
-            (name, current, list(range(since_version + 1, current + 1)), added)
+        reads.append(_Read(
+            name, current, list(range(since + 1, current + 1)),
+            [f for m in manifests for f in m["added_files"]], relation,
+        ))
+        return self._snapshot_frame(name, manifests, "added_files")
+
+    def _snapshot_frame(
+        self, name: str, manifests: list[dict], listed: str
+    ) -> DataFrame:
+        """The files ``manifests`` (oldest first) list under ``listed``
+        (``files`` or ``added_files``) as one frame in the newest
+        manifest's declared ``columns``. Each snapshot dir's files are read
+        with that dir as ``basePath``, so partition columns come from the
+        paths in their declared types, and the dirs' frames are unioned by
+        name (one ``basePath`` above several snapshot dirs is a conflicting
+        directory structure to Spark); a column an older dir lacks, such
+        as one renamed since, reads as NULL. Manifests written before
+        ``columns`` was recorded read in the newest file's footer schema;
+        with no file either, in the table's current schema."""
+        columns = manifests[-1].get("columns") if manifests else None
+        schema = (
+            itypes.to_spark_schema([tuple(c) for c in columns]) if columns else None
         )
-        if added:
-            # the newest snapshot's file carries the current schema; older
-            # files read through it, so a column renamed or dropped since
-            # reads as NULL
-            df = read_parquet_files(self.spark, added)
-        else:
-            df = self.spark.table(name).limit(0)
-        df.createOrReplaceTempView(view)
-        return view
+        by_dir: dict[str, list[str]] = {}
+        for m in manifests:
+            if m[listed]:
+                by_dir.setdefault(m["dir"], []).extend(m[listed])
+        if not by_dir:
+            if schema is None:
+                return self.spark.table(name).limit(0)
+            return local_frame(self.spark, [], schema)
+        if schema is None:
+            schema = parquet_schema(self.spark, [*by_dir.values()][-1][-1])
+        frames = [
+            read_parquet_files(self.spark, files, schema, base_path=d)
+            for d, files in by_dir.items()
+        ]
+        if len(frames) == 1:
+            return frames[0]
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        ).select(*map(_col, frames[-1].columns))
 
     # ------------------------------------------------------- pipelines
     # The operator registry (SURVEY §2 / the LLM-pipeline library) as a
@@ -2331,6 +2344,11 @@ class Engine:
         # recover() can re-register it (reference registry durability);
         # the root follows the STORAGE clause (s3 → configured bucket root)
         location = self.table_location(name, opts["storage"])
+        if location in (e["location"] for e in self._manifest["tables"].values()):
+            # a table renamed away from this name keeps its directory;
+            # sharing it would mix two snapshot histories, and a DROP of
+            # either would delete the other's data
+            location += f"-{uuid_mod.uuid4().hex[:8]}"
         # local roots get snapshot versioning (Iceberg-style manifests,
         # reference metadata.go:91-155): the catalog LOCATION points INTO
         # the current snapshot dir under the root; remote (s3a://) roots
@@ -2356,8 +2374,11 @@ class Engine:
         }
         if opts["storage"] == "s3" and self._s3_mirror_conf() is not None:
             remote_root, _ = self._s3_mirror_conf()
-            db, tbl = name.split(".", 1)
-            entry["s3_remote"] = f"{remote_root}/{db}.db/{tbl}"
+            # named after the local directory, which no other table holds
+            db = name.split(".", 1)[0]
+            entry["s3_remote"] = (
+                f"{remote_root}/{db}.db/{os.path.basename(location)}"
+            )
         self._mutate_manifest(lambda m: m["tables"].__setitem__(name, entry))
         try:
             self._register_table(name)
@@ -2438,7 +2459,9 @@ class Engine:
     ) -> QueryResult:
         """Create `name` with the DataFrame's inferred Iceberg schema and
         land the rows through the distributed single-pass write + snapshot
-        commit — shared by CTAS and PIPELINE ... INTO."""
+        commit — shared by CTAS, CREATE MATERIALIZED VIEW and PIPELINE ...
+        INTO. A failed write drops the new table again, so the name stays
+        free for a retry."""
         if self._table_exists(name):
             if if_not_exists:
                 return QueryResult([], [], 0, message=f"table '{name}' exists")
@@ -2454,19 +2477,15 @@ class Engine:
              "settings": {}},
         )
         obs = Observation()
-        target = itypes.to_spark_schema(columns)
-        # positional mapping, as in _insert_select
-        out = (
-            df.observe(obs, F.count(F.lit(1)).alias("n"))
-            .toDF(*(f"_c{i}" for i in range(len(columns))))
-            .select(
-                *[
-                    F.col(f"_c{i}").cast(f.dataType).alias(f.name)
-                    for i, f in enumerate(target.fields)
-                ]
-            )
+        out = _by_position(
+            df.observe(obs, F.count(F.lit(1)).alias("n")),
+            itypes.to_spark_schema(columns),
         )
-        self._append_commit(name, out)
+        try:
+            self._append_commit(name, out)
+        except Exception:
+            self._drop_table(f"DROP TABLE {name}")
+            raise
         n = obs.get["n"]
         return QueryResult(
             [], [], n, message=f"table '{name}' created with {n} row(s)"
@@ -2678,10 +2697,7 @@ class Engine:
     ) -> QueryResult:
         """INSERT INTO t [(cols)] SELECT ... — exceeds the reference, whose
         parser admits only VALUES (parser.go:2959-3095); strict mode keeps
-        the reference error. The SELECT runs as one distributed write (no
-        driver materialization); the inserted-row count is folded into the
-        write scan via an Observation node, same single-pass pattern as
-        UPDATE/DELETE."""
+        the reference error."""
         if self.strict_gate:
             raise RangerError(
                 UNSUPPORTED_STATEMENT,
@@ -2690,14 +2706,26 @@ class Engine:
         name = self._qualify(m.group(1))
         if not self._table_exists(name):
             raise RangerError(TABLE_NOT_FOUND, f"table '{name}' not found")
+        cols = [c.strip() for c in m.group(2).split(",")] if m.group(2) else None
         src = self.read_frame(m.group(3))
+        return self._write_select(name, cols, src, overwrite)
+
+    def _write_select(
+        self,
+        name: str,
+        cols: list[str] | None,
+        src: DataFrame,
+        overwrite: bool = False,
+    ) -> QueryResult:
+        """Write ``src``'s columns, by position, into ``cols`` of ``name``
+        (all of its columns when None; the others get NULL), appended or,
+        with ``overwrite``, replacing the contents. The write is one
+        distributed job (no driver materialization); the row count is
+        folded into its scan through an Observation node, the same
+        single-pass pattern as UPDATE/DELETE."""
         schema = self.spark.table(name).schema
         field_by_name = {f.name: f for f in schema.fields}
-        cols = (
-            [c.strip() for c in m.group(2).split(",")]
-            if m.group(2)
-            else [f.name for f in schema.fields]
-        )
+        cols = cols or [f.name for f in schema.fields]
         for c in cols:
             if c not in field_by_name:
                 raise RangerError(
@@ -2709,16 +2737,7 @@ class Engine:
                 f"SELECT produces {len(src.columns)} column(s) for "
                 f"{len(cols)} target column(s)",
             )
-        # positional mapping, cast to the target types: the source columns
-        # are renamed by position first, because a generated name (`36.0`
-        # for a literal) or a repeated one does not resolve by name
-        src = src.toDF(*(f"_c{i}" for i in range(len(cols))))
-        df = src.select(
-            *[
-                F.col(f"_c{i}").cast(field_by_name[tc].dataType).alias(tc)
-                for i, tc in enumerate(cols)
-            ]
-        )
+        df = _by_position(src, st.StructType([field_by_name[c] for c in cols]))
         for f in schema.fields:
             if f.name not in cols:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -3436,9 +3455,10 @@ class Engine:
         statement the reference's client emits for imports
         (client/client.go:166-171) and its server can never execute
         (grammar-less + blocklisted, duckdb/engine.go:61). Distributed:
-        the file relation feeds the versioned INSERT…SELECT append path,
-        so an import is a snapshot commit like any other write. CSV/JSON
-        read with the table's DECLARED schema — no inference drift."""
+        the file's columns, taken by the table's column names, go to the
+        INSERT … SELECT writer (``_write_select``), so an import is a
+        snapshot commit like any other write. CSV/JSON read with the
+        table's DECLARED schema — no inference drift."""
         name, path, fmt = self._parse_copy(sql, "FROM")
         if not self._table_exists(name):
             raise RangerError(TABLE_NOT_FOUND, f"table '{name}' not found")
@@ -3455,19 +3475,9 @@ class Engine:
             src = reader.schema(schema).json(path)
         else:
             src = read_parquet_file(self.spark, path)
-        view = f"__copy_src_{uuid_mod.uuid4().hex[:8]}"
-        with self._temp_views() as views:
-            src.createOrReplaceTempView(view)
-            views.append(view)
-            col_list = ", ".join(c[0] for c in cols)
-            msel = re.match(
-                r"INSERT\s+INTO\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*"
-                r"((?:SELECT|WITH)\b.+)$",
-                f"INSERT INTO {name} ({col_list}) "
-                f"SELECT {col_list} FROM {view}",
-                re.I | re.S,
-            )
-            res = self._insert_select(msel)
+        res = self._write_select(
+            name, None, src.select(*[_col(c) for c, _, _ in cols])
+        )
         return QueryResult(
             [], [], 0,
             message=f"copied into '{name}' from {path} ({fmt}): "
@@ -3550,11 +3560,11 @@ class Engine:
     # always correct via full recompute; when the body is a single-table
     # algebraic aggregate (SUM/COUNT/MIN/MAX ... GROUP BY) and the source
     # only fast-appended since the last build, REFRESH re-aggregates ONLY
-    # the appended files (read straight from the snapshot manifests'
-    # added_files) and merges — the O(delta) maintenance path that makes
-    # MVs viable over a 100 TB fact table. Builds of incremental-capable
-    # MVs pin their read to the recorded snapshot version, so a commit
-    # racing the build can never be half-included and later double-counted.
+    # the appended files (``FROM src CHANGES SINCE VERSION n``) and merges
+    # — the O(delta) maintenance path that makes MVs viable over a 100 TB
+    # fact table. Builds and full refreshes of incremental-capable MVs
+    # read ``FROM src VERSION AS OF n`` and record n, so a commit racing
+    # the build can never be half-included and later double-counted.
 
     _MV_AGG_RE = re.compile(
         r"^(SUM|COUNT|MIN|MAX)\s*\(\s*(\*|[^()]+)\s*\)\s+AS\s+([A-Za-z_]\w*)\s*$",
@@ -3630,34 +3640,21 @@ class Engine:
         shape = self._mv_shape(body)
         src = self._qualify(shape["src"]) if shape else None
         vt = self._versioned_for(src) if src else None
-        src_version = vt.current_version() if vt else None
+        src_version = None
         if shape and vt:
-            # pin the build to the recorded snapshot: a commit racing the
-            # build is fully excluded here and fully re-aggregated later
-            df = self._mv_eval_at(body, shape["src"], src, vt, src_version)
+            # pin the build to one snapshot: a commit racing the build is
+            # fully excluded here and fully re-aggregated later
+            df, read = self._mv_read(
+                body, shape["src"], src, f"VERSION AS OF {vt.current_version()}"
+            )
+            src_version = read.version
         else:
             shape = None  # no versioned source → no incremental path
             df = self.read_frame(body)
-
-        columns = [
-            (f.name, itypes.from_spark_type(f.dataType, f.name), f.nullable)
-            for f in df.schema.fields
-        ]
-        self._materialize_table(
-            name,
-            columns,
-            {"storage": "filesystem", "partition_by": [], "order_by": [],
-             "settings": {}},
-        )
-        target = itypes.to_spark_schema(columns)
-        out = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, target.fields)
-            ]
-        )
-        self._append_commit(name, out)
-        self._mv_drop_pins()
+        # a failed build drops the table: no mviews entry names it yet, so
+        # left behind it would make a second CREATE say it exists and DROP
+        # MATERIALIZED VIEW say it is not found
+        self._materialize_df_as_table(name, df)
         meta = {
             "body": body,
             "src": src,
@@ -3673,20 +3670,28 @@ class Engine:
             [], [], 0, message=f"materialized view '{name}' created ({kind})"
         )
 
-    def _mv_eval_at(self, body, src_written, src, vt, version) -> DataFrame:
-        """Evaluate the MV body against an exact snapshot's file list."""
-        schema = self.spark.table(src).schema
-        files = vt.files(version) if version else []
-        if files:
-            pinned = read_parquet_files(self.spark, files, schema)
-        else:
-            pinned = local_frame(self.spark, [], schema)
-        tmp = f"__mv_pin_{uuid_mod.uuid4().hex[:8]}"
-        pinned.createOrReplaceTempView(tmp)
-        # the view must outlive the lazy plan; the consuming write calls
-        # _mv_drop_pins() once the plan has materialized
-        self._mv_pins.append(tmp)
-        return self.read_frame(self._mv_rewrite_from(body, src_written, tmp))
+    def _mv_read(
+        self, body: str, src_written: str, src: str, at: str
+    ) -> tuple[DataFrame, _Read]:
+        """The MV body over ``<src> <at>`` (``VERSION AS OF n`` or
+        ``CHANGES SINCE VERSION n``) in place of its source table, named
+        qualified so the text resolves the same in any current database,
+        and what the binder read for it."""
+        reads: list[_Read] = []
+        df = self.read_frame(
+            self._mv_rewrite_from(body, src_written, f"{src} {at}"), reads
+        )
+        return df, reads[0]
+
+    @staticmethod
+    def _mv_appends_only(vt: VersionedTable, versions) -> bool:
+        """Whether each of ``versions`` is a fast-append still on disk."""
+        try:
+            return all(
+                vt.manifest(v).get("operation") == "append" for v in versions
+            )
+        except FileNotFoundError:
+            return False
 
     def _refresh_mview(self, sql: str) -> QueryResult:
         m = re.match(
@@ -3706,7 +3711,8 @@ class Engine:
             )
         src, aggs = meta.get("src"), meta.get("aggs")
         vt = self._versioned_for(src) if src else None
-        if aggs and vt is not None:
+        pinned = aggs and vt is not None
+        if pinned:
             cur = vt.current_version()
             old = meta.get("src_version") or 0
             if cur == old:
@@ -3714,108 +3720,63 @@ class Engine:
                     [], [], 0,
                     message=f"materialized view '{name}' already fresh",
                 )
-            deltas = []
-            for v in range(old + 1, cur + 1):
-                try:
-                    deltas.append(vt.manifest(v))
-                except FileNotFoundError:
-                    break  # expired snapshot → delta unreadable → full
-            if len(deltas) == cur - old and all(
-                d.get("operation") == "append" for d in deltas
-            ):
-                added = [f for d in deltas for f in d.get("added_files", [])]
-                n = self._mv_merge_delta(name, meta, added)
-                self._mv_set_version(name, cur)
-                return QueryResult(
-                    [], [], n,
-                    message=(
-                        f"materialized view '{name}' refreshed incrementally "
-                        f"({len(added)} delta file(s), versions "
-                        f"{old + 1}..{cur})"
-                    ),
+            if self._mv_appends_only(vt, range(old + 1, cur + 1)):
+                delta, read = self._mv_read(
+                    meta["body"], meta["src_written"], src,
+                    f"CHANGES SINCE VERSION {old}",
                 )
+                # a commit can land between the check and the read
+                if self._mv_appends_only(vt, read.versions):
+                    if read.files:
+                        self._mv_merge_delta(name, meta, delta)
+                    self._mv_set_version(name, read.version)
+                    return QueryResult(
+                        [], [], len(read.files),
+                        message=(
+                            f"materialized view '{name}' refreshed "
+                            f"incrementally ({len(read.files)} delta file(s), "
+                            f"versions {old + 1}..{read.version})"
+                        ),
+                    )
         # full recompute (non-aggregate body, or rewrites in the history)
-        cur = vt.current_version() if vt is not None else None
-        if aggs and vt is not None:
-            df = self._mv_eval_at(
-                meta["body"], meta["src_written"], src, vt, cur
+        if pinned:
+            df, read = self._mv_read(
+                meta["body"], meta["src_written"], src,
+                f"VERSION AS OF {vt.current_version()}",
             )
         else:
             df = self.read_frame(meta["body"])
-        target = self.spark.table(name).schema
-        out = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, target.fields)
-            ]
+        self._rewrite_table(
+            name, _by_position(df, self.spark.table(name).schema),
+            operation="refresh",
         )
-        self._rewrite_table(name, out, operation="refresh")
-        self._mv_drop_pins()
-        if cur is not None:
-            self._mv_set_version(name, cur)
+        if pinned:
+            self._mv_set_version(name, read.version)
         return QueryResult(
             [], [], 0, message=f"materialized view '{name}' refreshed (full)"
         )
 
-    def _mv_merge_delta(self, name: str, meta: dict, added: list[str]) -> int:
-        """Aggregate ONLY the delta files through the MV body, then merge
-        with the current MV state group-wise (SUM/COUNT fold by sum,
-        MIN/MAX by min/max — the algebraic-aggregate merge law)."""
-        if not added:
-            return 0
-        src_schema = self.spark.table(meta["src"]).schema
-        delta = read_parquet_files(self.spark, added, src_schema)
-        tmp = f"__mv_delta_{uuid_mod.uuid4().hex[:8]}"
-        delta.createOrReplaceTempView(tmp)
-        self._mv_pins.append(tmp)
-        delta_agg = self.read_frame(
-            self._mv_rewrite_from(meta["body"], meta["src_written"], tmp)
-        )
+    def _mv_merge_delta(self, name: str, meta: dict, delta: DataFrame) -> None:
+        """Merge the MV body's aggregate over the delta files into the
+        current MV state group-wise (SUM/COUNT fold by sum, MIN/MAX by
+        min/max — the algebraic-aggregate merge law)."""
         current = self.spark.table(name)
         target = current.schema
-        aligned = delta_agg.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(delta_agg.columns, target.fields)
-            ]
-        )
         aggs = {k.lower(): v for k, v in meta["aggs"].items()}
-        group_cols = [c for c in current.columns if c.lower() not in aggs]
-        folds = []
-        for c in current.columns:
-            fn = aggs.get(c.lower())
-            if fn is None:
-                continue
-            if fn in ("SUM", "COUNT"):
-                folds.append(F.sum(c).alias(c))
-            elif fn == "MIN":
-                folds.append(F.min(c).alias(c))
-            else:
-                folds.append(F.max(c).alias(c))
+        fold = {"SUM": F.sum, "COUNT": F.sum, "MIN": F.min, "MAX": F.max}
         merged = (
-            current.unionByName(aligned)
-            .groupBy(*group_cols)
-            .agg(*folds)
-            .select(*current.columns)
-        )
-        merged = merged.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in target.fields
-            ]
+            current.unionByName(_by_position(delta, target))
+            .groupBy(*[_col(c) for c in current.columns if c.lower() not in aggs])
+            .agg(*[
+                fold[aggs[c.lower()]](_col(c)).alias(c)
+                for c in current.columns
+                if c.lower() in aggs
+            ])
+            .select(
+                *[_col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+            )
         )
         self._rewrite_table(name, merged, operation="refresh_incremental")
-        self._mv_drop_pins()
-        return len(added)
-
-    def _mv_drop_pins(self) -> None:
-        """Drop the snapshot-pin temp views once their consuming write has
-        materialized (a long session must not leak one view per refresh)."""
-        while self._mv_pins:
-            try:
-                self.spark.catalog.dropTempView(self._mv_pins.pop())
-            except Exception:
-                pass
 
     def _mv_set_version(self, name: str, version: int) -> None:
         def upd(mf):
@@ -4336,6 +4297,18 @@ def _col(name: str):
     """The column named ``name``, taken as one name: a dot in it (the
     generated name of a ``36.0`` literal) is no field access."""
     return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _by_position(df: DataFrame, schema: st.StructType) -> DataFrame:
+    """``df``'s columns mapped by position onto ``schema``'s fields, each
+    renamed and cast to its field: a generated name (``36.0``, ``(sum(v)
+    * 1.5)``) or a repeated one would not resolve by name."""
+    return df.toDF(*(f"_c{i}" for i in range(len(df.columns)))).select(
+        *[
+            F.col(f"_c{i}").cast(f.dataType).alias(f.name)
+            for i, f in enumerate(schema.fields)
+        ]
+    )
 
 
 def _property_list(props: dict) -> str:

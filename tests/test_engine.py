@@ -1318,6 +1318,31 @@ def test_alter_rename_table(engine):
     engine.execute("DROP TABLE rnm_b;")
 
 
+def test_a_name_renamed_away_gets_its_own_directory(engine):
+    """A table renamed keeps its directory, which is the default of its
+    old name: a new table under that name writes elsewhere, so the two
+    snapshot histories stay apart and dropping one keeps the other."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS rnmdir;")
+    engine.execute("CREATE TABLE rnmdir.a (id int32, name string);")
+    engine.execute("INSERT INTO rnmdir.a (id, name) VALUES (1, 'x'), (2, 'y');")
+    engine.execute("ALTER TABLE rnmdir.a RENAME TO rnmdir.b;")
+    engine.execute("CREATE TABLE rnmdir.a (id int32);")
+    engine.execute("INSERT INTO rnmdir.a (id) VALUES (7);")
+    assert len(engine.execute("SHOW SNAPSHOTS FROM rnmdir.b;").rows) == 2
+    engine.execute(
+        "CREATE MATERIALIZED VIEW rnmdir.mv AS "
+        "SELECT name, count(*) AS n FROM rnmdir.b GROUP BY name;"
+    )
+    assert sorted(engine.execute("SELECT * FROM rnmdir.mv;").rows) == [
+        ("x", 1), ("y", 1),
+    ]
+    engine.execute("DROP TABLE rnmdir.a;")
+    assert engine.execute("SELECT * FROM rnmdir.b ORDER BY id;").rows == [
+        (1, "x"), (2, "y"),
+    ]
+    engine.spark.sql("DROP DATABASE rnmdir CASCADE")
+
+
 def test_bloom_filter_setting_writes_blooms(engine):
     import glob
     import os

@@ -627,6 +627,32 @@ def test_pgwire_describe_uses_the_connection_database(pg, engine):
     engine.spark.sql("DROP DATABASE ddx CASCADE")
 
 
+def test_pgwire_describe_of_a_time_travel_query(pg, engine):
+    """Describe binds a ``VERSION AS OF`` relation as Execute does: a
+    RowDescription, not NoData."""
+    engine.execute("CREATE DATABASE IF NOT EXISTS ddtt;")
+    engine.execute("CREATE TABLE ddtt.t (id int32, tag string);")  # v1
+    engine.execute("INSERT INTO ddtt.t (id, tag) VALUES (5, 'x');")  # v2
+    engine.execute("INSERT INTO ddtt.t (id, tag) VALUES (6, 'y');")  # v3
+    s = _connect(pg.port)
+    s.sendall(_parse_pkt("st", "SELECT id, tag FROM ddtt.t VERSION AS OF 2"))
+    s.sendall(_ext(b"D", b"Sst\x00"))
+    s.sendall(_bind_pkt("", "st", []))
+    s.sendall(_ext(b"E", b"\x00" + struct.pack("!i", 0)))
+    s.sendall(_ext(b"S", b""))
+    msgs = _read_messages(s)
+    tags = [t for t, _ in msgs]
+    assert b"T" in tags and b"n" not in tags, tags
+    assert b"tag\x00" in dict(msgs)[b"T"]
+    assert [body for t, body in msgs if t == b"D"] == [
+        struct.pack("!H", 2) + struct.pack("!i", 1) + b"5"
+        + struct.pack("!i", 1) + b"x"
+    ]
+    s.sendall(b"X")
+    s.close()
+    engine.spark.sql("DROP DATABASE ddtt CASCADE")
+
+
 def _record_server_sends(monkeypatch, port):
     """Every sendall the server makes on ``port``: (socket, bytes)."""
     sent = []

@@ -531,3 +531,27 @@ def test_s3a_direct_path_probe(spark, shim):
         for k in ("fs.s3a.endpoint", "fs.s3a.access.key",
                   "fs.s3a.secret.key", "fs.s3a.path.style.access"):
             hconf.unset(k)
+
+
+def test_s3_name_renamed_away_gets_its_own_prefix(s3_engine, shim):
+    """A new table under a name renamed away writes under its own remote
+    prefix, so dropping it keeps the renamed table's objects."""
+    e = s3_engine
+    e.execute("CREATE DATABASE IF NOT EXISTS s3rn;")
+    e.execute("CREATE TABLE s3rn.a (id int32) STORAGE s3;")
+    e.execute("INSERT INTO s3rn.a (id) VALUES (1);")
+    e.execute("ALTER TABLE s3rn.a RENAME TO s3rn.b;")
+    e.execute("CREATE TABLE s3rn.a (id int32) STORAGE s3;")
+    e.execute("INSERT INTO s3rn.a (id) VALUES (2);")
+    kept = [k for k in shim.keys("ranger-wh") if k.startswith("warehouse/s3rn.db/a/")]
+    assert any(k.endswith(".parquet") for k in kept)
+    e.execute("DROP TABLE s3rn.a;")
+    assert [
+        k for k in shim.keys("ranger-wh") if k.startswith("warehouse/s3rn.db/a/")
+    ] == kept
+    assert e.execute("SELECT id FROM s3rn.b;").rows == [(1,)]
+    e.execute("DROP TABLE s3rn.b;")
+    assert not [
+        k for k in shim.keys("ranger-wh") if k.startswith("warehouse/s3rn.db/")
+    ]
+    e.spark.sql("DROP DATABASE s3rn CASCADE")
